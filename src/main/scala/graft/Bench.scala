@@ -131,21 +131,19 @@ object Bench {
     * A corpus that already carries url_canon is used as-is by the engine —
     * the bucketed table's distribution then survives into the fetch join. */
   def crawlBenchWith(spark: SparkSession, pages: DataFrame, cpus: Int, batches: Int,
-      paced: Boolean = false, broadcastSched: Boolean = true,
-      addsDedup: String = "window"): (Long, Double, Map[String, Double]) = {
+      paced: Boolean = false, broadcastSched: Boolean = true)
+      : (Long, Double, Map[String, Double]) = {
     val preload = preloadFrontier(pages)
     val stateDir = java.nio.file.Files.createTempDirectory(s"graft_bench_$cpus").toString
     val eng = new CrawlEngine(spark, pages, stateDir, CrawlConfig(
       defaultHostBudget = 2000000, defaultDelayMs = 0L,
       maxDepth = 8, saltBuckets = 64, shufflePartitions = cpus * 2,
-      bloomMinSeen = 100000, cachePages = false,
-      broadcastScheduled = broadcastSched,
-      detailedMetrics = false, shardedRanking = true,
+      bloomMinSeen = 100000, broadcastScheduled = broadcastSched,
+      shardedRanking = true,
       realTimePacing = paced,
       // recrawl-everything regime (budget never binds) is known a priori
       // here — skip auto's one-batch narrow warmup
       rankMode = "direct",
-      addsDedup = addsDedup,
       corpusUnique = true)) // PagesGen urls are unique by construction
     eng.initializeWithFrontier(preload)
     val t0 = System.nanoTime()
@@ -512,8 +510,7 @@ object Bench {
         val eng = new CrawlEngine(spark, pages, stateDir, CrawlConfig(
           defaultHostBudget = 16, defaultDelayMs = 0L,
           maxDepth = 8, saltBuckets = 1, shufflePartitions = cpus * 2,
-          bloomMinSeen = 100000, broadcastScheduled = true,
-          detailedMetrics = false, corpusUnique = true,
+          bloomMinSeen = 100000, broadcastScheduled = true, corpusUnique = true,
           compactEvery = 4, headTable = head))
         eng.initializeWithFrontier(preload)
         val t0 = System.nanoTime()

@@ -897,7 +897,7 @@ object SparkEntry {
       val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
       val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, detailedMetrics = false)
+        shufflePartitions = 8)
       val eng = new CrawlEngine(s, corpus, st, cfg)
       eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
         s"https://h$u.example.test/u/$u/p/0", since, end)))
@@ -927,7 +927,7 @@ object SparkEntry {
       val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
       val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, detailedMetrics = false, compactEvery = 1)
+        shufflePartitions = 8, compactEvery = 1)
       val eng = new CrawlEngine(s, corpus, st, cfg)
       eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
         s"https://h$u.example.test/u/$u/p/0", since, end)))
@@ -955,7 +955,7 @@ object SparkEntry {
       val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
       val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, detailedMetrics = false, headTable = true)
+        shufflePartitions = 8, headTable = true)
       val eng = new CrawlEngine(s, corpus, st, cfg)
       eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
         s"https://h$u.example.test/u/$u/p/0", since, end)))
@@ -984,7 +984,7 @@ object SparkEntry {
       val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val eng = new CrawlEngine(s, corpus, st, CrawlConfig(
         defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, detailedMetrics = false))
+        shufflePartitions = 8))
       eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
         s"https://h$u.example.test/u/$u/p/0", since, end)))
       eng.run(2)
@@ -1228,7 +1228,7 @@ object SparkEntry {
         .take(12).map("%02x".format(_)).mkString)
     val corpus = crawlOracleCorpusCached(s, dir)
     val cfg0 = CrawlConfig(defaultHostBudget = budget, maxDepth = 64, shufflePartitions = 8,
-      detailedMetrics = false, headTable = headTable, robotsDisallow = robots,
+      headTable = headTable, robotsDisallow = robots,
       expansionCaps = caps, rankMode = rankMode,
       broadcastScheduled = broadcastScheduled)
     // robotsTxt: RAW per-host robots.txt folded in through the production

@@ -3,7 +3,9 @@ package graft.crawl
 /**
  * URL canonicalization — the key function under the seen-set
  * (`BASELINE.json.north_star`: "partitioned cuckoo-filter URL-seen set keyed
- * by canonicalized+xxhash64 URLs").
+ * by canonicalized+xxhash64 URLs"). What is implemented is an exact seen
+ * table behind a sharded bloom-filter prefilter ([[BloomSeen]]), both keyed
+ * by xxhash64 of the canonical form.
  *
  * The reference dedups on exact numeric post ids (/root/reference/weibo.py:1698-1699,
  * SQLite PK replace weibo.py:2536-2540); at web scale the id is the URL, so a

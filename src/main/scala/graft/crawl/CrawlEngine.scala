@@ -83,7 +83,7 @@ case class Seed(seed_id: String, root_url: String,
  *                           Spark translates the IN-set into an OR-chain
  *                           whose parquet row-group filter evaluation
  *                           recurses once per key — ≥2048 keys overflow a
- *                           default task stack (measured, KeyProbeSmoke;
+ *                           default task stack (measured, ROUND4_NOTES.md;
  *                           the r3 default of 4096 crashed the first real
  *                           politeness-bounded crawl that collected that
  *                           many link keys)
@@ -115,8 +115,6 @@ case class CrawlConfig(
     realTimePacing: Boolean = false,
     shufflePartitions: Int = 32,
     bloomMinSeen: Long = 4096,
-    cachePages: Boolean = false,
-    detailedMetrics: Boolean = true,
     shardedRanking: Boolean = false,
     broadcastScheduled: Boolean = false,
     compactEvery: Int = 8,
@@ -137,22 +135,12 @@ case class CrawlConfig(
       * sched ≈ frontier), or "auto" (direct once the previous batch
       * scheduled ≥ half the frontier). Identical results either way. */
     rankMode: String = "auto",
-    /** batch-local first-wins dedup of frontier adds: "window" (default —
-      * the row_number plan; Spark 4 plans it with a PARTIAL
-      * WindowGroupLimit before the exchange, i.e. the map-side top-1
-      * collapse is already there and codegen'd) or "agg" (a min_by
-      * aggregate over an ordering struct — REJECTED as the default after
-      * measurement: the struct buffer forces a non-codegen SortAggregate,
-      * ~2× slower e2e at bench scale with the same shuffle width; kept for
-      * the parity test and graft.tools.AddsDedupProbe, which documents the
-      * rejection). Identical winners by construction (same ordering key). */
-    addsDedup: String = "window",
     /** parquet codec for every state/log write. Default snappy: on this
       * VM's local disk the parsed-log write is encode-CPU-bound, and
-      * graft.tools.CodecProbe measured zstd 26% slower wall for 49% fewer
-      * bytes (549→282 MB per 1.5M parsed rows, medians of 3 interleaved
-      * rounds). On a real cluster writing to object storage / a network
-      * sink the bytes dominate — set "zstd" there. */
+      * zstd measured 26% slower wall for 49% fewer bytes (549→282 MB per
+      * 1.5M parsed rows, medians of 3 interleaved rounds; ROUND5_NOTES.md).
+      * On a real cluster writing to object storage / a network sink the
+      * bytes dominate — set "zstd" there. */
     logCodec: String = "snappy")
 
 /**
@@ -229,19 +217,12 @@ class CrawlEngine(
     * distribution survives into the fetch join and only the batch-sized
     * scheduled side shuffles (measured: the only fetch shape whose
     * per-batch cost is flat in |corpus| AND free of the serial driver
-    * broadcast build). cachePages simulates bucketing locally: repartition
-    * once by url_canon and persist — the cached relation keeps its
-    * HashPartitioning. */
+    * broadcast build). */
   private lazy val pagesByCanon: DataFrame = {
     val withCanon =
       if (pages.columns.contains("url_canon")) pages
       else pages.withColumn("url_canon", gf.canonicalize_url($"url"))
-    val df = withCanon.withColumnRenamed("url", "page_url")
-    if (cfg.cachePages)
-      df.repartition(cfg.shufflePartitions, $"url_canon")
-        .sortWithinPartitions($"url_canon")
-        .persist()
-    else df
+    withCanon.withColumnRenamed("url", "page_url")
   }
 
   // ------------------------------------------------------------------
@@ -1134,10 +1115,11 @@ class CrawlEngine(
     // every component is provably bounded) instead of three passes over the
     // full link rows. Mid path semi-filters processed down to
     // processed ∩ links (identical anti-join result, union ≤ 3×|links|);
-    // the keyed path's processed set is sched (≤ cap) + blocked + missing,
-    // so its hint is gated on the blocked count — a robots rule change can
-    // make blocked frontier-sized, and then AQE must pick the strategy from
-    // runtime stats instead of a forced driver-built broadcast.
+    // the keyed path's processed set is parsed (≤ cap) + blocked + missing,
+    // so its hint is gated on the blocked and missing counts — a robots rule
+    // change can make blocked frontier-sized, an open corpus can leave most
+    // of a broadcastScheduled batch missing, and then AQE must pick the
+    // strategy from runtime stats instead of a forced driver-built broadcast.
     val processedExcl =
       if (midPath) processedHashes.join(linkKeysBcast, Seq("url_hash"), "left_semi")
       else processedHashes
@@ -1145,7 +1127,8 @@ class CrawlEngine(
       .unionByName(seenHit).unionByName(frontHit)
     val excludeSide =
       if (midPath || (linkKeyArr.isDefined &&
-          robotsBlockedCount <= cfg.probePushdownMaxKeys))
+          robotsBlockedCount <= cfg.probePushdownMaxKeys &&
+          missingCount <= cfg.probePushdownMaxKeys))
         broadcast(excludeKeys)
       else excludeKeys
     val newFrontAdds = linksRaw
@@ -1160,27 +1143,13 @@ class CrawlEngine(
       // Spark 4 plans `filter(rn = 1)` as WindowGroupLimit(Partial) BEFORE
       // the exchange, so duplicate discoveries of the same url collapse
       // map-side and the shuffle carries ~one row per distinct new url.
-      // The min_by-aggregate alternative ("agg") shuffles the same width
-      // but loses whole-stage codegen to a SortAggregate (struct agg
-      // buffer) — measured ~2× slower e2e (graft.tools.AddsDedupProbe);
-      // see CrawlConfig.addsDedup.
-      .transform { df =>
-        if (cfg.addsDedup == "window")
-          df.withColumn("_rn", row_number().over(
-              Window.partitionBy($"url_hash")
-                .orderBy($"priority_ts".desc, $"seed_id".asc, $"url_canon".asc)))
-            .filter($"_rn" === 1).drop("_rn")
-        else df
-          .groupBy($"url_hash")
-          .agg(min_by(
-            struct($"url", $"url_canon", $"host", $"depth", $"priority_ts",
-              $"seed_id", $"since_ts", $"end_ts", $"discovered_batch"),
-            struct((-unix_micros($"priority_ts")).as("o1"), $"seed_id".as("o2"),
-              $"url_canon".as("o3"), $"url".as("o4"))).as("_w"))
-          .select($"_w.url", $"_w.url_canon", $"url_hash", $"_w.host", $"_w.depth",
-            $"_w.priority_ts", $"_w.seed_id", $"_w.since_ts", $"_w.end_ts",
-            $"_w.discovered_batch")
-      }
+      // A min_by-aggregate alternative shuffles the same width but loses
+      // whole-stage codegen to a SortAggregate (struct agg buffer) —
+      // measured ~2× slower e2e and rejected (ROUND5_NOTES.md).
+      .withColumn("_rn", row_number().over(
+          Window.partitionBy($"url_hash")
+            .orderBy($"priority_ts".desc, $"seed_id".asc, $"url_canon".asc)))
+      .filter($"_rn" === 1).drop("_rn")
       // robots gating at discovery: a disallowed url never enters the
       // frontier (candidate-time gating above remains as defense for
       // pre-existing frontier state / rule changes)
@@ -1281,16 +1250,15 @@ class CrawlEngine(
       setHead(buildHead(src), batchId)
     }
 
-    val candidateCount = if (cfg.detailedMetrics) candidates.count() else -1L
     val metrics = Map(
-      "batch_id" -> batchId, "candidates" -> candidateCount,
-      "scheduled" -> schedCount, "fetched" -> inRange, "not_found" -> notFound,
+      "batch_id" -> batchId, "scheduled" -> schedCount, "fetched" -> inRange,
+      "not_found" -> notFound,
       "robots_blocked" -> robotsBlockedCount,
       "invariant_violations" -> invariantViolations,
       "frontier_size" -> newFrontierSize, "seen_size" -> newSeenSize,
       "partitions_used" -> nPartitions)
     store.appendLogDirect("ledger", batchId, CrawlEngine.LedgerSchema,
-      Seq(Seq(batchId, "SUCCESS", candidateCount, schedCount, inRange, notFound,
+      Seq(Seq(batchId, "SUCCESS", schedCount, inRange, notFound,
         robotsBlockedCount, invariantViolations, newFrontierSize, newSeenSize, nPartitions)))
     store.commit(batchId)
     seenSizeCache = newSeenSize
@@ -1316,11 +1284,11 @@ class CrawlEngine(
   /** One ledger row, written DRIVER-DIRECT (no Spark job — the ledger is a
     * 1-row-per-batch log and a per-batch write job was pure fixed cost). */
   private def writeLedgerRow(batchId: Long, state: String, seenSizeNow: Long,
-      candidates: Long = -1, scheduled: Long = -1, fetchedN: Long = -1,
-      notFound: Long = -1, robotsBlocked: Long = -1, violations: Long = -1,
+      scheduled: Long = -1, fetchedN: Long = -1, notFound: Long = -1,
+      robotsBlocked: Long = -1, violations: Long = -1,
       frontierSize: Long = -1, nPartitions: Long = -1): Unit =
     store.appendLogDirect("ledger", batchId, CrawlEngine.LedgerSchema,
-      Seq(Seq(batchId, state, candidates, scheduled, fetchedN, notFound,
+      Seq(Seq(batchId, state, scheduled, fetchedN, notFound,
         robotsBlocked, violations, frontierSize, seenSizeNow, nPartitions)))
 
   /** latest ROTATED ledger entry — the rotation watermark bounding which
@@ -1590,7 +1558,7 @@ object CrawlEngine {
     StructType(
       StructField("batch_id", LongType, nullable = false) ::
       StructField("state", StringType, nullable = true) ::
-      List("candidates", "scheduled", "fetched", "not_found", "robots_blocked",
+      List("scheduled", "fetched", "not_found", "robots_blocked",
         "invariant_violations", "frontier_size", "seen_size", "partitions_used")
         .map(StructField(_, LongType, nullable = false)))
   }

@@ -360,8 +360,10 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     }
     val msgType = b.named("spark_schema")
     val file = new org.apache.hadoop.fs.Path(dir.resolve("part-00000-direct.parquet").toString)
-    val codecName = org.apache.parquet.hadoop.metadata.CompressionCodecName
-      .valueOf(codec.toUpperCase)
+    // Spark's own name table, so every codec its parquet writer accepts
+    // ("none", "uncompressed", "lz4_raw", ...) maps the same way here
+    val codecName = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetCompressionCodec.fromString(codec).getCompressionCodec
     val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
     val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(file)
       .withType(msgType).withCompressionCodec(codecName).build()

@@ -249,45 +249,24 @@ class CrawlSpec extends AnyFunSuite {
     assert(en.frontier().count() == ed.frontier().count())
   }
 
-  test("addsDedup agg == window: identical frontier rows and fetched sets (r5)") {
-    // The min_by aggregate and the row_number window must pick the same
-    // first-wins winner per url_hash (same ordering key: priority_ts DESC,
-    // seed_id, url_canon). Compare the surviving frontier ROWS, not counts —
-    // the dedup's output is exactly what lands in the frontier delta.
-    def runWith(mode: String): CrawlEngine = {
-      val e = new CrawlEngine(spark, pagesDF, tmp(),
-        CrawlConfig(defaultHostBudget = 2, shufflePartitions = 5,
-          saltBuckets = 4, shardedRanking = true, addsDedup = mode))
-      e.initialize(seeds(5)); e.run(3); e
-    }
-    val (ea, ew) = (runWith("agg"), runWith("window"))
-    def frontierKey(e: CrawlEngine) = e.frontier()
-      .select("url_hash", "url", "url_canon", "host", "depth", "priority_ts",
-        "seed_id", "discovered_batch")
-      .collect().map(_.toSeq.map(String.valueOf(_)).mkString("|")).sorted.toSeq
-    assert(frontierKey(ea) == frontierKey(ew), "adds dedup plans disagree on the frontier")
-    def fetchedKey(e: CrawlEngine) = e.fetched().get
-      .select("host", "batch_id", "fetch_ordinal", "url_hash")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .sorted.toSeq
-    assert(fetchedKey(ea) == fetchedKey(ew), "adds dedup plans disagree on fetches")
-  }
-
   test("logCodec=zstd writes zstd state files and an identical crawl (r5)") {
-    // the codec is a pure storage knob (CodecProbe measured the tradeoff);
-    // it must change the file encoding and NOTHING else
+    // the codec is a pure storage knob (measured tradeoff in
+    // ROUND5_NOTES.md); it must change the file encoding and NOTHING else.
+    // "none" is a name Spark's parquet writer accepts, so the driver-direct
+    // ledger write must accept it too.
     def runWith(codec: String): (CrawlEngine, String) = {
       val dir = tmp()
       val e = new CrawlEngine(spark, pagesDF, dir,
         CrawlConfig(defaultHostBudget = 2, shufflePartitions = 4, logCodec = codec))
       e.initialize(seeds(5)); e.run(2); (e, dir)
     }
-    val ((es, _), (ez, zdir)) = (runWith("snappy"), runWith("zstd"))
+    val ((es, _), (ez, zdir), (en, _)) = (runWith("snappy"), runWith("zstd"), runWith("none"))
     def key(e: CrawlEngine) = e.fetched().get
       .select("host", "batch_id", "fetch_ordinal", "url_hash")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3)))
       .sorted.toSeq
     assert(key(es) == key(ez), "codec changed crawl results")
+    assert(key(es) == key(en), "codec changed crawl results")
     val parsedFiles = Files.walk(java.nio.file.Paths.get(zdir, "parsed"))
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .iterator().asScala.toSeq
@@ -499,7 +478,7 @@ class CrawlSpec extends AnyFunSuite {
     val led = eng.ledger().get.orderBy("batch_id").collect()
     assert(led.length == 2)
     val cols = eng.ledger().get.columns.toSet
-    assert(Set("batch_id", "state", "candidates", "scheduled", "fetched",
+    assert(Set("batch_id", "state", "scheduled", "fetched",
       "invariant_violations", "frontier_size", "seen_size", "partitions_used").subsetOf(cols))
     assert(led.forall(_.getAs[String]("state") == "SUCCESS"))
     assert(led.forall(_.getAs[Long]("invariant_violations") == 0L))
@@ -1284,11 +1263,15 @@ class WindowAndGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val N = 256L
     val pages = PagesGen.pages(spark, N, 4).toDF
     val open = pages.filter(!col("url").endsWith("/p/2")) // break the chains
-    val eng = new CrawlEngine(spark, open, tmp(),
-      CrawlConfig(defaultHostBudget = 4, maxDepth = 32, shufflePartitions = 4,
-        broadcastScheduled = true))
-    eng.initialize(PagesGen.seedRows(N, 3).map(Seed.tupled))
-    val ms = eng.run(6)
+    val cfg = CrawlConfig(defaultHostBudget = 4, maxDepth = 32, shufflePartitions = 4,
+      broadcastScheduled = true)
+    val roots = PagesGen.seedRows(N, 3).map(Seed.tupled)
+    def crawl(seeds: Seq[Seed], c: CrawlConfig): (CrawlEngine, Seq[Map[String, Long]]) = {
+      val e = new CrawlEngine(spark, open, tmp(), c)
+      e.initialize(seeds)
+      (e, e.run(6))
+    }
+    val (eng, ms) = crawl(roots, cfg)
     assert(ms.map(_("not_found")).sum > 0, "missing urls must be detected")
     val errs = eng.store.readLog("errors", Long.MaxValue)
     assert(errs.isDefined && errs.get.filter($"error" === "NOT_FOUND").count() > 0,
@@ -1300,6 +1283,30 @@ class WindowAndGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     // arithmetic size maintenance stays exact with the recovery in play
     assert(ms.last("seen_size") == eng.seen().count())
     assert(ms.last("frontier_size") == eng.frontier().count())
+
+    // keyed expansion with more missing urls than probePushdownMaxKeys:
+    // batch 0 parses few pages with few links (keyed path), but a dozen
+    // seeds point outside the corpus, so the processed set on the exclusion
+    // side exceeds the cap. Same crawl as under the default cap.
+    val cap = 8
+    val absent = (0 until 12).map(k => Seed(s"gone$k",
+      s"https://g$k.example.test/u/$k/p/0", roots.head.since_ts, roots.head.end_ts))
+    val (ref, _) = crawl(roots ++ absent, cfg)
+    val (small, sms) = crawl(roots ++ absent, cfg.copy(probePushdownMaxKeys = cap))
+    assert(sms.head("not_found") > cap, "batch 0 must miss more urls than the cap")
+    val parsed0 = small.store.readLog("parsed", 0L).get
+      .agg(count(lit(1)), sum(size($"outlinks"))).head()
+    assert(parsed0.getLong(0) <= cap && parsed0.getLong(1) <= cap,
+      "batch 0 must take the keyed expansion path")
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+    val fetchedCols = Seq("host", "batch_id", "fetch_ordinal", "url_hash")
+    assert(rows(small.fetched().get, fetchedCols: _*) == rows(ref.fetched().get, fetchedCols: _*))
+    val nfCols = Seq("url_canon", "host", "seed_id", "depth", "batch_id")
+    assert(rows(small.notFound().get, nfCols: _*) == rows(ref.notFound().get, nfCols: _*))
+    val frontCols = Seq("url_hash", "url", "url_canon", "host", "depth", "priority_ts",
+      "seed_id", "discovered_batch")
+    assert(rows(small.frontier(), frontCols: _*) == rows(ref.frontier(), frontCols: _*))
   }
 
   test("duplicate url_canon rows in the corpus: emitted once, arithmetic exact (ADVICE r2)") {

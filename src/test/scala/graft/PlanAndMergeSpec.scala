@@ -64,8 +64,8 @@ class PlanAndMergeSpec extends AnyFunSuite {
     // The frontier-adds first-wins dedup keeps the row_number plan BECAUSE
     // Spark plans filter(rn=1) with a map-side WindowGroupLimit(Partial) —
     // the collapse a min_by aggregate would buy, without losing codegen
-    // (the measured ~2× rejection, graft.tools.AddsDedupProbe). Lock the
-    // optimizer behavior the default relies on: the same dedup shape over a
+    // (the measured ~2× rejection, ROUND5_NOTES.md). Lock the optimizer
+    // behavior the adds dedup relies on: the same dedup shape over a
     // distributed source must show Partial-mode WindowGroupLimit upstream
     // of the shuffle.
     import org.apache.spark.sql.expressions.Window
