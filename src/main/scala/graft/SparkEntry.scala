@@ -640,19 +640,16 @@ object SparkEntry {
     // batches are exactly BFS layers (the budget-bound path stays covered by
     // CrawlSpec/WindowAndGuardSpec goldens).
     "q50_crawl_batch" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir)
+      val eng = crawlOracleEngine(s, dir, "q50_crawl_batch")
       eng.run(3)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // q51 runs with the head table ON: under non-binding budgets the head
     // equals the frontier, so the DuckDB oracle stays exact while the
     // head-scheduling path itself passes through the external hash gate
     "q51_crawl_frontier" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, headTable = true)
+      val eng = crawlOracleEngine(s, dir, "q51_crawl_frontier", headTable = true)
       eng.run(2)
       eng.frontier().select(col("url_canon"), col("host"),
         col("depth").cast("long").as("depth"), col("seed_id"))
@@ -664,13 +661,10 @@ object SparkEntry {
     // pages out of the frontier, their outlinks never expand, and the DuckDB
     // CTE re-derives the crawl over the edge-filtered graph
     "q69_crawl_robots" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir,
+      val eng = crawlOracleEngine(s, dir, "q69_crawl_robots",
         robots = Seq(("h3.example.test", "/u/3/")))
       eng.run(3)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // budget-BOUND crawl, HARD oracle (the politeness path with batches ≠
@@ -681,19 +675,9 @@ object SparkEntry {
     // deterministic without the url_hash tiebreak and DuckDB re-derives the
     // full batch-by-batch schedule with chained per-batch CTEs.
     "q70_crawl_budget" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, budget = 2, seedSpecs = Some(Seq(
-        Seed("seed0", root(0), since, end(3600)),
-        Seed("seed10", root(10), since, end(1800)),
-        Seed("seed20", root(20), since, end(900)),
-        Seed("seed2", root(2), since, end(3600)))))
+      val eng = crawlOracleEngine(s, dir, "q70_crawl_budget", budget = 2, seeds = budgetSeeds)
       eng.run(4)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // the same budget-bound crawl THROUGH THE HEAD TABLE (K = budget ×
@@ -701,43 +685,24 @@ object SparkEntry {
     // genuinely binding budgets, gated by the identical batch-by-batch
     // oracle — head == full is a theorem (K bound) verified externally here
     "q71_crawl_budget_head" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, headTable = true, budget = 2,
-        seedSpecs = Some(Seq(
-          Seed("seed0", root(0), since, end(3600)),
-          Seed("seed10", root(10), since, end(1800)),
-          Seed("seed20", root(20), since, end(900)),
-          Seed("seed2", root(2), since, end(3600)))))
+      val eng = crawlOracleEngine(s, dir, "q71_crawl_budget_head", headTable = true, budget = 2,
+        seeds = budgetSeeds)
       eng.run(4)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
-    // the q70 budget crawl under the DIRECT rank plan (one window over full
-    // frontier rows — the recrawl-everything plan the bench runs hot;
-    // schedule-identical to the narrow plan by construction: same window
-    // spec, same tiebreak). Until now only a CrawlSpec parity test asserted
-    // that; here the batch-by-batch schedule itself passes the external
-    // hash gate under the alternate physical plan.
+    // q70's crawl again, in its own state dir. The engine picks the rank
+    // plan per batch: narrow for a fresh engine's first batch, direct once
+    // a batch schedules ≥ half the frontier — on this fixture batches 0-1
+    // run narrow and 2-3 direct, under the binding budget. This gates that
+    // a second engine over the same fixture in the same session reproduces
+    // q70's schedule batch for batch, both plans included (CrawlSpec's
+    // plan-parity test asserts the plans agree and which one ran).
     "q84_crawl_budget_direct" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, budget = 2, rankMode = "direct",
-        seedSpecs = Some(Seq(
-          Seed("seed0", root(0), since, end(3600)),
-          Seed("seed10", root(10), since, end(1800)),
-          Seed("seed20", root(20), since, end(900)),
-          Seed("seed2", root(2), since, end(3600)))))
+      val eng = crawlOracleEngine(s, dir, "q84_crawl_budget_direct", budget = 2,
+        seeds = budgetSeeds)
       eng.run(4)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // the q70 budget crawl with broadcastScheduled = true (the scheduled
@@ -745,20 +710,10 @@ object SparkEntry {
     // — the small-batch fetch plan). Another pure physical-plan variant
     // behind the identical external schedule oracle.
     "q85_crawl_budget_bcast" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, budget = 2, broadcastScheduled = true,
-        seedSpecs = Some(Seq(
-          Seed("seed0", root(0), since, end(3600)),
-          Seed("seed10", root(10), since, end(1800)),
-          Seed("seed20", root(20), since, end(900)),
-          Seed("seed2", root(2), since, end(3600)))))
+      val eng = crawlOracleEngine(s, dir, "q85_crawl_budget_bcast", budget = 2, broadcastScheduled = true,
+        seeds = budgetSeeds)
       eng.run(4)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // per-link-CLASS expansion caps, HARD oracle (VERDICT r4 item 5): the
@@ -769,12 +724,9 @@ object SparkEntry {
     // BFS over the paging-only edge set. n_outlinks stays the PAGE's link
     // count (content is uncapped; only expansion is).
     "q72_crawl_linktype_cap" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, caps = Map("cross" -> 0))
+      val eng = crawlOracleEngine(s, dir, "q72_crawl_linktype_cap", caps = Map("cross" -> 0))
       eng.run(3)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // the budget-bound crawl PLUS robots-derived pacing, HARD oracle: two
@@ -786,23 +738,12 @@ object SparkEntry {
     // perHostDelayMs → scheduling-delay path behind the external hash gate
     // (r5: the path was ScalaTest-gated only).
     "q77_crawl_paced" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, budget = 2, seedSpecs = Some(Seq(
-          Seed("seed0", root(0), since, end(3600)),
-          Seed("seed10", root(10), since, end(1800)),
-          Seed("seed20", root(20), since, end(900)),
-          Seed("seed2", root(2), since, end(3600)))),
+      val eng = crawlOracleEngine(s, dir, "q77_crawl_paced", budget = 2, seeds = budgetSeeds,
         robotsTxt = Seq(
           "h0.example.test" -> "User-agent: *\nCrawl-delay: 1.5",
           "h2.example.test" -> "User-agent: *\nCrawl-delay: 0.25"))
       eng.run(4)
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"),
-        col("sched_delay_ms").cast("long").as("sched_delay_ms"))
+      fetchedRows(eng, col("sched_delay_ms").cast("long").as("sched_delay_ms"))
     }),
 
     // the engine's per-batch LEDGER (A8) behind the external hash gate: the
@@ -814,14 +755,7 @@ object SparkEntry {
     // are counted, not silently re-scheduled), each re-derived in DuckDB as
     // honest COUNT(*)s over q70's batch-by-batch CTEs.
     "q78_crawl_ledger" -> ((s, dir) => {
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      def end(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
-      def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
-      val eng = crawlOracleEngine(s, dir, budget = 2, seedSpecs = Some(Seq(
-        Seed("seed0", root(0), since, end(3600)),
-        Seed("seed10", root(10), since, end(1800)),
-        Seed("seed20", root(20), since, end(900)),
-        Seed("seed2", root(2), since, end(3600)))))
+      val eng = crawlOracleEngine(s, dir, "q78_crawl_ledger", budget = 2, seeds = budgetSeeds)
       eng.run(4)
       eng.ledger().get.filter(col("state") === "SUCCESS")
         .select(col("batch_id"), col("scheduled"), col("fetched"),
@@ -844,11 +778,9 @@ object SparkEntry {
     // the rotation set algebra, and the per-row window emission with
     // chained per-batch CTEs.
     "q79_crawl_rotate" -> ((s, dir) => {
-      val since1 = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      val end1 = new java.sql.Timestamp((OracleBaseSec - 5400L) * 1000)
-      val end2 = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
-      val eng = crawlOracleEngine(s, dir, seedSpecs = Some((0L until 3L).map(u =>
-        Seed(s"seed$u", s"https://h$u.example.test/u/$u/p/0", since1, end1))))
+      val end1 = oracleEnd(-5400L)
+      val end2 = oracleEnd(3600L)
+      val eng = crawlOracleEngine(s, dir, "q79_crawl_rotate", seeds = oracleSeeds(end1))
       eng.run(3)
       // the rotation goes through the INTERVAL SCHEDULER (service.py:
       // 1209-1306): a tick below the interval must not fire (any state
@@ -858,10 +790,7 @@ object SparkEntry {
         intervalMs = 3600000L, maxBatches = 3), "tick below interval fired")
       require(eng.tickSchedule(end2, intervalMs = 3600000L, maxBatches = 3),
         "tick past interval did not fire")
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // S17 materialized cache behind the external gate: refreshSummary's
@@ -870,7 +799,7 @@ object SparkEntry {
     // batches — written to the state store, read back, and re-derived in
     // DuckDB as a GROUP BY over the same recursive crawl CTE as q50.
     "q80_crawl_summary" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir)
+      val eng = crawlOracleEngine(s, dir, "q80_crawl_summary")
       eng.run(3)
       eng.refreshSummary().get.select(
         col("host"), col("seed_id"), col("n_fetched"),
@@ -894,22 +823,16 @@ object SparkEntry {
     "q81_crawl_purge" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
       val st = scratchFresh("crawl_oracle_purge")
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
         shufflePartitions = 8)
       val eng = new CrawlEngine(s, corpus, st, cfg)
-      eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
-        s"https://h$u.example.test/u/$u/p/0", since, end)))
+      eng.initialize(oracleSeeds())
       eng.run(2)
       val eng2 = new CrawlEngine(s, corpus, st,
         cfg.copy(robotsDisallow = Seq(("h3.example.test", "/u/3/"))))
       require(eng2.purgeRobotsBlocked() > 0, "purge must remove blocked frontier rows")
       eng2.run(2)
-      eng2.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng2)
     }),
 
     // Compaction + state GC + cold resume behind the external gate: the
@@ -924,21 +847,15 @@ object SparkEntry {
     "q82_crawl_resume_gc" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
       val st = scratchFresh("crawl_oracle_resume_gc")
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
         shufflePartitions = 8, compactEvery = 1)
       val eng = new CrawlEngine(s, corpus, st, cfg)
-      eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
-        s"https://h$u.example.test/u/$u/p/0", since, end)))
+      eng.initialize(oracleSeeds())
       eng.run(2)
       eng.expireOldState()
       val eng2 = new CrawlEngine(s, corpus, st, cfg)
       eng2.run(1)
-      eng2.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng2)
     }),
 
     // The q81 purge THROUGH THE HEAD-TABLE path: the purge leaves the
@@ -952,22 +869,16 @@ object SparkEntry {
     "q83_crawl_purge_head" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
       val st = scratchFresh("crawl_oracle_purge_head")
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
         shufflePartitions = 8, headTable = true)
       val eng = new CrawlEngine(s, corpus, st, cfg)
-      eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
-        s"https://h$u.example.test/u/$u/p/0", since, end)))
+      eng.initialize(oracleSeeds())
       eng.run(2)
       val eng2 = new CrawlEngine(s, corpus, st,
         cfg.copy(robotsDisallow = Seq(("h3.example.test", "/u/3/"))))
       require(eng2.purgeRobotsBlocked() > 0, "purge must remove blocked frontier rows")
       eng2.run(2)
-      eng2.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng2)
     }),
 
     // The STOP command (F12, the reference's tasks.command='STOP' gate,
@@ -980,20 +891,14 @@ object SparkEntry {
     "q86_crawl_stop" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
       val st = scratchFresh("crawl_oracle_stop")
-      val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-      val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
       val eng = new CrawlEngine(s, corpus, st, CrawlConfig(
         defaultHostBudget = 1000000, maxDepth = 64,
         shufflePartitions = 8))
-      eng.initialize((0L until 3L).map(u => Seed(s"seed$u",
-        s"https://h$u.example.test/u/$u/p/0", since, end)))
+      eng.initialize(oracleSeeds())
       eng.run(2)
       eng.requestStop()
       require(eng.run(5).isEmpty, "STOP must halt the run")
-      eng.fetched().get.select(col("url_canon"), col("host"), col("seed_id"),
-        col("depth").cast("long").as("depth"), col("batch_id"),
-        col("fetch_ordinal").cast("long").as("fetch_ordinal"),
-        col("n_outlinks").cast("long").as("n_outlinks"))
+      fetchedRows(eng)
     }),
 
     // NOT_FOUND dead-letter behind the external gate: a 4th seed points at
@@ -1007,13 +912,13 @@ object SparkEntry {
     // them into the errors log, and the unified notFound() view must agree
     // with the same one-row oracle under both physical plans.
     "q88_crawl_notfound" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, seedSpecs = Some(notFoundSeeds))
+      val eng = crawlOracleEngine(s, dir, "q88_crawl_notfound", seeds = notFoundSeeds)
       eng.run(3)
       eng.notFound().get.select(col("url_canon"), col("host"), col("seed_id"),
         col("depth").cast("long").as("depth"), col("batch_id"))
     }),
     "q89_crawl_notfound_bcast" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, seedSpecs = Some(notFoundSeeds),
+      val eng = crawlOracleEngine(s, dir, "q89_crawl_notfound_bcast", seeds = notFoundSeeds,
         broadcastScheduled = true)
       eng.run(3)
       eng.notFound().get.select(col("url_canon"), col("host"), col("seed_id"),
@@ -1029,7 +934,7 @@ object SparkEntry {
     // BIGINT (multiplication overflows instead of wrapping) — but the
     // parser's walk/merge/join semantics themselves now pass a hash gate.
     "q87_crawl_text" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir)
+      val eng = crawlOracleEngine(s, dir, "q87_crawl_text")
       eng.run(3)
       eng.fetched().get.select(col("url_canon"), col("text"))
     }),
@@ -1193,53 +1098,63 @@ object SparkEntry {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Oracle crawl window [since, end): the start and the end at `offSec`
+    * past the base. */
+  private val OracleSince = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
+  private def oracleEnd(offSec: Long) = new java.sql.Timestamp((OracleBaseSec + offSec) * 1000)
+
+  /** The q50 seeds: users 0-2, each rooted at its own host. */
+  private def oracleSeeds(end: java.sql.Timestamp = oracleEnd(3600L)): Seq[Seed] =
+    (0L until 3L).map(u => Seed(s"seed$u", s"https://h$u.example.test/u/$u/p/0", OracleSince, end))
+
   /** q88/q89 seed list: the three q50 seeds plus one pointing at user 50 —
     * outside the corpus's `users < OracleU (= 40)` cut at EVERY sf, so the
     * missing page is deterministic and the dead-letter oracle is a
     * constant row. */
-  private def notFoundSeeds: Seq[Seed] = {
-    val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-    val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
-    (0L until 3L).map(u => Seed(s"seed$u",
-      s"https://h$u.example.test/u/$u/p/0", since, end)) :+
-      Seed("seed50", "https://h0.example.test/u/50/p/0", since, end)
+  private def notFoundSeeds: Seq[Seed] =
+    oracleSeeds() :+ Seed("seed50", "https://h0.example.test/u/50/p/0", OracleSince, oracleEnd(3600L))
+
+  /** The q70 seed list: users 0, 10 and 20 share the mega host h0 with
+    * distinct window ends (the seed priorities), user 2 sits on h2. */
+  private def budgetSeeds: Seq[Seed] = {
+    def root(u: Long) = s"https://h${u % 10}.example.test/u/$u/p/0"
+    Seq(Seed("seed0", root(0), OracleSince, oracleEnd(3600)),
+      Seed("seed10", root(10), OracleSince, oracleEnd(1800)),
+      Seed("seed20", root(20), OracleSince, oracleEnd(900)),
+      Seed("seed2", root(2), OracleSince, oracleEnd(3600)))
   }
 
-  private def crawlOracleEngine(s: SparkSession, dir: String,
+  /** The crawl oracles' fetched projection; queries that need more columns
+    * pass them as `extra`. */
+  private def fetchedRows(eng: CrawlEngine, extra: org.apache.spark.sql.Column*): DataFrame =
+    eng.fetched().get.select(Seq(col("url_canon"), col("host"), col("seed_id"),
+      col("depth").cast("long").as("depth"), col("batch_id"),
+      col("fetch_ordinal").cast("long").as("fetch_ordinal"),
+      col("n_outlinks").cast("long").as("n_outlinks")) ++ extra: _*)
+
+  /** A fresh engine over the oracle corpus in the scratch state dir of
+    * query `name` (cleared per invocation, so repeated bench runs reuse it
+    * instead of leaking temp dirs; one dir per query, so no query can clear
+    * another's state while its lazily-evaluated DataFrame still reads it). */
+  private def crawlOracleEngine(s: SparkSession, dir: String, name: String,
       headTable: Boolean = false,
       robots: Seq[(String, String)] = Nil,
       budget: Int = 1000000,
-      seedSpecs: Option[Seq[Seed]] = None,
+      seeds: Seq[Seed] = oracleSeeds(),
       caps: Map[String, Int] = Map.empty,
       robotsTxt: Seq[(String, String)] = Nil,
-      rankMode: String = "auto",
       broadcastScheduled: Boolean = false): CrawlEngine = {
-    // one scratch state dir per distinct oracle configuration, CLEARED per
-    // invocation (repeated bench runs reuse it instead of leaking temp dirs).
-    // Keyed COLLISION-FREE (ADVICE r5): a 32-bit hashCode collision between
-    // two configs would let the later query clear the earlier query's state
-    // dir while its lazily-evaluated DataFrame may still read it — sha-256
-    // of the full rendered tuple cannot collide in practice.
-    val st = scratchFresh("crawl_oracle_" +
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest((headTable, robots, budget, seedSpecs, caps, robotsTxt,
-          rankMode, broadcastScheduled).toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(12).map("%02x".format(_)).mkString)
+    val st = scratchFresh("crawl_oracle_" + name)
     val corpus = crawlOracleCorpusCached(s, dir)
     val cfg0 = CrawlConfig(defaultHostBudget = budget, maxDepth = 64, shufflePartitions = 8,
       headTable = headTable, robotsDisallow = robots,
-      expansionCaps = caps, rankMode = rankMode,
-      broadcastScheduled = broadcastScheduled)
+      expansionCaps = caps, broadcastScheduled = broadcastScheduled)
     // robotsTxt: RAW per-host robots.txt folded in through the production
     // one-call wiring (gating rules + Crawl-delay pacing) — q77 exercises
     // the robots→perHostDelayMs path end-to-end, not a hand-set delay map
     val eng = new CrawlEngine(s, corpus, st,
       if (robotsTxt.isEmpty) cfg0 else graft.crawl.Robots.configure(cfg0, robotsTxt))
-    val since = new java.sql.Timestamp((OracleBaseSec - 12600L) * 1000)
-    val end = new java.sql.Timestamp((OracleBaseSec + 3600L) * 1000)
-    eng.initialize(seedSpecs.getOrElse((0L until 3L).map(u => Seed(s"seed$u",
-      s"https://h$u.example.test/u/$u/p/0", since, end))))
+    eng.initialize(seeds)
     eng
   }
 

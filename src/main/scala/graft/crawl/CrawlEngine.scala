@@ -56,8 +56,11 @@ case class Seed(seed_id: String, root_url: String,
  *                           analog). Missing class ⇒ unlimited; cap 0 ⇒
  *                           that class never expands (the reference's
  *                           download_repost=0 analog)
- * @param saltBuckets        salt fan-out for mega-host partitions (north
- *                           rule: salted repartitioning on host-hash)
+ * @param saltBuckets        pacing shard fan-out: the wall-clock pacing
+ *                           stage splits each host into up to this many
+ *                           (host, salt) shards on host-hash, so a mega-host's
+ *                           fetches spread over several tasks (north rule:
+ *                           salted repartitioning on host-hash)
  * @param bloomShards        seen-set prefilter shards
  * @param robotsDisallow     (host, path-prefix) disallow gating rules (north
  *                           rule); evaluated with RFC 9309 §2.2.2
@@ -68,7 +71,10 @@ case class Seed(seed_id: String, root_url: String,
  * @param realTimePacing     enforce delays as wall-clock sleeps in the fetch
  *                           stage (tests keep this off: budgets are modeled
  *                           as data — fetch ordinals × delay — so runs are
- *                           replayable; SURVEY.md §7 hard-part 2)
+ *                           replayable; SURVEY.md §7 hard-part 2). With every
+ *                           effective delay at 0 (defaultDelayMs and all
+ *                           perHostDelayMs) the pacing stage is skipped and
+ *                           paced_at_ms stays null
  * @param compactEvery       fold frontier/seen deltas into a full base
  *                           snapshot every N batches (amortizes the only
  *                           O(|state|) write; per-batch writes are O(batch))
@@ -115,26 +121,12 @@ case class CrawlConfig(
     realTimePacing: Boolean = false,
     shufflePartitions: Int = 32,
     bloomMinSeen: Long = 4096,
-    shardedRanking: Boolean = false,
     broadcastScheduled: Boolean = false,
     compactEvery: Int = 8,
     corpusUnique: Boolean = false,
     probePushdownMaxKeys: Int = 1024,
     bloomRecentCap: Int = 16,
     headTable: Boolean = false,
-    /** max batch link keys broadcast for the expansion-membership semi scans
-      * (the "mid path"): below it the 8-byte link-key set ships once to the
-      * executors and the big seen/frontier sides are scanned, never shuffled,
-      * during outlink membership filtering; above it the shuffle fallback
-      * runs. A BYTES bound in disguise (keys × 8 B ≈ 32 MB at the default),
-      * not a local-core tuning: size it to executor broadcast headroom. */
-    linksBroadcastMaxKeys: Long = 4000000L,
-    /** rank plan: "narrow" (window on a slim projection, budget keys join
-      * back — optimal when politeness budgets bind), "direct" (one window
-      * over full rows — optimal for recrawl-everything batches where
-      * sched ≈ frontier), or "auto" (direct once the previous batch
-      * scheduled ≥ half the frontier). Identical results either way. */
-    rankMode: String = "auto",
     /** parquet codec for every state/log write. Default snappy: on this
       * VM's local disk the parsed-log write is encode-CPU-bound, and
       * zstd measured 26% slower wall for 49% fewer bytes (549→282 MB per
@@ -230,15 +222,14 @@ class CrawlEngine(
   //
   // Without it, every batch window-ranks the FULL frontier even though only
   // Σ host-budgets rows survive — at a 10^10-row frontier that scan+rank is
-  // the per-batch floor. The head table keeps, per host (or per politeness
-  // shard when shardedRanking), the top K = budget × (compactEvery + 1)
-  // candidates by the exact scheduling order (priority_ts desc, url_hash
-  // asc). Batches rank the head instead of the frontier.
+  // the per-batch floor. The head table keeps, per host, the top K =
+  // budget × (compactEvery + 1) candidates by the exact scheduling order
+  // (priority_ts desc, url_hash asc). Batches rank the head instead.
   //
-  // Exactness argument: a batch schedules the top `budget` rows per host
-  // (per shard: top effBudget ≤ floor(budget/S)+1). Between full rebuilds
-  // (every compactEvery batches, where the compaction already pays one full
-  // frontier scan) at most compactEvery × budget rows per host are consumed,
+  // Exactness argument: a batch schedules the top `budget` rows per host.
+  // Between full rebuilds (every compactEvery batches, where the compaction
+  // already pays one full frontier scan) at most compactEvery × budget rows
+  // per host are consumed,
   // and the incremental update (head ∖ processed ∪ adds, re-truncated to K)
   // only ever drops rows whose rank in the union — and hence in the frontier
   // (union ⊆ frontier) — exceeds K > compactEvery × budget + budget. So the
@@ -292,31 +283,35 @@ class CrawlEngine(
     headDf
   }
 
-  /** Top-K-per-host (or per politeness shard) of a frontier-shaped input, in
-    * the exact scheduling order. K is budget × (compactEvery + 1); sharded
-    * mode uses the per-shard budget upper bound (floor(budget/S) + 1) so the
-    * rank parallelizes across a mega-host's shards — the same skew answer as
-    * sharded scheduling itself. */
-  private def buildHead(df: DataFrame): DataFrame = {
-    val budgetDf = broadcast(
-      (cfg.perHostBudget.toSeq :+ ("" -> cfg.defaultHostBudget))
-        .toDF("b_host", "b_budget"))
-    val saltCol = pmod($"url_hash", lit(cfg.saltBuckets.toLong))
-    val w =
-      if (cfg.shardedRanking)
-        Window.partitionBy($"host", saltCol).orderBy($"priority_ts".desc, $"url_hash".asc)
-      else Window.partitionBy($"host").orderBy($"priority_ts".desc, $"url_hash".asc)
-    val budget = coalesce($"b_budget", lit(cfg.defaultHostBudget)).cast("long")
-    val perGroupBudget =
-      if (cfg.shardedRanking) floor(budget / lit(cfg.saltBuckets)) + 1L
-      else budget
-    df.filter($"depth" <= cfg.maxDepth)
-      .join(budgetDf, $"host" === $"b_host", "left_outer")
-      .withColumn("_k", perGroupBudget * lit(cfg.compactEvery + 1L))
-      .withColumn("_hr", row_number().over(w))
-      .filter($"_hr" <= $"_k")
+  /** Top-K-per-host of a frontier-shaped input, in the exact scheduling
+    * order. K is budget × (compactEvery + 1). */
+  private def buildHead(df: DataFrame): DataFrame =
+    topPerHost(df.filter($"depth" <= cfg.maxDepth), "_hr", cfg.compactEvery + 1L)
       .select(emptyFrontier.columns.toIndexedSeq.map(col): _*)
-  }
+
+  /** Largest / smallest configured per-host budget. */
+  private val maxBudget: Int = (cfg.perHostBudget.values.toSeq :+ cfg.defaultHostBudget).max
+  private val minBudget: Int = (cfg.perHostBudget.values.toSeq :+ cfg.defaultHostBudget).min
+
+  /** The host's fetch budget — a literal map lookup (config-small, no join). */
+  private def hostBudget: org.apache.spark.sql.Column =
+    if (cfg.perHostBudget.isEmpty) lit(cfg.defaultHostBudget)
+    else coalesce(element_at(typedLit(cfg.perHostBudget), $"host"), lit(cfg.defaultHostBudget))
+
+  /** Rank `df` per host into column `rank` in the exact scheduling order
+    * (newest priority_ts first, url_hash tiebreak: a total,
+    * partitioning-independent order) and keep rows within `mult` × the
+    * host's budget. The literal bound on the LARGEST budget bounds a
+    * mega-host's rank: Spark plans it as a map-side WindowGroupLimit(Partial)
+    * when it is at most spark.sql.optimizer.windowGroupLimitThreshold
+    * (default 1000), so the host's rank task sorts at most map partitions ×
+    * bound rows, not its whole frontier. Exact: the per-host filter after it
+    * drops a superset of what it drops. */
+  private def topPerHost(df: DataFrame, rank: String, mult: Long): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy($"host").orderBy($"priority_ts".desc, $"url_hash".asc)))
+      .filter(col(rank) <= lit(math.min(maxBudget * mult, Int.MaxValue).toInt))
+      .filter(col(rank) <= hostBudget * mult)
 
   /** disallow + allow rules as one gating dim (r_allow marks carve-outs). */
   private lazy val robotsRuleRows: Seq[(String, String, Boolean)] =
@@ -357,13 +352,18 @@ class CrawlEngine(
     seenSizeCache
   }
 
+  /** previous batch's scheduled-row count (this engine instance only; -1 =
+    * no history) — the rank-plan regime predictor. Deliberately NOT
+    * persisted: a resumed engine's first batch may take the narrow plan,
+    * which is merely a plan-shape choice, never a correctness one. */
+  private var lastSchedCount: Long = -1L
+  private var rankPlan: String = "none"
+  /** test hook: the rank plan the last batch took ("narrow" / "direct";
+    * "none" before the first batch). */
+  private[graft] def lastRankPlan: String = rankPlan
+
   /** running |frontier| — same arithmetic maintenance (deltas are exact:
     * every del key is frontier-present, every add is frontier-absent). */
-  /** previous batch's scheduled-row count (this engine instance only; -1 =
-    * no history) — rankMode=auto's regime predictor. Deliberately NOT
-    * persisted: a resumed engine's first batch takes the narrow plan, which
-    * is merely a plan-shape choice, never a correctness one. */
-  private var lastSchedCount: Long = -1L
   private var frontierSizeCache: Long = -1L
   private def frontierSize(committed: Long): Long = {
     if (frontierSizeCache < 0) {
@@ -682,6 +682,44 @@ class CrawlEngine(
     r
   }
 
+  /** Newest-first priority + per-host fetch budget over the robots-allowed
+    * candidates: the reference pages newest-first and stops at the budget
+    * (weibo.py:2743,1819-1827); rows past it stay in the frontier — that IS
+    * the paging continuation. Two rank plans, identical results:
+    *  - narrow (sched ≪ frontier): the window shuffle carries only
+    *    (url_hash, host, priority_ts), ~30 bytes/row instead of the full row
+    *    with two url strings; the surviving keys (≤ Σ budgets) join back
+    *    onto the candidates to recover full rows.
+    *  - direct (recrawl-everything batches, sched ≈ frontier): there every
+    *    key survives, so the narrow join-back is a second full-width
+    *    frontier shuffle (the flat sched_rank term in the r5 lc artifact);
+    *    ONE wide window over full rows strictly moves less data. */
+  private[graft] def rankBatch(allowed: DataFrame, direct: Boolean): DataFrame = {
+    val eligible = allowed.filter($"depth" <= cfg.maxDepth)
+    // per-host delay (robots Crawl-delay or config override) via a literal
+    // map lookup — config-small, no join
+    val hostDelay =
+      if (cfg.perHostDelayMs.isEmpty) lit(cfg.defaultDelayMs)
+      else coalesce(element_at(typedLit(cfg.perHostDelayMs), $"host"),
+        lit(cfg.defaultDelayMs))
+    val ranked =
+      if (direct)
+        // column order matched to the narrow plan's join output (url_hash
+        // leads) so the two plans are drop-in interchangeable
+        topPerHost(eligible, "fetch_ordinal", 1L)
+          .select(($"url_hash" +: eligible.columns.filterNot(_ == "url_hash")
+            .map(col).toSeq :+ $"fetch_ordinal"): _*)
+      else
+        // no broadcast hint: with a politeness-bounded batch AQE broadcasts
+        // the key set; an unbounded batch (keys ≈ frontier) takes the direct
+        // plan instead of a batch-sized broadcast
+        eligible.join(
+          topPerHost(eligible.select($"url_hash", $"host", $"priority_ts"), "fetch_ordinal", 1L)
+            .select($"url_hash", $"fetch_ordinal"),
+          Seq("url_hash"))
+    ranked.withColumn("sched_delay_ms", ($"fetch_ordinal" - 1) * hostDelay)
+  }
+
   /** Run one micro-batch; returns the ledger metrics row as a Map. */
   def runBatch(): Map[String, Long] =
     CrawlEngine.withProbeThreshold(spark, cfg.probePushdownMaxKeys)(runBatchImpl())
@@ -754,93 +792,13 @@ class CrawlEngine(
     val allowed = if (!hasRobots) candidates
       else candidates.join(robotsBlocked.select("url_hash"), Seq("url_hash"), "left_anti")
 
-    // ---- W1/W3/F4: newest-first priority + per-host fetch budget.
-    // The reference pages newest-first and stops at the budget
-    // (weibo.py:2743,1819-1827); rows past the budget stay in the frontier
-    // for the next batch — that IS the paging continuation.
-    val budgetDf = broadcast(
-      (cfg.perHostBudget.toSeq :+ ("" -> cfg.defaultHostBudget))
-        .toDF("b_host", "b_budget"))
-    // shardedRanking: the global per-host rank makes a mega-host one window
-    // partition — a single sequential task no matter how many executors. At
-    // scale each politeness shard (host, salt) ranks independently:
-    // newest-first is preserved per shard, the sort parallelizes, and
-    // determinism is kept (salt = f(url_hash)). The budget splits exactly:
-    // shards with salt < budget mod S get floor(budget/S)+1, the rest
-    // floor(budget/S) — per-batch host total == host_budget, so the
-    // politeness cap is never exceeded (ADVICE r1). Tests use the exact
-    // global rank (reference-order equivalence); benches shard.
-    val saltCol = pmod($"url_hash", lit(cfg.saltBuckets.toLong))
-    val w =
-      if (cfg.shardedRanking)
-        Window.partitionBy($"host", saltCol)
-          .orderBy($"priority_ts".desc, $"url_hash".asc)
-      else Window.partitionBy($"host").orderBy($"priority_ts".desc, $"url_hash".asc)
-    // NARROW ranking: the window shuffle carries only (url_hash, host,
-    // priority_ts) — ~30 bytes/row instead of the full frontier row with two
-    // url strings (~6× the bytes; the rank shuffle was the dominant flat
-    // cost per batch). The budget-surviving keys (bounded by Σ host budgets)
-    // broadcast back onto the frontier scan to recover full rows. Tiebreak
-    // is url_hash — unique and deterministic, so scheduling order stays
-    // partitioning-independent.
-    val eligible = allowed.filter($"depth" <= cfg.maxDepth)
-    val effBudget =
-      if (cfg.shardedRanking)
-        floor($"host_budget" / lit(cfg.saltBuckets)).cast("int") +
-          when(saltCol < pmod($"host_budget", lit(cfg.saltBuckets)), 1).otherwise(0)
-      else $"host_budget"
-    // per-host delay (robots Crawl-delay or config override) via a literal
-    // map lookup — config-small, no join
-    val hostDelay =
-      if (cfg.perHostDelayMs.isEmpty) lit(cfg.defaultDelayMs)
-      else coalesce(element_at(typedLit(cfg.perHostDelayMs), $"host"),
-        lit(cfg.defaultDelayMs))
-    // Two regime-dependent rank plans (identical results — same window spec,
-    // same budget filter, url_hash tiebreak makes the order total):
-    //  - narrow (politeness-bounded batches, sched ≪ frontier): the window
-    //    shuffle carries only (url_hash, host, priority_ts); the budget-
-    //    surviving keys (bounded by Σ budgets) broadcast back onto the
-    //    frontier scan to recover full rows — no wide shuffle anywhere.
-    //  - direct (recrawl-everything batches, sched ≈ frontier — full-refresh
-    //    crawls, the throughput-bench regime): the narrow plan degenerates
-    //    there (every key survives, so the "broadcast back" is a second,
-    //    full-width frontier shuffle on top of the narrow one — the flat
-    //    sched_rank term in the r5 lc artifact); ranking the full rows in
-    //    ONE wide window strictly moves less data.
-    // rankMode=auto picks direct when the previous batch scheduled ≥ half
-    // the frontier (first batch of a fresh engine has no history → narrow).
-    val useDirect = cfg.rankMode match {
-      case "direct" => true
-      case "narrow" => false
-      case _ => lastSchedCount >= 0 && lastSchedCount * 2 >= frontCount
-    }
-    val scheduled =
-      if (useDirect)
-        eligible
-          .withColumn("fetch_ordinal", row_number().over(w))
-          .join(budgetDf, $"host" === $"b_host", "left_outer")
-          .withColumn("host_budget", coalesce($"b_budget", lit(cfg.defaultHostBudget)))
-          .filter($"fetch_ordinal" <= effBudget)
-          // column order matched to the narrow plan's join output
-          // (url_hash leads) so the two plans are drop-in interchangeable
-          .select(($"url_hash" +: eligible.columns.filterNot(_ == "url_hash")
-            .map(col).toSeq :+ $"fetch_ordinal"): _*)
-          .withColumn("sched_delay_ms", ($"fetch_ordinal" - 1) * hostDelay)
-      else {
-        val rankedKeys = eligible
-          .select($"url_hash", $"host", $"priority_ts")
-          .withColumn("fetch_ordinal", row_number().over(w))
-          .join(budgetDf, $"host" === $"b_host", "left_outer")
-          .withColumn("host_budget", coalesce($"b_budget", lit(cfg.defaultHostBudget)))
-          .filter($"fetch_ordinal" <= effBudget)
-          .select($"url_hash", $"fetch_ordinal")
-        // no broadcast hint: with a politeness-bounded batch AQE broadcasts
-        // the key set; an unbounded batch (keys ≈ frontier) falls to
-        // rankMode's direct plan instead of a batch-sized broadcast
-        eligible
-          .join(rankedKeys, Seq("url_hash"))
-          .withColumn("sched_delay_ms", ($"fetch_ordinal" - 1) * hostDelay)
-      }
+    // ---- W1/W3/F4 (rankBatch). Direct plan when no budget can bind (the
+    // smallest covers the whole frontier) or the previous batch scheduled
+    // ≥ half the frontier; narrow otherwise, e.g. a fresh engine's batch 0.
+    val direct = minBudget >= frontCount ||
+      (lastSchedCount >= 0 && lastSchedCount * 2 >= frontCount)
+    rankPlan = if (direct) "direct" else "narrow"
+    val scheduled = rankBatch(allowed, direct)
 
     // ---- fetch = lookup into the pages corpus (S1 analog; in tests "fetch"
     // is this join per the driver instruction — no network). left join keeps
@@ -1096,7 +1054,7 @@ class CrawlEngine(
     // r2-shaped shuffle fallback remains. The selector reads the parsed
     // write's free links-sum observation (an upper bound — caps and the
     // depth filter only shrink the real explode), not a count job.
-    val midPath = linkKeyArr.isEmpty && metric("links") <= cfg.linksBroadcastMaxKeys
+    val midPath = linkKeyArr.isEmpty && metric("links") <= CrawlEngine.LinksBroadcastMaxKeys
     lazy val linkKeysBcast = broadcast(linksRaw.select("url_hash"))
     def membershipHits(table: String, fullDf: DataFrame, schemaOf: => DataFrame): DataFrame =
       linkKeyArr match {
@@ -1550,6 +1508,14 @@ class CrawlEngine(
 }
 
 object CrawlEngine {
+  /** max batch link keys broadcast for the expansion-membership semi scans
+    * (the "mid path"): below it the 8-byte link-key set ships once to the
+    * executors and the big seen/frontier sides are scanned, never shuffled,
+    * during outlink membership filtering; above it the shuffle fallback
+    * runs. A BYTES bound in disguise (keys × 8 B ≈ 32 MB), not a local-core
+    * tuning: it is sized to executor broadcast headroom. */
+  private val LinksBroadcastMaxKeys = 4000000L
+
   /** Ledger row schema — long/string only, written driver-direct
     * (StateStore.appendLogDirect); nullability mirrors what a Spark write of
     * the same local tuples produced (primitives required, string optional). */

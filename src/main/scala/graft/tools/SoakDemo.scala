@@ -38,7 +38,7 @@ object SoakDemo {
     // restarts) through the per-host head-table scheduling path
     val cfg = CrawlConfig(defaultHostBudget = 6, maxDepth = 64,
       shufflePartitions = 8, bloomMinSeen = 64, compactEvery = 3,
-      saltBuckets = 4, shardedRanking = true,
+      saltBuckets = 4,
       headTable = sys.env.get("GRAFT_SOAK_HEAD").contains("1"))
 
     // window 0 ends 12h before the corpus anchor so later windows re-open it

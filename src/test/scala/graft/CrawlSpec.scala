@@ -229,24 +229,36 @@ class CrawlSpec extends AnyFunSuite {
     assert(ordKey(e1) == ordKey(e2), "per-host fetch order depends on partitioning")
   }
 
-  test("rankMode direct == narrow: identical fetched sets and per-host ordinals (r5)") {
+  test("rank plans: narrow == direct, and the engine picks each in its regime") {
     // The two rank plans (narrow projection + key join-back vs one wide
-    // window) must be drop-in interchangeable — same window spec, same
-    // budget filter, url_hash tiebreak. Budget 2 binds (both plans' filters
-    // do real work) and sharded ranking covers the effBudget split path.
-    def runWith(mode: String): CrawlEngine = {
+    // window) must be drop-in interchangeable. One batch over a preloaded
+    // frontier whose hosts hold at most m rows each: budget m (< |frontier|)
+    // takes the narrow plan, budget |frontier| (no budget can bind) the
+    // direct plan, and both schedule every row.
+    val pre = Bench.preloadFrontier(pagesDF).persist()
+    val f = pre.count()
+    val m = pre.groupBy("host").count().agg(max("count")).head().getLong(0).toInt
+    assert(m < f, s"premise: budget m = $m must be below |frontier| = $f")
+    def runWith(budget: Int): CrawlEngine = {
       val e = new CrawlEngine(spark, pagesDF, tmp(),
-        CrawlConfig(defaultHostBudget = 2, shufflePartitions = 5,
-          saltBuckets = 4, shardedRanking = true, rankMode = mode))
-      e.initialize(seeds(5)); e.run(3); e
+        CrawlConfig(defaultHostBudget = budget, shufflePartitions = 5))
+      e.initializeWithFrontier(pre); e.runBatch(); e
     }
-    val (en, ed) = (runWith("narrow"), runWith("direct"))
-    def key(e: CrawlEngine) = e.fetched().get
-      .select("host", "batch_id", "fetch_ordinal", "url_hash", "sched_delay_ms")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+    val (en, ed) = (runWith(m), runWith(f.toInt))
+    assert(en.lastRankPlan == "narrow" && ed.lastRankPlan == "direct")
+    def key(e: CrawlEngine) = e.store.readLog("parsed", Long.MaxValue).get
+      .select("host", "fetch_ordinal", "url_hash", "sched_delay_ms")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
+    assert(key(en).size == f, "every frontier row must be scheduled")
     assert(key(en) == key(ed), "rank plans disagree")
-    assert(en.frontier().count() == ed.frontier().count())
+    // under a binding budget the direct plan still runs once a batch
+    // schedules >= half the frontier (the q70/q84 oracle crawl shape)
+    val e = new CrawlEngine(spark, pagesDF, tmp(),
+      CrawlConfig(defaultHostBudget = 2, shufflePartitions = 5))
+    e.initialize(seeds(5))
+    val plans = (1 to 3).map { _ => e.runBatch(); e.lastRankPlan }
+    assert(plans.head == "narrow" && plans.contains("direct"), plans)
   }
 
   test("logCodec=zstd writes zstd state files and an identical crawl (r5)") {
@@ -673,23 +685,6 @@ class CrawlResilienceSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(f(eng2) == f(ref), "retry after crash diverges from clean run")
   }
-
-  test("sharded ranking (mega-host skew path): deterministic, budget-split per shard") {
-    val cfg = CrawlConfig(defaultHostBudget = 8, saltBuckets = 4,
-      shufflePartitions = 4, shardedRanking = true)
-    val e1 = new CrawlEngine(spark, pagesDF, tmp(), cfg)
-    val e2 = new CrawlEngine(spark, pagesDF, tmp(), cfg.copy(shufflePartitions = 7))
-    e1.initialize(seeds(6)); e1.run(3)
-    e2.initialize(seeds(6)); e2.run(3)
-    def k(e: CrawlEngine) = e.seen().select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
-    assert(k(e1) == k(e2), "sharded ranking not partitioning-deterministic")
-    // per (host, salt-shard) budget = ceil(8/4) = 2
-    val over = e1.fetched().get
-      .withColumn("shard", pmod(col("url_hash"), lit(4)))
-      .groupBy("host", "shard", "batch_id").count()
-      .filter(col("count") > 2).count()
-    assert(over == 0, "per-shard budget exceeded")
-  }
 }
 
 /** Per-host head table — sublinear scheduling (VERDICT r3 item 3): batches
@@ -766,18 +761,6 @@ class HeadTableSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(frontierRows > 1000, s"test premise: a big frontier (got $frontierRows)")
     assert(eng.headRows <= bound && frontierRows > bound,
       "premise: the head bound must be genuinely smaller than the frontier")
-  }
-
-  test("sharded ranking variant: head == full under (host, salt) politeness shards") {
-    val cfgBase = CrawlConfig(defaultHostBudget = 8, saltBuckets = 4,
-      shufflePartitions = 4, maxDepth = 8, compactEvery = 3,
-      bloomMinSeen = 1, shardedRanking = true)
-    val a = new CrawlEngine(spark, pagesDF, tmp(), cfgBase.copy(headTable = true))
-    val b = new CrawlEngine(spark, pagesDF, tmp(), cfgBase)
-    a.initializeWithFrontier(preload); b.initializeWithFrontier(preload)
-    a.run(5); b.run(5)
-    assert(fetchKey(a) == fetchKey(b), "sharded head scheduling diverged")
-    assert(frontKey(a) == frontKey(b))
   }
 
   test("rule change over pre-existing frontier: purgeRobotsBlocked restores head/full parity in one batch") {
@@ -1221,7 +1204,7 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
 }
 
 /** Round-2 semantics locks: half-open windows, BHJ open-corpus recovery,
-  * exact politeness-budget split under sharded ranking. */
+  * the per-host politeness-budget cap. */
 class WindowAndGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import graft.crawl._
@@ -1364,19 +1347,20 @@ class WindowAndGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(ms.last("frontier_size") == eng.frontier().count())
   }
 
-  test("sharded ranking with budget % saltBuckets != 0: per-host total == host_budget, never over") {
+  test("per-host budget cap: no host exceeds host_budget in any batch") {
     val N = 512L
     val pages = PagesGen.pages(spark, N, 4).toDF
     val eng = new CrawlEngine(spark, pages, tmp(),
       CrawlConfig(defaultHostBudget = 5, saltBuckets = 8, maxDepth = 16,
-        shufflePartitions = 4, shardedRanking = true))
+        shufflePartitions = 4))
     eng.initialize(PagesGen.seedRows(N, 6).map(Seed.tupled))
     eng.run(3)
     // the parsed log carries exactly the scheduled rows (one per fetch
     // attempt) — the politeness cap governs its per-(host, batch) counts
     val sched = eng.store.readLog("parsed", Long.MaxValue).get
-    val over = sched.groupBy($"host", $"batch").count().filter($"count" > 5).count()
-    assert(over == 0, "per-host politeness budget exceeded (ceil-overshoot bug, ADVICE r1)")
+    val perHostBatch = sched.groupBy($"host", $"batch").count()
+    assert(perHostBatch.filter($"count" > 5).count() == 0, "per-host politeness budget exceeded")
+    assert(perHostBatch.filter($"count" === 5).count() > 0, "premise: the budget binds")
   }
 }
 

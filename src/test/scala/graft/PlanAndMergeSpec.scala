@@ -85,6 +85,28 @@ class PlanAndMergeSpec extends AnyFunSuite {
     assert(exchangeIdx >= 0, s"no hash exchange on url_hash:\n${plan.take(2000)}")
   }
 
+  test("scheduling rank: a binding budget plans a PARTIAL WindowGroupLimit before the host exchange") {
+    // A mega-host's rank task stays bounded because the rank carries a
+    // literal bound on the largest budget, which Spark turns into a
+    // map-side top-k per host: both rank plans must show a Partial-mode
+    // WindowGroupLimit directly upstream of the host exchange.
+    val pages = PagesGen.pages(spark, 256L, 4).toDF
+    val eng = new CrawlEngine(spark, pages,
+      java.nio.file.Files.createTempDirectory("graft_rank").toString,
+      CrawlConfig(defaultHostBudget = 2, perHostBudget = Map("h0.example.test" -> 3),
+        shufflePartitions = 4))
+    eng.initializeWithFrontier(Bench.preloadFrontier(pages))
+    Seq(false, true).foreach { direct =>
+      val plan = planOf(eng.rankBatch(eng.frontier(), direct))
+      val exchangeIdx = plan.indexOf("Exchange hashpartitioning(host")
+      val partialIdx = plan.indexOf("row_number(), 3, Partial")
+      assert(exchangeIdx >= 0, s"no hash exchange on host (direct=$direct):\n$plan")
+      assert(partialIdx > exchangeIdx &&
+        !plan.substring(exchangeIdx + 1, partialIdx).contains("Exchange"),
+        s"no partial WindowGroupLimit upstream of the host exchange (direct=$direct):\n$plan")
+    }
+  }
+
   test("ScalarOps: relative dates anchored, not wall-clock (X9)") {
     val anchor = lit(java.sql.Timestamp.valueOf("2025-01-01 00:00:00"))
     val r = Seq("刚刚", "5分钟前", "2小时前", "昨天 12:00", "2024-06-01 08:30:00")
