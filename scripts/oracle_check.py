@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local approximation of the driver's correctness gate: run graft.Verify
 output against DuckDB oracles on the same parquet tables, compare row sets
-(columns sorted by name, rows sorted, exact values)."""
+(columns sorted by name, rows sorted, exact values). An oracle query with no
+output directory (its run failed) counts as MISSING. Exits 1 unless every
+query is OK."""
 import sys, os, json, glob
 import duckdb
 
@@ -44,6 +46,9 @@ def main(sf_dir, out_dir):
             results[name] = f"VALUE_MISMATCH first at sorted row {bad}: got={g[bad]} exp={e[bad]}"
         else:
             results[name] = f"OK rows={len(g)}"
+    for name in oracle:
+        if name not in results:
+            results[name] = "MISSING no output directory"
     width = max(len(k) for k in results)
     nok = 0
     for k, v in sorted(results.items()):
@@ -51,6 +56,7 @@ def main(sf_dir, out_dir):
         if v.startswith("OK") or v.startswith("ROWS_ONLY"):
             nok += 1
     print(f"== {nok}/{len(results)} ok")
+    return 0 if nok == len(results) else 1
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))

@@ -691,16 +691,15 @@ object SparkEntry {
       fetchedRows(eng)
     }),
 
-    // q70's crawl again, in its own state dir. The engine picks the rank
-    // plan per batch: narrow for a fresh engine's first batch, direct once
-    // a batch schedules ≥ half the frontier — on this fixture batches 0-1
-    // run narrow and 2-3 direct, under the binding budget. This gates that
-    // a second engine over the same fixture in the same session reproduces
-    // q70's schedule batch for batch, both plans included (CrawlSpec's
-    // plan-parity test asserts the plans agree and which one ran).
+    // q70's crawl with the bloom prefilter ON (bloomMinSeen = 1: built at
+    // batch 1) and compaction every 2 batches (a fold at batch 1, another at
+    // batch 3): every later outlink seen probe reads only the keys the bloom
+    // flags, so this gates the bloom behind DuckDB — no other oracle crawl
+    // reaches the default bloomMinSeen. The engine still picks the rank plan
+    // per batch: batches 0-1 run narrow and 2-3 direct on this fixture.
     "q84_crawl_budget_direct" -> ((s, dir) => {
       val eng = crawlOracleEngine(s, dir, "q84_crawl_budget_direct", budget = 2,
-        seeds = budgetSeeds)
+        seeds = budgetSeeds, bloomMinSeen = 1L, compactEvery = 2)
       eng.run(4)
       fetchedRows(eng)
     }),
@@ -1143,12 +1142,15 @@ object SparkEntry {
       seeds: Seq[Seed] = oracleSeeds(),
       caps: Map[String, Int] = Map.empty,
       robotsTxt: Seq[(String, String)] = Nil,
-      broadcastScheduled: Boolean = false): CrawlEngine = {
+      broadcastScheduled: Boolean = false,
+      bloomMinSeen: Long = CrawlConfig().bloomMinSeen,
+      compactEvery: Int = CrawlConfig().compactEvery): CrawlEngine = {
     val st = scratchFresh("crawl_oracle_" + name)
     val corpus = crawlOracleCorpusCached(s, dir)
     val cfg0 = CrawlConfig(defaultHostBudget = budget, maxDepth = 64, shufflePartitions = 8,
       headTable = headTable, robotsDisallow = robots,
-      expansionCaps = caps, broadcastScheduled = broadcastScheduled)
+      expansionCaps = caps, broadcastScheduled = broadcastScheduled,
+      bloomMinSeen = bloomMinSeen, compactEvery = compactEvery)
     // robotsTxt: RAW per-host robots.txt folded in through the production
     // one-call wiring (gating rules + Crawl-delay pacing) — q77 exercises
     // the robots→perHostDelayMs path end-to-end, not a hand-set delay map
@@ -2076,7 +2078,8 @@ object SparkEntry {
 
     "q70_crawl_budget" -> crawlBudgetOracleSql(batches = 4, budget = 2),
 
-    // physical-plan variants of the q70 schedule — identical oracle
+    // q70's schedule with the bloom on (q84) and with the broadcast fetch
+    // (q85) — identical oracle
     "q84_crawl_budget_direct" -> crawlBudgetOracleSql(batches = 4, budget = 2),
     "q85_crawl_budget_bcast" -> crawlBudgetOracleSql(batches = 4, budget = 2),
 

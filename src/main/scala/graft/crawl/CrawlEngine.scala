@@ -56,11 +56,10 @@ case class Seed(seed_id: String, root_url: String,
  *                           analog). Missing class ⇒ unlimited; cap 0 ⇒
  *                           that class never expands (the reference's
  *                           download_repost=0 analog)
- * @param saltBuckets        pacing shard fan-out: the wall-clock pacing
- *                           stage splits each host into up to this many
- *                           (host, salt) shards on host-hash, so a mega-host's
- *                           fetches spread over several tasks (north rule:
- *                           salted repartitioning on host-hash)
+ * @param saltBuckets        pacing fan-out: the wall-clock pacing stage
+ *                           hash-partitions hosts over this many tasks; each
+ *                           host is paced whole by one task, so no host is
+ *                           fetched faster than its delay budget
  * @param bloomShards        seen-set prefilter shards
  * @param robotsDisallow     (host, path-prefix) disallow gating rules (north
  *                           rule); evaluated with RFC 9309 §2.2.2
@@ -141,12 +140,12 @@ case class CrawlConfig(
  * One micro-batch re-expresses the reference's crawl loop
  * (weibo.py:1663-1817 / SURVEY.md §3.1 step 4) as a declarative plan:
  *
- *   frontier ──bloom prefilter──► exact membership resolve vs seen    (F2)
- *           ──robots gating──► per-host window rank (newest-first,
+ *   frontier ──robots gating──► per-host window rank (newest-first,
  *             budget-capped)                                      (W1/W3/F4)
- *           ──salted repartition on host-hash──► fetch (pages lookup)
+ *           ──fetch (pages lookup)──► wall-clock pacing, one task per host
  *           ──warc_ts ∈ [since,end)──► parse (extract_text/outlinks) (F3, U1)
- *           ──explode outlinks──► new frontier entries            (U5)
+ *           ──explode outlinks──► bloom prefilter ──► exact membership
+ *             probe vs seen/frontier──► new frontier entries      (F2, U5)
  *           ──delta MERGE seen/frontier + append fetched/ledger, one atomic
  *             commit──► resumable exactly at frontier state       (O4)
  *
@@ -159,8 +158,10 @@ case class CrawlConfig(
  *    bounded batch keys against the big table, then a broadcast anti-join of
  *    the tiny match set back — no sort-merge of 10^10 rows anywhere;
  *  - **the bloom prefilter is maintained incrementally and lives executor-
- *    side**: built once (or loaded from its persisted snapshot + an
- *    executor-side replay of seen-deltas), the snapshot tier rides a real
+ *    side**, in front of the one seen check whose answer is unknown (the
+ *    outlink keys at expansion; frontier ∩ seen = ∅ needs none): built
+ *    once (or loaded from its persisted snapshot + an executor-side replay
+ *    of seen-deltas), the snapshot tier rides a real
  *    `SparkContext.broadcast` (shipped once, cached deserialized per
  *    executor — never a plan Literal, never a driver field of O(|seen|));
  *    per-batch inserts become small executor-built delta blobs folded into
@@ -239,9 +240,9 @@ class CrawlEngine(
   //
   // Transients that can violate the argument get a same-batch full rebuild:
   // robots rules newly blocking PRE-EXISTING frontier rows purge up to K
-  // head rows of a host at once (robotsBlockedCount > 0 ⇒ rebuild). The
-  // frontier ∩ seen = ∅ invariant (maintained from initialization onward)
-  // keeps seen-resolution from ever shrinking the head.
+  // head rows of a host at once (robotsBlockedCount > 0 ⇒ rebuild). No seen
+  // row can hide in the head: frontier ∩ seen = ∅ holds after every commit
+  // (the F2 note in runBatchImpl).
   // ------------------------------------------------------------------
 
   // The head lives IN MEMORY (VERDICT r4 item 1): r4 persisted it to parquet
@@ -650,16 +651,6 @@ class CrawlEngine(
     }
   }
 
-  /** Collect a bounded, distinct probe key set for predicate pushdown into
-    * the range-clustered state bases (VERDICT r2 item 3); None when it
-    * exceeds the cap — callers fall back to the broadcast-semi full scan. */
-  private def boundedKeys(df: DataFrame): Option[Array[Long]] = {
-    val cap = cfg.probePushdownMaxKeys
-    if (cap <= 0) return None
-    val rows = df.select("url_hash").distinct().limit(cap + 1).collect()
-    if (rows.length > cap) None else Some(rows.map(_.getLong(0)))
-  }
-
   private val timing = sys.env.contains("GRAFT_TIMING")
   /** cumulative per-phase wall seconds across all batches — always
     * maintained (one map update per phase per batch) so bench artifacts can
@@ -733,56 +724,14 @@ class CrawlEngine(
     val seenCount = seenSize(committed)
     val frontCount = frontierSize(committed)
 
-    // ---- F2: seen-set dedup — bloom prefilter + authoritative exact resolve.
-    // !mightContain ⇒ definitely new (skips the join); mightContain ⇒ maybe
-    // (false positives resolved exactly, so a never-seen url can never be
-    // dropped — FIXTURES.md §5.3). The maybe-set is small (bloom fpp ×
-    // |frontier| + rotation re-adds), so the exact resolve is KEY-BOUNDED:
-    // when the maybe keys fit the pushdown cap they are pushed as literal
-    // predicates into the range-clustered seen base (partition + row-group
-    // pruning — the read is sublinear in |seen|); above the cap it falls back
-    // to the inverted broadcast-semi (seen scanned once, shuffle-free — never
-    // a sort-merge of 10^10 rows).
     timed("bloom_ensure")(ensureBlobs(committed, seenCount))
     // scheduling source: the head table (O(Σ budgets) rows) when enabled,
-    // else the full frontier view. Every stage downstream — bloom probe,
-    // robots gating, ranking — then reads head-bounded input; the full
-    // frontier is only read at compaction (head rebuild) and via the
-    // KEY-bounded membership probes.
-    val schedBase = if (cfg.headTable) timed("head_read")(headView(committed)) else front
-    val candidates =
-      if (bloomBc != null) {
-        // SINGLE-PASS shape (r6, guide §2.4): the previous definitelyNew ∪
-        // resolved union scanned the frontier base and every delta TWICE with
-        // full rows (once per bloom branch — the union's branches are
-        // separate subplans, so nothing shares the scan). Equivalent in one
-        // pass: collect the maybe KEYS from a narrow (url_hash-only,
-        // column-pruned) probe scan, resolve them exactly against seen, and
-        // anti-join schedBase once against the resolved matches — rows the
-        // bloom cleared are never in seenMatch (no false negatives), rows it
-        // flagged survive iff the exact resolve clears them. Same result set,
-        // half the full-row frontier reads per batch.
-        val maybeKeys = schedBase.select("url_hash")
-          .filter(BloomSeen.bloom_probe(bloomBc, bloomRecent.toList, $"url_hash"))
-        // arithmetic pre-check: the expected maybe-set is ~fpp × |frontier|;
-        // when that already exceeds the pushdown cap, don't pay a collect
-        // job that would only hit the cap and fall back anyway
-        val maybeBounded =
-          if (cfg.bloomFpp * frontCount > cfg.probePushdownMaxKeys) None
-          else timed("maybe_keys")(boundedKeys(maybeKeys))
-        // broadcast hints only where boundedness is PROVEN (the keyed path's
-        // ≤ cap rows); elsewhere AQE decides from runtime stats — a bounded
-        // maybe-set still broadcasts, an unbounded bench-sized one becomes a
-        // partitioned join instead of a driver-built multi-MB broadcast
-        // shipped to every executor
-        val seenMatch = maybeBounded match {
-          case Some(ks) => broadcast(
-            store.readViewKeyed("seen", committed, emptySeen, ks).select("url_hash"))
-          case None => seenDf.select("url_hash")
-            .join(maybeKeys, Seq("url_hash"), "left_semi")
-        }
-        schedBase.join(seenMatch, Seq("url_hash"), "left_anti")
-      } else schedBase // frontier ∩ seen = ∅ is maintained by construction below
+    // else the full frontier view. Every stage downstream — robots gating,
+    // ranking — then reads head-bounded input; the full frontier is only
+    // read at compaction (head rebuild) and via the KEY-bounded membership
+    // probes. No seen check here: frontier ∩ seen = ∅ after every commit
+    // (F2, at the outlink probe below).
+    val candidates = if (cfg.headTable) timed("head_read")(headView(committed)) else front
 
     // ---- robots gating (north rule): RFC 9309 longest-match over the
     // disallow + allow rule dims (see robotsBlockedOf).
@@ -881,8 +830,8 @@ class CrawlEngine(
     }
 
     // O7/O8 inverted (real fetches only): parallel across hosts, sequential
-    // within a (host, salt) shard — pace() repartitions so one task owns each
-    // shard's token-bucket and stamps the actual fetch wall-clock into
+    // within a host — pace() repartitions so one task owns each host's
+    // token-bucket and stamps the actual fetch wall-clock into
     // paced_at_ms (lineage: the reference logs its sleep cadence,
     // weibo.py:2769-2778). Data-only runs skip the extra shuffle entirely
     // and carry a null stamp.
@@ -1005,7 +954,7 @@ class CrawlEngine(
     // against the big scans, the tiny hit sets broadcast back — either way,
     // no big-side shuffle anywhere.
     // CACHED: the exploded+canonicalized link set is referenced by up to
-    // three consumers (the bounded-key collect OR the two broadcast-semi
+    // three consumers (the link-key collect OR the two broadcast-semi
     // membership probes, plus the adds spine) — uncached, the fallback path
     // re-ran the explode + canonicalize + hash over the whole batch THREE
     // times inside the adds write job (a flat term of write_fr_adds,
@@ -1035,13 +984,28 @@ class CrawlEngine(
       .withColumn("child_depth", $"depth" + 1)
       .filter($"child_depth" <= cfg.maxDepth)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // arithmetic pre-check: a batch with more parsed pages than the key cap
-    // almost surely produces more link keys than the cap — skip the collect
-    // and go straight to the broadcast-semi fallback (a wrong skip only
-    // costs the r2-shaped full-scan path, never correctness)
-    val linkKeyArr =
-      if (schedParsed > cfg.probePushdownMaxKeys) None
-      else timed("link_keys")(boundedKeys(linksRaw))
+    // ---- F2: seen-set dedup at discovery, first occurrence wins
+    // (weibo.py:1698-1699) — the batch's only seen check. frontier ∩ seen = ∅
+    // after every commit (initialize starts seen empty; batches and purges
+    // move rows frontier → seen, adds are anti-joined against both; rotation
+    // drops the re-queued roots from seen), so only link keys are unknown.
+    // The keyed collect returns each link key with its bloom might-contain
+    // bit (every key while no bloom is built); seen is read for flagged keys
+    // only — no false negatives — and the frontier for all. A batch with
+    // more parsed pages than the key cap almost surely has more link keys:
+    // skip the collect (a wrong skip only costs the broadcast-semi path).
+    val cap = cfg.probePushdownMaxKeys
+    val linkKeyArr: Option[(Array[Long], Array[Long])] = // (all keys, flagged)
+      if (cap <= 0 || schedParsed > cap) None
+      else timed("link_keys") {
+        val maybeSeen =
+          if (bloomBc == null) lit(true)
+          else BloomSeen.bloom_probe(bloomBc, bloomRecent.toList, $"url_hash")
+        val rows = linksRaw.select("url_hash").distinct()
+          .select($"url_hash", maybeSeen).limit(cap + 1).collect()
+        if (rows.length > cap) None
+        else Some((rows.map(_.getLong(0)), rows.filter(_.getBoolean(1)).map(_.getLong(0))))
+      }
     // Mid path (guide §3.2 applied to expansion, r6): when the batch's link
     // set is too large for literal pushdown but still broadcast-small
     // (O(batch × fanout) — the normal politeness-bounded case), BROADCAST
@@ -1056,8 +1020,9 @@ class CrawlEngine(
     // depth filter only shrink the real explode), not a count job.
     val midPath = linkKeyArr.isEmpty && metric("links") <= CrawlEngine.LinksBroadcastMaxKeys
     lazy val linkKeysBcast = broadcast(linksRaw.select("url_hash"))
-    def membershipHits(table: String, fullDf: DataFrame, schemaOf: => DataFrame): DataFrame =
-      linkKeyArr match {
+    def membershipHits(table: String, fullDf: DataFrame, schemaOf: => DataFrame,
+        keys: Option[Array[Long]]): DataFrame =
+      keys match {
         case Some(ks) =>
           store.readViewKeyed(table, committed, schemaOf, ks).select("url_hash")
         case None if midPath => fullDf.select("url_hash")
@@ -1065,8 +1030,8 @@ class CrawlEngine(
         case None => fullDf.select("url_hash")
           .join(linksRaw.select("url_hash"), Seq("url_hash"), "left_semi")
       }
-    val seenHit = membershipHits("seen", seenDf, emptySeen)
-    val frontHit = membershipHits("frontier", front, emptyFrontier)
+    val seenHit = membershipHits("seen", seenDf, emptySeen, linkKeyArr.map(_._2))
+    val frontHit = membershipHits("frontier", front, emptyFrontier, linkKeyArr.map(_._1))
     // ONE union-exclude anti-join instead of three chained antis (guide
     // §2.4): the three exclusion sets are all url_hash key sets, so linksRaw
     // is probed once against their union — one join (broadcast-hinted when
@@ -1431,33 +1396,31 @@ class CrawlEngine(
   }
 
   /** Wall-clock token-bucket pacing inside the fetch stage — only when
-    * realTimePacing is on (real crawls). Partitions are sorted by
-    * (host, fetch_ordinal); each task owns its host shards and sleeps the
-    * residual delay budget between fetches of the same host
+    * realTimePacing is on (real crawls). Rows are hash-partitioned on host
+    * over `saltBuckets` pacing tasks, so each host is paced whole by one
+    * task: partitions are sorted by (host, fetch_ordinal) and each task
+    * sleeps the residual delay budget between fetches of the same host
     * (weibo.py:2769-2778 analog). Data passes through unchanged except the
     * `paced_at_ms` placeholder column, which is stamped with the actual
     * post-sleep fetch time (lineage + the spacing evidence CrawlSpec
     * asserts). Expects the input to already carry a null `paced_at_ms`. */
   private[graft] def pace(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge
-    val salted = df
-      .withColumn("host_salt", pmod(xxhash64($"host", pmod($"url_hash", lit(cfg.saltBuckets.toLong))),
-        lit(cfg.shufflePartitions.toLong)))
-      .repartition(cfg.shufflePartitions, $"host_salt")
-    val schema = salted.schema
+    val byHost = df.repartition(math.max(cfg.saltBuckets, 1), $"host")
+    val schema = byHost.schema
     val hostIdx = schema.fieldIndex("host")
     val stampIdx = schema.fieldIndex("paced_at_ms")
     // per-host delay budgets (robots Crawl-delay analog) — config-small map
     // in the task closure; hosts without an override pace at the default
     val defaultDelayMs = cfg.defaultDelayMs
     val perHostDelayMs = cfg.perHostDelayMs
-    // host INSIDE the sort key: several hosts can share one salt shard, and
+    // host INSIDE the sort key: several hosts can share one pacing task, and
     // sorting by ordinal alone would interleave them — the consecutive-row
     // bookkeeping below would then never see two same-host rows back to back
     // and enforce no delay at all (caught by PacingSpec's one-shard test).
-    // With hosts contiguous, a shard serializes its hosts (documented
-    // semantics) and each host's run is ordinal-ordered.
-    val sorted = salted.sortWithinPartitions($"host_salt", $"host", $"fetch_ordinal")
+    // With hosts contiguous, a task serializes its hosts and each host's run
+    // is ordinal-ordered.
+    val sorted = byHost.sortWithinPartitions($"host", $"fetch_ordinal")
     val out = graftbridge.toInternalRdd(sorted).mapPartitions { rows =>
       var lastHost: String = null
       var lastAt = 0L
