@@ -25,7 +25,8 @@ def fmt_tp(x):
 def render(d):
     s = d["scaling"]
     crawl = d["crawl"]
-    head = d["head_sched"]
+    # artifacts from before the head table's deletion still carry its arm
+    head = d.get("head_sched")
     paced = d["paced"]
     q = d["queries"]
     nq = len(q)
@@ -40,16 +41,6 @@ def render(d):
 
     def bucket_parsed(nx):
         return [r["phases"].get("write_parsed") for r in lcb_runs if r["nx"] == nx]
-
-    head_ratio = head["rank_rows_full"] / head["rank_rows_head"]
-    # prefer the adjacent-pair ratio median (robust to this VM's minute-scale
-    # drift) over the min-per-arm seconds when the artifact records it
-    wall_ratio = head.get("head_over_full_ratio", head["sec_head"] / head["sec_full"])
-    head_verdict = (
-        f"equal-or-better wall time (pair-median head/full ratio {wall_ratio:.2f})"
-        if wall_ratio <= 1.0
-        else f"{wall_ratio:.2f}x the wall time (pair-median head/full ratio)"
-    )
 
     lines = []
     a = lines.append
@@ -112,13 +103,23 @@ def render(d):
         f"{crawl['sec']:.1f} s = {fmt_tp(crawl['urls_per_sec'])} urls/s at "
         f"local[32]** ({crawl['pages']:,}-page corpus)."
     )
-    a(
-        f"- `head_sched` (politeness-bounded crawl, budget ≪ frontier): head table "
-        f"cuts the scheduling rank's scan input {head['rank_rows_full']:,} → "
-        f"{head['rank_rows_head']:,} rows (**{head_ratio:.1f}×**) at "
-        f"{head_verdict}; min-of-arm seconds for scale: "
-        f"{head['sec_full']:.1f} s full, {head['sec_head']:.1f} s head."
-    )
+    if head:
+        head_ratio = head["rank_rows_full"] / head["rank_rows_head"]
+        # prefer the adjacent-pair ratio median (robust to this VM's
+        # minute-scale drift) over the min-per-arm seconds when recorded
+        wall_ratio = head.get("head_over_full_ratio", head["sec_head"] / head["sec_full"])
+        head_verdict = (
+            f"equal-or-better wall time (pair-median head/full ratio {wall_ratio:.2f})"
+            if wall_ratio <= 1.0
+            else f"{wall_ratio:.2f}x the wall time (pair-median head/full ratio)"
+        )
+        a(
+            f"- `head_sched` (politeness-bounded crawl, budget ≪ frontier): head table "
+            f"cuts the scheduling rank's scan input {head['rank_rows_full']:,} → "
+            f"{head['rank_rows_head']:,} rows (**{head_ratio:.1f}×**) at "
+            f"{head_verdict}; min-of-arm seconds for scale: "
+            f"{head['sec_full']:.1f} s full, {head['sec_head']:.1f} s head."
+        )
     a(
         f"- `paced`: wall-clock politeness machinery costs "
         f"**{paced['overhead_pct']:.1f}%** at a zero delay budget "

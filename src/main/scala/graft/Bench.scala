@@ -483,74 +483,6 @@ object Bench {
           .filter(org.apache.spark.sql.functions.col("doc_id") < 1000), maxDist = 3).count()
       (System.nanoTime() - t0) / 1e9
     }
-    // head-table scheduling probe (VERDICT r3 item 3's bench line): a
-    // politeness-BOUNDED crawl (the real-crawl regime, where each batch
-    // schedules Σ budgets ≪ |frontier| rows) with and without the per-host
-    // head table. The head run's per-batch rank reads O(Σ budgets) head rows
-    // instead of window-ranking the full preloaded frontier.
-    // Reported as (seconds, rank-input rows): the head table's objective is
-    // bounding the per-batch SCHEDULING READ (O(Σ budgets) head rows instead
-    // of the full frontier) — the property that matters at a 10^10-row
-    // frontier. At local toy scale the read saving is smaller than the +1
-    // head-maintenance job per batch, so seconds alone would mis-read; the
-    // row counts carry the scaling story and the seconds keep it honest.
-    val headJson = if (skipScaling) "" else {
-      def boundedCrawl(head: Boolean): (Double, Long) = {
-        val pages = corpus(spark, benchPages, bodyRepeat)
-        val preload = preloadFrontier(pages)
-        val stateDir = java.nio.file.Files.createTempDirectory(s"graft_head_$head").toString
-        // budget 16 × compactEvery 4 ⇒ head K = 80 rows/host vs ~512
-        // frontier rows/host — the politeness-bounded regime where the rank
-        // input actually shrinks (budgets ≈ frontier would make head ≡
-        // frontier and measure nothing)
-        val eng = new CrawlEngine(spark, pages, stateDir, CrawlConfig(
-          defaultHostBudget = 16, defaultDelayMs = 0L,
-          maxDepth = 8, saltBuckets = 1, shufflePartitions = cpus * 2,
-          bloomMinSeen = 100000, broadcastScheduled = true, corpusUnique = true,
-          compactEvery = 4, headTable = head))
-        eng.initializeWithFrontier(preload)
-        val t0 = System.nanoTime()
-        eng.run(6)
-        val dt = (System.nanoTime() - t0) / 1e9
-        // the rank stage's scan input: live in-memory head vs full frontier
-        val rankRows = if (head) eng.headRows else eng.frontier().count()
-        try graft.crawl.StateStore.deleteRecursively(java.nio.file.Paths.get(stateDir))
-        catch { case _: Throwable => }
-        (dt, rankRows)
-      }
-      // Estimator (two hard lessons from the r5 first-cut artifact, which
-      // recorded sec_full 101.5 single-shot and a NEGATIVE pacing overhead):
-      // (1) the first run in a fresh session pays JIT + codegen compile for
-      // the whole crawl path — one discarded warmup eats it; (2) this VM
-      // drifts 1.5-2× on a minute scale, so cross-run min-picking compares
-      // different noise windows — instead run ADJACENT (full, head) pairs
-      // with the order alternating per round and take the median of
-      // per-round sec ratios; adjacent runs share their window, the ratio
-      // cancels it. sec_full/sec_head stay min-per-arm for readability; the
-      // ratio is the robust head-vs-full verdict.
-      // Warm up BOTH arms: the head path compiles its own plans, so a
-      // full-only warmup leaves the first head run paying head-path JIT —
-      // the r5 second-cut artifact recorded exactly that (first head run
-      // 149 s in a sequence that settled at 33 s).
-      boundedCrawl(head = false) // discarded warmup
-      boundedCrawl(head = true)  // discarded warmup (head-path codegen/JIT)
-      // 5 pairs, not 3: the r5 third-cut artifact recorded single-run noise
-      // spikes of 2.8-4.5× (one per ~6 runs) — a median of 3 pair ratios
-      // tolerates one corrupted pair, a median of 5 tolerates two.
-      val headArms = Seq(false, true, true, false, false, true, true, false, false, true)
-        .map(h => h -> boundedCrawl(h))
-      def armMin(h: Boolean) = headArms.collect { case (`h`, r) => r }.minBy(_._1)
-      val ((fullSec, fullRows), (headSec, headRows)) = (armMin(false), armMin(true))
-      val ratios = headArms.grouped(2).map { case Seq((h1, (s1, _)), (_, (s2, _))) =>
-        if (h1) s1 / s2 else s2 / s1 // head / full within the adjacent pair
-      }.toSeq.sorted
-      val ratioMed = ratios(ratios.size / 2)
-      val r1l = (x: Double) => math.round(x * 10) / 10.0
-      s""","head_sched":{"sec_full":${r1l(fullSec)},"sec_head":${r1l(headSec)},""" +
-        s""""sec_runs":[${headArms.map { case (h, (s, _)) => s"""[${if (h) 1 else 0},${r1l(s)}]""" }.mkString(",")}],""" +
-        s""""head_over_full_ratio":${r3(ratioMed)},""" +
-        s""""rank_rows_full":$fullRows,"rank_rows_head":$headRows}"""
-    }
     // pacing overhead (VERDICT r3 item 2's bench line): the full crawl with
     // realTimePacing on but a ZERO delay budget. With every effective delay
     // at 0 the engine skips the pacing stage (no repartition, sort or row
@@ -558,9 +490,11 @@ object Bench {
     // path, not the pacing machinery. In-session pair so both runs share
     // one environment.
     val pacedJson = if (skipScaling) "" else {
-      // Same estimator as head_sched (see its comment): one discarded
-      // warmup, then adjacent (unpaced, paced) pairs with alternating order;
-      // the overhead is the MEDIAN of per-pair tp ratios — the r5 first-cut
+      // Estimator: the first run in a fresh session pays JIT + codegen
+      // compile for the whole crawl path, so each arm gets one discarded
+      // warmup; then adjacent (unpaced, paced) pairs with alternating order,
+      // and the overhead is the MEDIAN of per-pair tp ratios — adjacent runs
+      // share their noise window and the ratio cancels it. The r5 first-cut
       // artifact proved cross-run max-tp picking under this VM's 1.5-2×
       // minute-scale drift can invert the sign of a ~10% effect.
       def run(p: Boolean): Double = {
@@ -569,7 +503,9 @@ object Bench {
       }
       run(p = false) // discarded warmup
       run(p = true)  // discarded warmup (paced-path codegen/JIT)
-      // 5 pairs for the same spike-tolerance reason as head_sched above
+      // 5 pairs, not 3: the r5 artifacts recorded single-run noise spikes of
+      // 2.8-4.5× (one per ~6 runs) — a median of 3 pair ratios tolerates
+      // one corrupted pair, a median of 5 tolerates two.
       val arms = Seq(false, true, true, false, false, true, true, false, false, true)
         .map(p => p -> run(p))
       def tpOf(p: Boolean) = arms.collect { case (`p`, t) => t }.max
@@ -593,7 +529,7 @@ object Bench {
       s"""{"metric":"total","value":${r1(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
         s""","fixture_sec":${r1(fixtureSec)},"simhash64_sec":${r1(sim64Sec)}""" +
         s""","crawl":{"pages":$benchPages,"fetched":$fetchedC,"sec":${r1(dtC)},"urls_per_sec":${r1(fetchedC / dtC)}}""" +
-        headJson + pacedJson + scaling + "}"
+        pacedJson + scaling + "}"
     // full-detail machine-readable copy; the stdout line is the harness
     // contract and must fit the harness's 2000-char log-tail window, so it
     // uses the (unique) qNN key prefixes, 2-decimal seconds, and

@@ -645,11 +645,11 @@ object SparkEntry {
       fetchedRows(eng)
     }),
 
-    // q51 runs with the head table ON: under non-binding budgets the head
-    // equals the frontier, so the DuckDB oracle stays exact while the
-    // head-scheduling path itself passes through the external hash gate
+    // q51 gates the frontier view itself (not the fetched log): after two
+    // BFS batches it must hold exactly the depth-2 layer the CTE derives —
+    // every row the expansion added, none that the batches consumed
     "q51_crawl_frontier" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, "q51_crawl_frontier", headTable = true)
+      val eng = crawlOracleEngine(s, dir, "q51_crawl_frontier")
       eng.run(2)
       eng.frontier().select(col("url_canon"), col("host"),
         col("depth").cast("long").as("depth"), col("seed_id"))
@@ -680,15 +680,19 @@ object SparkEntry {
       fetchedRows(eng)
     }),
 
-    // the same budget-bound crawl THROUGH THE HEAD TABLE (K = budget ×
-    // (compactEvery+1) per host): the sublinear scheduling path under
-    // genuinely binding budgets, gated by the identical batch-by-batch
-    // oracle — head == full is a theorem (K bound) verified externally here
+    // q70's budget-bound crawl with every batch run by a FRESH engine on
+    // the same state dir: four resumes under binding budgets, each reading
+    // the size caches back from the ledger. The engine picks the rank plan
+    // per engine (a fresh engine has no previous batch to predict from), so
+    // all four batches take the narrow plan where q70's single engine takes
+    // narrow, narrow, direct, direct — both plans sit behind one oracle.
     "q71_crawl_budget_head" -> ((s, dir) => {
-      val eng = crawlOracleEngine(s, dir, "q71_crawl_budget_head", headTable = true, budget = 2,
-        seeds = budgetSeeds)
-      eng.run(4)
-      fetchedRows(eng)
+      val corpus = crawlOracleCorpusCached(s, dir)
+      val st = scratchFresh("crawl_oracle_budget_resume")
+      val cfg = CrawlConfig(defaultHostBudget = 2, maxDepth = 64, shufflePartitions = 8)
+      new CrawlEngine(s, corpus, st, cfg).initialize(budgetSeeds)
+      (1 to 4).foreach(_ => new CrawlEngine(s, corpus, st, cfg).run(1))
+      fetchedRows(new CrawlEngine(s, corpus, st, cfg))
     }),
 
     // q70's crawl with the bloom prefilter ON (bloomMinSeen = 1: built at
@@ -857,19 +861,18 @@ object SparkEntry {
       fetchedRows(eng2)
     }),
 
-    // The q81 purge THROUGH THE HEAD-TABLE path: the purge leaves the
-    // in-memory head stale (its rows must leave the head before the next
-    // schedule); the engine invalidates it via the headValidAt mismatch and
-    // rebuilds from the purged frontier under the current config's K.
-    // Unbounded budget keeps head == frontier, so the identical purge
-    // oracle externally gates the invalidation machinery itself — a head
-    // that survives the purge would schedule a blocked row and fail the
-    // hash.
+    // The q81 purge with the bloom prefilter ON (bloomMinSeen = 1: built
+    // at batch 1), compaction every 2 batches (folds at batches 1 and 3)
+    // and a recent-tier cap of 1. The purging engine loads the bloom from
+    // batch 1's snapshot, inserts the purged keys as a recent tier, and that
+    // tier hits the cap, so the purge folds a fresh snapshot at batch 2.
+    // Batch 3 then probes outlinks through that folded bloom; a fold that
+    // lost a key would let its url be fetched twice and fail the hash.
     "q83_crawl_purge_head" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
-      val st = scratchFresh("crawl_oracle_purge_head")
+      val st = scratchFresh("crawl_oracle_purge_bloom")
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, headTable = true)
+        shufflePartitions = 8, bloomMinSeen = 1L, compactEvery = 2, bloomRecentCap = 1)
       val eng = new CrawlEngine(s, corpus, st, cfg)
       eng.initialize(oracleSeeds())
       eng.run(2)
@@ -1136,7 +1139,6 @@ object SparkEntry {
     * instead of leaking temp dirs; one dir per query, so no query can clear
     * another's state while its lazily-evaluated DataFrame still reads it). */
   private def crawlOracleEngine(s: SparkSession, dir: String, name: String,
-      headTable: Boolean = false,
       robots: Seq[(String, String)] = Nil,
       budget: Int = 1000000,
       seeds: Seq[Seed] = oracleSeeds(),
@@ -1148,7 +1150,7 @@ object SparkEntry {
     val st = scratchFresh("crawl_oracle_" + name)
     val corpus = crawlOracleCorpusCached(s, dir)
     val cfg0 = CrawlConfig(defaultHostBudget = budget, maxDepth = 64, shufflePartitions = 8,
-      headTable = headTable, robotsDisallow = robots,
+      robotsDisallow = robots,
       expansionCaps = caps, broadcastScheduled = broadcastScheduled,
       bloomMinSeen = bloomMinSeen, compactEvery = compactEvery)
     // robotsTxt: RAW per-host robots.txt folded in through the production
@@ -2088,6 +2090,7 @@ object SparkEntry {
 
     "q78_crawl_ledger" -> crawlBudgetOracleSql(batches = 4, budget = 2,
       ledger = true),
+    // q70's schedule with a fresh engine per batch
     "q71_crawl_budget_head" -> crawlBudgetOracleSql(batches = 4, budget = 2),
 
     "q79_crawl_rotate" -> crawlRotateOracleSql(b1 = 3, b2 = 3,
@@ -2096,7 +2099,7 @@ object SparkEntry {
 
     "q81_crawl_purge" -> crawlPurgeOracleSql(b1 = 2, b2 = 2, blockedU = 3L),
 
-    // same purge oracle through the head-table scheduling path
+    // same purge oracle with the bloom on and folding at the purge
     "q83_crawl_purge_head" -> crawlPurgeOracleSql(b1 = 2, b2 = 2, blockedU = 3L),
 
     "q80_crawl_summary" ->

@@ -96,14 +96,6 @@ case class Seed(seed_id: String, root_url: String,
  *                           out-of-cadence fold into a fresh snapshot —
  *                           bounds probe cost / driver memory / task-closure
  *                           size when compaction is off or its cadence long
- * @param headTable          sublinear scheduling (VERDICT r3 item 3):
- *                           maintain a per-host head table of the top
- *                           budget×(compactEvery+1) frontier candidates and
- *                           rank batches over IT instead of scanning the
- *                           full frontier — per-batch scheduling reads
- *                           become O(Σ budgets + deltas). Requires
- *                           compactEvery > 0 (the head rebuilds exactly at
- *                           every compaction, which bounds truncation loss)
  */
 case class CrawlConfig(
     defaultHostBudget: Int = 5,
@@ -125,7 +117,6 @@ case class CrawlConfig(
     corpusUnique: Boolean = false,
     probePushdownMaxKeys: Int = 1024,
     bloomRecentCap: Int = 16,
-    headTable: Boolean = false,
     /** parquet codec for every state/log write. Default snappy: on this
       * VM's local disk the parsed-log write is encode-CPU-bound, and
       * zstd measured 26% slower wall for 49% fewer bytes (549→282 MB per
@@ -189,10 +180,6 @@ class CrawlEngine(
 
   val store = new StateStore(spark, stateDir, cfg.logCodec)
 
-  require(!cfg.headTable || cfg.compactEvery > 0,
-    "headTable requires compactEvery > 0: the head rebuilds exactly at each " +
-      "compaction, which is what bounds its truncation loss")
-
   // literal IN-sets must reach parquet as OR-chains: above the default
   // threshold (10) Spark pushes only [min, max] — useless on random 64-bit
   // hashes. The keyed probes cap their sets at probePushdownMaxKeys. The
@@ -218,78 +205,6 @@ class CrawlEngine(
     withCanon.withColumnRenamed("url", "page_url")
   }
 
-  // ------------------------------------------------------------------
-  // Per-host head table (VERDICT r3 item 3 — sublinear scheduling).
-  //
-  // Without it, every batch window-ranks the FULL frontier even though only
-  // Σ host-budgets rows survive — at a 10^10-row frontier that scan+rank is
-  // the per-batch floor. The head table keeps, per host, the top K =
-  // budget × (compactEvery + 1) candidates by the exact scheduling order
-  // (priority_ts desc, url_hash asc). Batches rank the head instead.
-  //
-  // Exactness argument: a batch schedules the top `budget` rows per host.
-  // Between full rebuilds (every compactEvery batches, where the compaction
-  // already pays one full frontier scan) at most compactEvery × budget rows
-  // per host are consumed,
-  // and the incremental update (head ∖ processed ∪ adds, re-truncated to K)
-  // only ever drops rows whose rank in the union — and hence in the frontier
-  // (union ⊆ frontier) — exceeds K > compactEvery × budget + budget. So the
-  // true top-budget set per host is always ⊆ head: scheduling from the head
-  // equals scheduling from the full frontier (HeadTableSpec asserts
-  // equality; the K arithmetic is the proof sketch).
-  //
-  // Transients that can violate the argument get a same-batch full rebuild:
-  // robots rules newly blocking PRE-EXISTING frontier rows purge up to K
-  // head rows of a host at once (robotsBlockedCount > 0 ⇒ rebuild). No seen
-  // row can hide in the head: frontier ∩ seen = ∅ holds after every commit
-  // (the F2 note in runBatchImpl).
-  // ------------------------------------------------------------------
-
-  // The head lives IN MEMORY (VERDICT r4 item 1): r4 persisted it to parquet
-  // and re-read it every batch — a full write+read+rank, ~3 extra driver jobs
-  // per batch that measured 3.5× slower than full-frontier ranking at bench
-  // scale. Now each batch's head is a cached DataFrame over the PREVIOUS
-  // batch's cached head (∖ processed ∪ adds, re-ranked to K) — the compute
-  // rides the next batch's first scheduling action, so head maintenance adds
-  // zero driver jobs; lineage depth is bounded by compactEvery (full rebuild
-  // at every compaction). Nothing is ever persisted or resumed, which also
-  // removes the resume config-compatibility hazard (ADVICE r4: a persisted
-  // head truncated under a smaller K silently broke head==frontier
-  // equivalence when resumed under a larger budget): a fresh engine — or any
-  // `headValidAt` mismatch (rotation, purge, crash) — rebuilds from the
-  // frontier, one bounded rank, always under the CURRENT config's K.
-  private var headDf: DataFrame = _
-  /** previous head, kept cached until its successor materializes (the new
-    * head's plan reads it — unpersisting immediately would force a full
-    * lineage recompute at the next scheduling action). */
-  private var headRetired: DataFrame = _
-  private var headValidAt: Long = Long.MinValue
-
-  private def setHead(df: DataFrame, v: Long): Unit = {
-    if (headRetired != null) headRetired.unpersist()
-    headRetired = headDf
-    headDf = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    headValidAt = v
-  }
-
-  /** test/bench hook: rows in the live in-memory head (−1 when absent). */
-  private[graft] def headRows: Long = if (headDf == null) -1L else headDf.count()
-
-  /** Head view at `committed` — the live in-memory head, rebuilt from the
-    * frontier whenever it does not reflect `committed` exactly (fresh
-    * engine, resume, rotation, purge). */
-  private def headView(committed: Long): DataFrame = {
-    if (headDf == null || headValidAt != committed)
-      setHead(buildHead(frontier(committed)), committed)
-    headDf
-  }
-
-  /** Top-K-per-host of a frontier-shaped input, in the exact scheduling
-    * order. K is budget × (compactEvery + 1). */
-  private def buildHead(df: DataFrame): DataFrame =
-    topPerHost(df.filter($"depth" <= cfg.maxDepth), "_hr", cfg.compactEvery + 1L)
-      .select(emptyFrontier.columns.toIndexedSeq.map(col): _*)
-
   /** Largest / smallest configured per-host budget. */
   private val maxBudget: Int = (cfg.perHostBudget.values.toSeq :+ cfg.defaultHostBudget).max
   private val minBudget: Int = (cfg.perHostBudget.values.toSeq :+ cfg.defaultHostBudget).min
@@ -299,20 +214,20 @@ class CrawlEngine(
     if (cfg.perHostBudget.isEmpty) lit(cfg.defaultHostBudget)
     else coalesce(element_at(typedLit(cfg.perHostBudget), $"host"), lit(cfg.defaultHostBudget))
 
-  /** Rank `df` per host into column `rank` in the exact scheduling order
+  /** Rank `df` per host into `fetch_ordinal` in the exact scheduling order
     * (newest priority_ts first, url_hash tiebreak: a total,
-    * partitioning-independent order) and keep rows within `mult` × the
-    * host's budget. The literal bound on the LARGEST budget bounds a
-    * mega-host's rank: Spark plans it as a map-side WindowGroupLimit(Partial)
-    * when it is at most spark.sql.optimizer.windowGroupLimitThreshold
-    * (default 1000), so the host's rank task sorts at most map partitions ×
-    * bound rows, not its whole frontier. Exact: the per-host filter after it
-    * drops a superset of what it drops. */
-  private def topPerHost(df: DataFrame, rank: String, mult: Long): DataFrame =
-    df.withColumn(rank, row_number().over(
+    * partitioning-independent order) and keep rows within the host's
+    * budget. The literal bound on the LARGEST budget bounds a mega-host's
+    * rank: Spark plans it as a map-side WindowGroupLimit(Partial) when it is
+    * at most spark.sql.optimizer.windowGroupLimitThreshold (default 1000),
+    * so the host's rank task sorts at most map partitions × bound rows, not
+    * its whole frontier. Exact: the per-host filter after it drops a
+    * superset of what it drops. */
+  private def topPerHost(df: DataFrame): DataFrame =
+    df.withColumn("fetch_ordinal", row_number().over(
         Window.partitionBy($"host").orderBy($"priority_ts".desc, $"url_hash".asc)))
-      .filter(col(rank) <= lit(math.min(maxBudget * mult, Int.MaxValue).toInt))
-      .filter(col(rank) <= hostBudget * mult)
+      .filter($"fetch_ordinal" <= lit(maxBudget))
+      .filter($"fetch_ordinal" <= hostBudget)
 
   /** disallow + allow rules as one gating dim (r_allow marks carve-outs). */
   private lazy val robotsRuleRows: Seq[(String, String, Boolean)] =
@@ -697,7 +612,7 @@ class CrawlEngine(
       if (direct)
         // column order matched to the narrow plan's join output (url_hash
         // leads) so the two plans are drop-in interchangeable
-        topPerHost(eligible, "fetch_ordinal", 1L)
+        topPerHost(eligible)
           .select(($"url_hash" +: eligible.columns.filterNot(_ == "url_hash")
             .map(col).toSeq :+ $"fetch_ordinal"): _*)
       else
@@ -705,7 +620,7 @@ class CrawlEngine(
         // the key set; an unbounded batch (keys ≈ frontier) takes the direct
         // plan instead of a batch-sized broadcast
         eligible.join(
-          topPerHost(eligible.select($"url_hash", $"host", $"priority_ts"), "fetch_ordinal", 1L)
+          topPerHost(eligible.select($"url_hash", $"host", $"priority_ts"))
             .select($"url_hash", $"fetch_ordinal"),
           Seq("url_hash"))
     ranked.withColumn("sched_delay_ms", ($"fetch_ordinal" - 1) * hostDelay)
@@ -725,21 +640,16 @@ class CrawlEngine(
     val frontCount = frontierSize(committed)
 
     timed("bloom_ensure")(ensureBlobs(committed, seenCount))
-    // scheduling source: the head table (O(Σ budgets) rows) when enabled,
-    // else the full frontier view. Every stage downstream — robots gating,
-    // ranking — then reads head-bounded input; the full frontier is only
-    // read at compaction (head rebuild) and via the KEY-bounded membership
-    // probes. No seen check here: frontier ∩ seen = ∅ after every commit
-    // (F2, at the outlink probe below).
-    val candidates = if (cfg.headTable) timed("head_read")(headView(committed)) else front
 
     // ---- robots gating (north rule): RFC 9309 longest-match over the
-    // disallow + allow rule dims (see robotsBlockedOf).
+    // disallow + allow rule dims (see robotsBlockedOf), straight over the
+    // frontier view. No seen check here: frontier ∩ seen = ∅ after every
+    // commit (F2, at the outlink probe below).
     val robotsBlocked = if (!hasRobots) emptyFrontier
-      else robotsBlockedOf(candidates).persist()
+      else robotsBlockedOf(front).persist()
     val robotsBlockedCount = if (!hasRobots) 0L else robotsBlocked.count()
-    val allowed = if (!hasRobots) candidates
-      else candidates.join(robotsBlocked.select("url_hash"), Seq("url_hash"), "left_anti")
+    val allowed = if (!hasRobots) front
+      else front.join(robotsBlocked.select("url_hash"), Seq("url_hash"), "left_anti")
 
     // ---- W1/W3/F4 (rankBatch). Direct plan when no budget can bind (the
     // smallest covers the whole frontier) or the previous batch scheduled
@@ -1143,36 +1053,6 @@ class CrawlEngine(
       timed("bloom_fold")(refreshBloomAtCompaction(batchId, newSeenSize))
     }
 
-    // head-table maintenance: incremental O(|head| + batch) update per batch
-    // (remove processed, union this batch's adds, re-truncate to K in the
-    // exact scheduling order); FULL rebuild from the frontier view at every
-    // compaction (amortized — the compaction already scans the frontier) and
-    // whenever robots newly blocked pre-existing frontier rows (a purge can
-    // jump sub-head rows into the top-budget window before the next cadence
-    // rebuild). O(delta) by construction (VERDICT r4 item 1): the new head
-    // is a LAZY cached plan over the previous batch's cached head — no
-    // write, no read-back, no extra job; the small rank materializes inside
-    // the next batch's first scheduling action. A crash before the next
-    // batch simply rebuilds from the committed frontier (headView).
-    if (cfg.headTable) timed("head_update") {
-      val compacted = cfg.compactEvery > 0 && (batchId + 1) % cfg.compactEvery == 0
-      val src =
-        if (compacted || robotsBlockedCount > 0) frontier(batchId)
-        else {
-          // parquet-backed delta views (not this batch's in-memory frames):
-          // the head materializes lazily at the NEXT batch's first action,
-          // after this batch's caches are unpersisted — its plan must only
-          // reference durable inputs (the written deltas) + the cached head
-          val adds = store.readDeltaAdds("frontier", batchId - 1, batchId)
-            .map(_.drop("_add_batch")).getOrElse(emptyFrontier)
-          val dels = store.readDeltaDelKeys("frontier", batchId)
-            .getOrElse(emptySeen.select("url_hash"))
-          headView(committed).join(dels, Seq("url_hash"), "left_anti")
-            .unionByName(adds)
-        }
-      setHead(buildHead(src), batchId)
-    }
-
     val metrics = Map(
       "batch_id" -> batchId, "scheduled" -> schedCount, "fetched" -> inRange,
       "not_found" -> notFound,
@@ -1272,8 +1152,6 @@ class CrawlEngine(
       clusterPartitions = cfg.shufflePartitions, rowCount = Some(seenObs))
     val frontNow = frontObs.get("n").asInstanceOf[Long]
     val seenNow = seenObs.get("n").asInstanceOf[Long]
-    // rotation rewrites the frontier base ⇒ the in-memory head is stale;
-    // headValidAt no longer matches, so the next batch rebuilds it lazily
     // the in-memory bloom keeps the forgotten keys — a harmless
     // false-positive superset resolved by the exact membership check. No
     // snapshot is persisted here: the new seen base is NEWER than the bloom
@@ -1327,11 +1205,11 @@ class CrawlEngine(
    * normal batch). Call after CHANGING robots rules over an existing state
    * dir: discovery-time gating keeps blocked urls out of the frontier under
    * stable rules, so pre-existing blocked rows only arise from a rule
-   * change — and with the head table enabled, per-batch candidate gating
-   * would otherwise drain them only head-K rows at a time while the host's
-   * allowed rows starve behind them. Purged rows enter `seen`
-   * (blocked ≡ never fetch, same as batch-time gating). Costs one full
-   * frontier scan — the explicit price of a rule change, paid once.
+   * change. The next batch's gating would drop them too, but only as a
+   * side effect of scheduling; the purge commits the rule change as its own
+   * version, before any batch runs under the new rules. Purged rows enter
+   * `seen` (blocked ≡ never fetch, same as batch-time gating). Costs one
+   * full frontier scan — the explicit price of a rule change, paid once.
    * Returns the number of rows purged.
    */
   def purgeRobotsBlocked(): Long = {
@@ -1341,14 +1219,17 @@ class CrawlEngine(
     val blocked = robotsBlockedOf(frontier(committed)).persist()
     val n = blocked.count()
     if (n == 0) { blocked.unpersist(); return 0L }
+    // rules are fixed per engine, so a rule change purges in an engine that
+    // has not run a batch yet: load the bloom here (a no-op once loaded) so
+    // the purged keys take the same recent-tier insert and cap fold as in
+    // an engine that has
+    ensureBlobs(committed, seenSize(committed))
     store.writeDeltaDels("frontier", batchId, blocked.select("url_hash"))
     store.writeDeltaAdds("seen", batchId, blocked
       .withColumn("first_batch", lit(batchId))
       .select("url_hash", "url_canon", "first_batch"))
     val newSeen = seenSize(committed) + n
     val newFront = frontierSize(committed) - n
-    // the in-memory head goes stale (purged rows must leave it) — the
-    // headValidAt mismatch makes the next batch rebuild from the frontier
     if (bloomBc != null) {
       addRecentTier(buildShardBlobs(blocked.select("url_hash"), perShardCapFor(n)))
       // same recent-tier cap runBatch applies (ADVICE r4): repeated purges —
@@ -1378,7 +1259,6 @@ class CrawlEngine(
     store.expireBefore("seen", committed)
     store.expireSnapshotsBefore("bloom", committed)
     store.expireSnapshotsBefore("seeds", committed)
-    store.expireSnapshotsBefore("head", committed)
   }
 
   /** Post-run materialized summary (S17 analog: the reference pre-builds

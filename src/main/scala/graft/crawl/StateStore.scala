@@ -235,12 +235,6 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     else Some(readCached(s"adds:$table", None, ids.map(addDir(table, _).toString)))
   }
 
-  /** The del-key set one batch wrote, as a url_hash column (parquet-backed —
-    * safe to reference from plans that materialize after the batch's
-    * in-memory frames are unpersisted, e.g. the lazy head update). */
-  def readDeltaDelKeys(table: String, batch: Long): Option[DataFrame] =
-    readDeltaDels(table, batch - 1, batch).map(_.select(col("_del_hash").as("url_hash")))
-
   private def readDeltaDels(table: String, afterExcl: Long, upToIncl: Long): Option[DataFrame] = {
     val ids = listIds(rootPath.resolve(table).resolve("delta_del"), "batch=", afterExcl, upToIncl)
     if (ids.isEmpty) None

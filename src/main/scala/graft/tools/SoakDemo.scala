@@ -34,12 +34,9 @@ object SoakDemo {
     val pages = PagesGen.pages(spark, n, 8).toDF().persist()
     val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
     val base = PagesGen.BaseTsMillis
-    // GRAFT_SOAK_HEAD=1: run the whole soak (rotations, compactions, GC,
-    // restarts) through the per-host head-table scheduling path
     val cfg = CrawlConfig(defaultHostBudget = 6, maxDepth = 64,
       shufflePartitions = 8, bloomMinSeen = 64, compactEvery = 3,
-      saltBuckets = 4,
-      headTable = sys.env.get("GRAFT_SOAK_HEAD").contains("1"))
+      saltBuckets = 4)
 
     // window 0 ends 12h before the corpus anchor so later windows re-open it
     val end0 = new java.sql.Timestamp(base - 12L * 3600_000L)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.crawl._
-import graft.functions.TextExtract
+import graft.functions.{TextExtract, gf}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,7 +39,6 @@ class CrawlSpec extends AnyFunSuite {
   def seeds(k: Int): Seq[Seed] = PagesGen.seedRows(N, k).map(Seed.tupled)
 
   test("invariant: extract_text(html) == text for every generated page (input_hint)") {
-    import graft.functions.gf
     val bad = pagesDF
       .withColumn("t2", gf.extract_text_bin($"html"))
       .filter(!($"t2" <=> $"text"))
@@ -141,6 +140,47 @@ class CrawlSpec extends AnyFunSuite {
     check(resumed, "resume")
   }
 
+  test("keyed seen probe: back-links to already-fetched pages never re-enter the frontier") {
+    // root r links to 20 pages a_i, a_i links to b_i, and every b_i links
+    // back to r and to all 20 a_j. Batch 2 expands 420 links onto 21
+    // distinct seen urls — below probePushdownMaxKeys, so the keyed seen read
+    // alone must find all 21; each one it missed would be fetched again.
+    val base = PagesGen.BaseTsMillis
+    val host = "https://hk.example.test"
+    val r = s"$host/r"
+    def a(i: Int) = s"$host/a/$i"
+    def b(i: Int) = s"$host/b/$i"
+    def links(us: Seq[String]) = us.map(u => s"""<a href="$u">x</a>""").mkString(" ")
+    def mk(url: String, ageMin: Int, html: String) =
+      Page(url, new java.sql.Timestamp(base - ageMin * 60000L), html.getBytes("UTF-8"),
+        TextExtract.extractText(html), "en")
+    val n = 20
+    val back = links(r +: (0 until n).map(a))
+    val pages = (mk(r, 0, links((0 until n).map(a)) + " root") +:
+      ((0 until n).map(i => mk(a(i), 1 + i, links(Seq(b(i))) + s" a$i")) ++
+        (0 until n).map(i => mk(b(i), 100 + i, back + s" b$i")))).toDF
+    val seed = Seed("s", r, new java.sql.Timestamp(base - 86400000L),
+      new java.sql.Timestamp(base + 86400000L))
+    // bloom off (every key flagged) and on (built at batch 1)
+    for (minSeen <- Seq(Long.MaxValue, 1L)) {
+      val cfg = CrawlConfig(defaultHostBudget = 1000, shufflePartitions = 4, maxDepth = 8,
+        bloomMinSeen = minSeen)
+      val eng = new CrawlEngine(spark, pages, tmp(), cfg)
+      eng.initialize(Seq(seed))
+      val ms = eng.run(5)
+      val f = eng.fetched().get
+      val linksPerBatch = f.groupBy("batch_id").agg(sum("n_outlinks")).collect().map(_.getLong(1))
+      assert(linksPerBatch.max == n * (n + 1) && linksPerBatch.max <= cfg.probePushdownMaxKeys,
+        "premise: batch 2's back-links take the keyed probe")
+      assert(f.count() == 1 + 2 * n, s"bloomMinSeen=$minSeen: fetched ${f.count()} rows")
+      assert(f.groupBy("url_hash").count().filter($"count" > 1).count() == 0,
+        s"bloomMinSeen=$minSeen: a url was fetched twice")
+      assert(ms.map(_("scheduled")) == Seq(1L, n.toLong, n.toLong),
+        s"bloomMinSeen=$minSeen: schedule ${ms.map(_("scheduled"))}")
+      assert(ms.last("frontier_size") == 0L)
+    }
+  }
+
   test("bloom prefilter never drops a never-seen url (no false negatives)") {
     // direct property on the aggregate + broadcast probe (snapshot tier)
     val hashes = spark.range(0, 2000).select(xxhash64($"id").as("h"))
@@ -212,9 +252,8 @@ class CrawlSpec extends AnyFunSuite {
   test("resume: kill right after a rotation == uninterrupted rotate+run (r5)") {
     // rotateWindows commits as its own versioned batch (state ROTATED); a
     // kill on that boundary must resume into the SAME phase-2 schedule as
-    // an uninterrupted engine — both arms on the same config, so a
-    // systemic resume drift can't cancel out (unlike the head-vs-full
-    // rotation test, where both arms resume).
+    // an uninterrupted engine — both arms on the same config, and only one
+    // arm resumes, so a systemic resume drift can't cancel out.
     val dirA = tmp(); val dirB = tmp()
     val cfg = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, maxDepth = 16)
     val newEnd = new java.sql.Timestamp(PagesGen.BaseTsMillis + 3600_000L)
@@ -328,6 +367,49 @@ class CrawlSpec extends AnyFunSuite {
     assert(eng.frontier().filter($"host" === megaHost).count() == 0)
   }
 
+  /** Every page as a depth-0 frontier row: rows the robots rules block are
+    * already in the frontier, as after a rule change. */
+  private def preload = pagesDF.select($"url",
+    gf.canonicalize_url($"url").as("url_canon"),
+    xxhash64(gf.canonicalize_url($"url")).as("url_hash"),
+    gf.url_host($"url").as("host"),
+    lit(0).as("depth"), $"warc_ts".as("priority_ts"), lit("pre").as("seed_id"),
+    lit(new java.sql.Timestamp(0L)).as("since_ts"),
+    lit(new java.sql.Timestamp(PagesGen.BaseTsMillis + 86400000L)).as("end_ts"),
+    lit(-1L).as("discovered_batch"))
+
+  private val megaRules = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
+    maxDepth = 8, compactEvery = 3, bloomMinSeen = 1,
+    robotsDisallow = Seq(("h0.example.test", "/u/")),
+    robotsAllow = Seq(("h0.example.test", "/u/1/")))
+
+  private def blockedFetches(e: CrawlEngine): Long = e.fetched().get
+    .filter($"host" === "h0.example.test" &&
+      !$"url_canon".startsWith("https://h0.example.test/u/1/")).count()
+
+  test("rule change over pre-existing frontier: purgeRobotsBlocked drops the blocked rows once") {
+    val eng = new CrawlEngine(spark, pagesDF, tmp(), megaRules)
+    eng.initializeWithFrontier(preload)
+    assert(eng.purgeRobotsBlocked() > 0, "premise: the preload holds blocked rows")
+    val ms = eng.run(6)
+    // the purge left no blocked row for batch gating to find
+    assert(ms.map(_("robots_blocked")).sum == 0)
+    assert(blockedFetches(eng) == 0, "a blocked url was fetched")
+    // the purge is idempotent
+    assert(eng.purgeRobotsBlocked() == 0L)
+  }
+
+  test("without the purge, the first batch gates every pre-existing blocked row and none is fetched") {
+    val eng = new CrawlEngine(spark, pagesDF, tmp(), megaRules)
+    eng.initializeWithFrontier(preload)
+    val ms = eng.run(3)
+    // gating reads the whole frontier view, so batch 0 drops every blocked
+    // row and discovery-time gating keeps new ones out
+    assert(ms.head("robots_blocked") > 0, "premise: the preload holds blocked rows")
+    assert(ms.tail.map(_("robots_blocked")).sum == 0)
+    assert(blockedFetches(eng) == 0, "a blocked url was fetched")
+  }
+
   test("robots Allow carve-out: longer allow overrides host disallow end-to-end (RFC 9309 §2.2.2)") {
     val h = "rb.example.test"
     val base = PagesGen.BaseTsMillis
@@ -429,7 +511,6 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("pre-canonicalized corpus (bucketed-table contract): crawl results identical to computed-canon path") {
-    import graft.functions.gf
     val pagesCanon = pagesDF.withColumn("url_canon", gf.canonicalize_url($"url"))
     val cfg = CrawlConfig(defaultHostBudget = 4, shufflePartitions = 4)
     val a = new CrawlEngine(spark, pagesCanon, tmp(), cfg)
@@ -711,139 +792,6 @@ class CrawlResilienceSpec extends org.scalatest.funsuite.AnyFunSuite {
     def f(e: CrawlEngine) = e.fetched().get.select("url_hash", "batch_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(f(eng2) == f(ref), "retry after crash diverges from clean run")
-  }
-}
-
-/** Per-host head table — sublinear scheduling (VERDICT r3 item 3): batches
-  * rank a bounded top-K-per-host head instead of scanning the full frontier,
-  * with results EXACTLY equal to full-frontier scheduling. */
-class HeadTableSpec extends org.scalatest.funsuite.AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import graft.crawl._
-  import graft.functions.gf
-  import spark.implicits._
-  private def tmp(): String = java.nio.file.Files.createTempDirectory("graft_head").toString
-
-  val N = 2048L
-  lazy val pagesDF = PagesGen.pages(spark, N, partitions = 4).toDF.persist()
-
-  /** Bench-style preloaded frontier: every page is already a frontier row
-    * (the 10^10-frontier model), so scheduling cost is frontier-dominated. */
-  private def preload = {
-    val wideSince = new java.sql.Timestamp(0L)
-    val wideEnd = new java.sql.Timestamp(PagesGen.BaseTsMillis + 86400000L)
-    pagesDF.select($"url",
-      gf.canonicalize_url($"url").as("url_canon"),
-      xxhash64(gf.canonicalize_url($"url")).as("url_hash"),
-      gf.url_host($"url").as("host"),
-      lit(0).as("depth"),
-      $"warc_ts".as("priority_ts"),
-      lit("pre").as("seed_id"),
-      lit(wideSince).as("since_ts"),
-      lit(wideEnd).as("end_ts"),
-      lit(-1L).as("discovered_batch"))
-  }
-
-  private def fetchKey(e: CrawlEngine) = e.fetched().get
-    .select("url_hash", "batch_id", "fetch_ordinal")
-    .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-  private def seenKey(e: CrawlEngine) =
-    e.seen().select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
-  private def frontKey(e: CrawlEngine) =
-    e.frontier().select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
-
-  test("scheduling from the head == scheduling from the full frontier (order + ordinals exact)") {
-    val cfgBase = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
-      maxDepth = 8, compactEvery = 3, bloomMinSeen = 1)
-    val a = new CrawlEngine(spark, pagesDF, tmp(), cfgBase.copy(headTable = true))
-    val b = new CrawlEngine(spark, pagesDF, tmp(), cfgBase)
-    a.initializeWithFrontier(preload); b.initializeWithFrontier(preload)
-    val msA = a.run(7); val msB = b.run(7)
-    assert(msA.map(_("scheduled")) == msB.map(_("scheduled")))
-    assert(fetchKey(a) == fetchKey(b), "head-table scheduling diverged from full-frontier scheduling")
-    assert(seenKey(a) == seenKey(b))
-    assert(frontKey(a) == frontKey(b))
-  }
-
-  test("scheduling reads are bounded by budgets: head rows <= hosts × budget × (compactEvery+1), not O(|frontier|)") {
-    val C = 3
-    val budget = 3
-    val dir = tmp()
-    val eng = new CrawlEngine(spark, pagesDF, dir,
-      CrawlConfig(defaultHostBudget = budget, shufflePartitions = 4,
-        maxDepth = 8, compactEvery = C, bloomMinSeen = 1, headTable = true))
-    eng.initializeWithFrontier(preload)
-    val nHosts = PagesGen.numHosts(N)
-    val bound = nHosts * budget * (C + 1)
-    // the live in-memory head (the rank stage's scan input) is bounded after
-    // EVERY batch — the r5 head is never persisted, so the hook counts it
-    (1 to 5).foreach { i =>
-      eng.runBatch()
-      val rows = eng.headRows
-      assert(rows >= 0, s"batch $i: no live head")
-      assert(rows <= bound,
-        s"batch $i: head has $rows rows — exceeds the Σ budgets bound $bound")
-    }
-    val frontierRows = eng.frontier().count()
-    assert(frontierRows > 1000, s"test premise: a big frontier (got $frontierRows)")
-    assert(eng.headRows <= bound && frontierRows > bound,
-      "premise: the head bound must be genuinely smaller than the frontier")
-  }
-
-  test("rule change over pre-existing frontier: purgeRobotsBlocked restores head/full parity in one batch") {
-    val mega = "h0.example.test"
-    val cfgBase = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
-      maxDepth = 8, compactEvery = 3, bloomMinSeen = 1,
-      robotsDisallow = Seq((mega, "/u/")), robotsAllow = Seq((mega, "/u/1/")))
-    val a = new CrawlEngine(spark, pagesDF, tmp(), cfgBase.copy(headTable = true))
-    val b = new CrawlEngine(spark, pagesDF, tmp(), cfgBase)
-    // preloaded frontier rows the new rules block (the rule-change scenario)
-    a.initializeWithFrontier(preload); b.initializeWithFrontier(preload)
-    val pa = a.purgeRobotsBlocked(); val pb = b.purgeRobotsBlocked()
-    assert(pa > 0 && pa == pb, s"purge must drop the same blocked set ($pa vs $pb)")
-    val msA = a.run(6); val msB = b.run(6)
-    // steady state after the purge: no residual blocked candidates
-    assert(msA.map(_("robots_blocked")).sum == 0)
-    assert(msA.map(_("robots_blocked")) == msB.map(_("robots_blocked")))
-    assert(fetchKey(a) == fetchKey(b), "head scheduling diverged after a robots purge")
-    assert(frontKey(a) == frontKey(b))
-    assert(seenKey(a) == seenKey(b))
-    // the purge is idempotent
-    assert(a.purgeRobotsBlocked() == 0L)
-  }
-
-  test("without the purge, head candidate gating still never fetches a blocked url (defense in depth)") {
-    val mega = "h0.example.test"
-    val eng = new CrawlEngine(spark, pagesDF, tmp(),
-      CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
-        maxDepth = 8, compactEvery = 3, bloomMinSeen = 1, headTable = true,
-        robotsDisallow = Seq((mega, "/u/")), robotsAllow = Seq((mega, "/u/1/"))))
-    eng.initializeWithFrontier(preload)
-    val ms = eng.run(3)
-    assert(ms.map(_("robots_blocked")).sum > 0, "head gating should purge incrementally")
-    val badFetch = eng.fetched().get
-      .filter($"host" === mega && !$"url_canon".startsWith(s"https://$mega/u/1/")).count()
-    assert(badFetch == 0, "a blocked url was fetched")
-  }
-
-  test("rotation rebuilds the head; resume picks it up (crawl-grown frontier)") {
-    def seeds(k: Int) = PagesGen.seedRows(N, k).map(Seed.tupled)
-    val cfgBase = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
-      maxDepth = 16, compactEvery = 3, bloomMinSeen = 1)
-    val dirA = tmp(); val dirB = tmp()
-    val a = new CrawlEngine(spark, pagesDF, dirA, cfgBase.copy(headTable = true))
-    val b = new CrawlEngine(spark, pagesDF, dirB, cfgBase)
-    a.initialize(seeds(6)); b.initialize(seeds(6))
-    a.run(3); b.run(3)
-    val newEnd = new java.sql.Timestamp(PagesGen.BaseTsMillis + 3600_000L)
-    a.rotateWindows(newEnd); b.rotateWindows(newEnd)
-    // resume in fresh engines (the in-memory head rebuilds from the frontier)
-    val a2 = new CrawlEngine(spark, pagesDF, dirA, cfgBase.copy(headTable = true))
-    val b2 = new CrawlEngine(spark, pagesDF, dirB, cfgBase)
-    a2.run(3); b2.run(3)
-    assert(fetchKey(a2) == fetchKey(b2), "post-rotation head scheduling diverged")
-    assert(seenKey(a2) == seenKey(b2))
-    assert(frontKey(a2) == frontKey(b2))
   }
 }
 
@@ -1188,30 +1136,26 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("a robots purge folds the recent tier at the cap instead of exceeding it (ADVICE r4)") {
-    import graft.functions.gf
     val mega = "h0.example.test"
-    // head-bounded candidate gating leaves blocked rows in the frontier
-    // (only head-K are gated per batch), so the purge has real work
-    val eng = new CrawlEngine(spark, pagesDF, tmp(),
-      CrawlConfig(defaultHostBudget = 2, shufflePartitions = 4,
-        bloomMinSeen = 1, compactEvery = 8, headTable = true, bloomRecentCap = 2,
-        robotsDisallow = Seq((mega, "/u/"))))
-    val preload = pagesDF.select($"url",
-      gf.canonicalize_url($"url").as("url_canon"),
-      xxhash64(gf.canonicalize_url($"url")).as("url_hash"),
-      gf.url_host($"url").as("host"),
-      lit(0).as("depth"), $"warc_ts".as("priority_ts"), lit("pre").as("seed_id"),
-      lit(new java.sql.Timestamp(0L)).as("since_ts"),
-      lit(new java.sql.Timestamp(PagesGen.BaseTsMillis + 86400000L)).as("end_ts"),
-      lit(-1L).as("discovered_batch"))
-    eng.initializeWithFrontier(preload)
-    eng.run(2) // batch 2 builds the bloom + appends one recent tier
+    // blocked frontier rows come from a rule change: crawl without rules,
+    // then purge in a new engine that has the rule
+    val dir = tmp()
+    val cfg = CrawlConfig(defaultHostBudget = 2, shufflePartitions = 4,
+      bloomMinSeen = 1, compactEvery = 8, bloomRecentCap = 2)
+    val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
+    eng.initialize(seeds(8))
+    eng.run(2) // batch 1 builds the bloom + appends one recent tier
     assert(eng.bloomRecentTiers == 1, s"premise: one live tier, got ${eng.bloomRecentTiers}")
-    val purged = eng.purgeRobotsBlocked()
+    val purger = new CrawlEngine(spark, pagesDF, dir, cfg.copy(robotsDisallow = Seq((mega, "/u/"))))
+    val purged = purger.purgeRobotsBlocked()
     assert(purged > 0, "premise: the purge must have blocked frontier rows to drop")
-    // the purge's appended tier hit the cap (2) — it must FOLD, not exceed it
-    assert(eng.bloomRecentTiers == 0,
-      s"purge left ${eng.bloomRecentTiers} recent tiers — cap fold did not run")
+    // the purge loads the bloom (batch 1's tier replays as one tier) and its
+    // appended tier hits the cap (2) — it must FOLD, not exceed it
+    assert(purger.bloomRecentTiers == 0,
+      s"purge left ${purger.bloomRecentTiers} recent tiers — cap fold did not run")
+    val v = purger.store.committedBatch
+    assert(purger.store.latestVersion("bloom", v).contains(v),
+      "the cap fold must persist a bloom snapshot at the purge's version")
   }
 
   test("bloom lifecycle: one full build, then incremental; resume loads snapshot + replays deltas") {
