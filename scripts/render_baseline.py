@@ -7,9 +7,12 @@ This script makes drift impossible: the block between the AUTOGEN markers in
 BASELINE.md is regenerated verbatim from BENCH_LOCAL.json, so every measured
 number in that section is reproducible from one committed artifact.
 
-Usage:  python3 scripts/render_baseline.py [BENCH_LOCAL.json] [BASELINE.md]
-        (defaults to the repo-root files; rewrites BASELINE.md in place)
+Usage:  python3 scripts/render_baseline.py [--check] [BENCH_LOCAL.json] [BASELINE.md]
+        (defaults to the repo-root files; rewrites BASELINE.md in place.
+        --check writes nothing: it exits 1 if the rendered block differs from
+        the committed one, so a CI step or a pre-commit run catches drift)
 """
+import argparse
 import json
 import statistics
 import sys
@@ -143,22 +146,32 @@ def render(d):
 
 
 def main():
-    bench_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_LOCAL.json"
-    md_path = sys.argv[2] if len(sys.argv) > 2 else "BASELINE.md"
-    with open(bench_path) as f:
+    ap = argparse.ArgumentParser(description="render BASELINE.md's AUTOGEN block")
+    ap.add_argument("--check", action="store_true",
+                    help="exit 1 if the committed block differs; write nothing")
+    ap.add_argument("bench", nargs="?", default="BENCH_LOCAL.json")
+    ap.add_argument("md", nargs="?", default="BASELINE.md")
+    args = ap.parse_args()
+    with open(args.bench) as f:
         d = json.load(f)
     block = render(d)
-    with open(md_path) as f:
-        md = f.read()
-    if BEGIN in md and END in md:
-        pre = md.split(BEGIN)[0]
-        post = md.split(END, 1)[1]
+    with open(args.md) as f:
+        old = f.read()
+    if BEGIN in old and END in old:
+        pre = old.split(BEGIN)[0]
+        post = old.split(END, 1)[1]
         md = pre + block + post
     else:
-        md = md.rstrip() + "\n\n" + block + "\n"
-    with open(md_path, "w") as f:
+        md = old.rstrip() + "\n\n" + block + "\n"
+    if args.check:
+        if md != old:
+            print(f"{args.md} drifted from {args.bench}: re-run without --check", file=sys.stderr)
+            sys.exit(1)
+        print(f"{args.md} matches {args.bench}")
+        return
+    with open(args.md, "w") as f:
         f.write(md)
-    print(f"rendered {bench_path} -> {md_path}")
+    print(f"rendered {args.bench} -> {args.md}")
 
 
 if __name__ == "__main__":

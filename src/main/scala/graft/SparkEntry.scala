@@ -695,11 +695,12 @@ object SparkEntry {
       fetchedRows(new CrawlEngine(s, corpus, st, cfg))
     }),
 
-    // q70's crawl with the bloom prefilter ON (bloomMinSeen = 1: built at
-    // batch 1) and compaction every 2 batches (a fold at batch 1, another at
-    // batch 3): every later outlink seen probe reads only the keys the bloom
-    // flags, so this gates the bloom behind DuckDB — no other oracle crawl
-    // reaches the default bloomMinSeen. The engine still picks the rank plan
+    // q70's crawl with the bloom prefilter ON (bloomMinSeen = 1) and
+    // compaction every 2 batches: a filter is built over the seen base at
+    // each compaction (batches 1 and 3), and every later outlink seen probe
+    // reads the base only for the keys that filter flags, so this gates the
+    // bloom behind DuckDB — no other oracle crawl reaches the default
+    // bloomMinSeen. The engine still picks the rank plan
     // per batch: batches 0-1 run narrow and 2-3 direct on this fixture.
     "q84_crawl_budget_direct" -> ((s, dir) => {
       val eng = crawlOracleEngine(s, dir, "q84_crawl_budget_direct", budget = 2,
@@ -861,18 +862,19 @@ object SparkEntry {
       fetchedRows(eng2)
     }),
 
-    // The q81 purge with the bloom prefilter ON (bloomMinSeen = 1: built
-    // at batch 1), compaction every 2 batches (folds at batches 1 and 3)
-    // and a recent-tier cap of 1. The purging engine loads the bloom from
-    // batch 1's snapshot, inserts the purged keys as a recent tier, and that
-    // tier hits the cap, so the purge folds a fresh snapshot at batch 2.
-    // Batch 3 then probes outlinks through that folded bloom; a fold that
-    // lost a key would let its url be fetched twice and fail the hash.
+    // The q81 purge with the bloom prefilter ON (bloomMinSeen = 1) and
+    // compaction every 2 batches, so a filter is built over the seen bases
+    // of batches 1 and 3. The purge (batch 2) does no bloom work: the purged
+    // keys go to a seen delta. Batch 3 loads the filter of the batch-1 base
+    // and probes its outlinks through it while the purged keys sit in that
+    // delta, which the keyed seen read takes for every link key; a probe
+    // that missed a purged or delta key would let its url be fetched and
+    // fail the hash.
     "q83_crawl_purge_head" -> ((s, dir) => {
       val corpus = crawlOracleCorpusCached(s, dir)
       val st = scratchFresh("crawl_oracle_purge_bloom")
       val cfg = CrawlConfig(defaultHostBudget = 1000000, maxDepth = 64,
-        shufflePartitions = 8, bloomMinSeen = 1L, compactEvery = 2, bloomRecentCap = 1)
+        shufflePartitions = 8, bloomMinSeen = 1L, compactEvery = 2)
       val eng = new CrawlEngine(s, corpus, st, cfg)
       eng.initialize(oracleSeeds())
       eng.run(2)
@@ -2099,7 +2101,7 @@ object SparkEntry {
 
     "q81_crawl_purge" -> crawlPurgeOracleSql(b1 = 2, b2 = 2, blockedU = 3L),
 
-    // same purge oracle with the bloom on and folding at the purge
+    // same purge oracle with the bloom on
     "q83_crawl_purge_head" -> crawlPurgeOracleSql(b1 = 2, b2 = 2, blockedU = 3L),
 
     "q80_crawl_summary" ->

@@ -61,6 +61,15 @@ case class Seed(seed_id: String, root_url: String,
  *                           host is paced whole by one task, so no host is
  *                           fetched faster than its delay budget
  * @param bloomShards        seen-set prefilter shards
+ * @param bloomMinSeen       smallest seen base that gets a bloom filter.
+ *                           Each filter covers exactly one seen base and is
+ *                           built where that base is written (compaction,
+ *                           rotation): one scan of the base's 8 B/row key
+ *                           column, O(|seen|), on a batch that rewrites the
+ *                           whole seen base anyway, so the cost stays
+ *                           amortized O(|state|/compactEvery). With
+ *                           compactEvery = 0 no base is written after
+ *                           initialize and no filter is ever built
  * @param robotsDisallow     (host, path-prefix) disallow gating rules (north
  *                           rule); evaluated with RFC 9309 §2.2.2
  *                           longest-match precedence against robotsAllow
@@ -92,10 +101,6 @@ case class Seed(seed_id: String, root_url: String,
  *                           the r3 default of 4096 crashed the first real
  *                           politeness-bounded crawl that collected that
  *                           many link keys)
- * @param bloomRecentCap     max per-batch bloom delta blobs held before an
- *                           out-of-cadence fold into a fresh snapshot —
- *                           bounds probe cost / driver memory / task-closure
- *                           size when compaction is off or its cadence long
  */
 case class CrawlConfig(
     defaultHostBudget: Int = 5,
@@ -116,7 +121,6 @@ case class CrawlConfig(
     compactEvery: Int = 8,
     corpusUnique: Boolean = false,
     probePushdownMaxKeys: Int = 1024,
-    bloomRecentCap: Int = 16,
     /** parquet codec for every state/log write. Default snappy: on this
       * VM's local disk the parsed-log write is encode-CPU-bound, and
       * zstd measured 26% slower wall for 49% fewer bytes (549→282 MB per
@@ -148,16 +152,21 @@ case class CrawlConfig(
  *    check against seen/frontier is inverted into a broadcast-semi of the
  *    bounded batch keys against the big table, then a broadcast anti-join of
  *    the tiny match set back — no sort-merge of 10^10 rows anywhere;
- *  - **the bloom prefilter is maintained incrementally and lives executor-
- *    side**, in front of the one seen check whose answer is unknown (the
- *    outlink keys at expansion; frontier ∩ seen = ∅ needs none): built
- *    once (or loaded from its persisted snapshot + an executor-side replay
- *    of seen-deltas), the snapshot tier rides a real
- *    `SparkContext.broadcast` (shipped once, cached deserialized per
- *    executor — never a plan Literal, never a driver field of O(|seen|));
- *    per-batch inserts become small executor-built delta blobs folded into
- *    the next snapshot at compaction — the driver never materializes a key
- *    set (total filter size = ~1.2 bytes/key at fpp 0.01);
+ *  - **one bloom filter per seen base, built executor-side**, in front of
+ *    the one seen check whose answer is unknown (the outlink keys at
+ *    expansion; frontier ∩ seen = ∅ needs none). `bloom/v=B` is the filter
+ *    of `seen/base/v=B` and nothing else: seen bases are immutable and seen
+ *    has no delete deltas, so the filter never needs a delete or an
+ *    insert. It is built where a base of ≥ `bloomMinSeen` rows is written
+ *    (compaction, rotation) by one scan of the base's key column — O(|seen|)
+ *    on a batch that rewrites the seen base anyway, so amortized
+ *    O(|state|/compactEvery); with compactEvery = 0 no filter is built. A
+ *    new engine loads the persisted filter of its latest base. The filter
+ *    rides a real `SparkContext.broadcast` (shipped once, cached
+ *    deserialized per executor — never a plan Literal, never a driver field
+ *    of O(|seen|)); ~1.2 bytes/key at fpp 0.01. The keyed seen read takes
+ *    the base for the keys the filter flags and the post-base seen deltas
+ *    (O(batch × compactEvery) rows) for every key;
  *  - **membership probes are key-bounded**: batch-bounded probe key sets
  *    are pushed as literal predicates into the range-clustered,
  *    bucket-partitioned state bases (StateStore.readViewKeyed), so the
@@ -387,183 +396,84 @@ class CrawlEngine(
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(stateDir, "_STOP"))
 
   // ------------------------------------------------------------------
-  // Incremental bloom prefilter lifecycle (U4/O5 — VERDICT r2 item 2):
-  // EXECUTOR-resident. Tier 1 (the snapshot at the last compaction) rides a
-  // real SparkContext.broadcast — torrent-shipped once, deserialized once per
-  // executor (BloomProbeBroadcast cache); the driver keeps only the handle,
-  // never a field sized O(|seen|), and the plan never embeds the blobs as a
-  // Literal. Tier 2 (per-batch deltas since the snapshot, ≤ compactEvery
-  // entries of O(batch) bytes each) is built EXECUTOR-SIDE by the bloom_build
-  // aggregate — the driver collects S blob rows per batch, never a key set —
-  // and each tier likewise ships as a real broadcast (VERDICT r4 item 2:
-  // closure-embedded tiers made every task O(batch) bytes — the recorded
-  // 3.5 MiB large-task warning at sf0.1).
-  // At compaction the tiers fold EXECUTOR-SIDE (bloom_merge over snapshot
-  // blob rows ∪ post-snapshot seen-delta keys) into the next snapshot.
+  // Seen-base bloom filter (U4/O5): `bloom/v=B` is the filter of
+  // `seen/base/v=B` and nothing else. Seen bases are immutable and seen has
+  // no delete deltas, so a filter never takes an insert, a fold or a
+  // delete: keys added after B sit in the seen deltas, which the keyed seen
+  // read takes for every link key. EXECUTOR-resident: the per-shard blobs
+  // are built executor-side by the bloom_build aggregate (the driver
+  // collects S blob rows, never a key set) and ride a real
+  // SparkContext.broadcast — torrent-shipped once, deserialized once per
+  // executor (BloomProbeBroadcast cache); the plan never embeds the blobs
+  // as a Literal.
   // ------------------------------------------------------------------
 
+  /** the filter of seen base `bloomBase`; null while that base has none. */
   private var bloomBc: Broadcast[Array[Array[Byte]]] = _
-  /** per-batch delta tiers as REAL broadcasts (VERDICT r4 item 2): shipped
-    * once per batch, decoded per executor — never plan-closure payload. */
-  private val bloomRecent =
-    scala.collection.mutable.ArrayBuffer[Broadcast[Array[Array[Byte]]]]()
-  private def addRecentTier(blobs: Array[Array[Byte]]): Unit =
-    bloomRecent += spark.sparkContext.broadcast(blobs)
-  private var blobCapacity: Long = 0L // tier-1 per-shard expectedItems at creation
-  private var bloomSnapshotV: Long = Long.MinValue
-  /** counts full builds (scan of seen) — tests assert it stays ≤ 1. */
+  /** the seen base the in-memory filter state is for (MinValue: unresolved). */
+  private var bloomBase: Long = Long.MinValue
+  /** test hook: filters built by scanning a seen base. */
   private[graft] var bloomFullBuilds: Int = 0
-  /** test hook: rows the driver collected for bloom maintenance — at most S
-    * blob rows per job, NEVER the key set (asserted by IncrementalStateSpec). */
+  /** test hook: rows the driver collected for bloom maintenance — S blob
+    * rows per build or load, NEVER the key set (asserted by IncrementalStateSpec). */
   private[graft] var bloomBlobRowsCollected: Long = 0L
-  /** test hook: live recent-tier entry count (bounded by cfg.bloomRecentCap). */
-  private[graft] def bloomRecentTiers: Int = bloomRecent.size
 
-  private def setSnapshot(blobs: Array[Array[Byte]], v: Long): Unit = {
+  private def setFilter(blobs: Option[Array[Array[Byte]]], base: Long): Unit = {
     val old = bloomBc
-    bloomBc = spark.sparkContext.broadcast(blobs)
-    bloomSnapshotV = v
-    bloomRecent.foreach(_.unpersist())
-    bloomRecent.clear()
+    bloomBc = blobs.map(spark.sparkContext.broadcast(_)).orNull
+    bloomBase = base
     // unpersist (not destroy): earlier in-flight plans may still hold the old
     // handle; executors drop their copies now, the ContextCleaner destroys the
     // driver block once the handle is unreachable
     if (old != null) old.unpersist()
   }
 
-  /** Executor-side per-shard blob build over a key column; collects S blob
-    * rows (partial aggregation is map-side — the shuffle carries blobs). */
-  private def buildShardBlobs(keys: DataFrame, perShardCap: Long): Array[Array[Byte]] = {
-    val rows = keys
-      .groupBy(pmod($"url_hash", lit(cfg.bloomShards.toLong)).as("shard"))
-      .agg(BloomSeen.bloom_build($"url_hash", perShardCap, cfg.bloomFpp).as("blob"))
-      .collect()
+  /** Build the filter of seen base `b`, persist it as `bloom/v=b` and
+    * install it; a base under bloomMinSeen rows gets none. `rows` bounds
+    * the base's row count from above (seen has no dels) and sizes the
+    * filter. The aggregate writes straight to parquet — each reduce task
+    * emits its own shard's blob, so no O(|seen|) bytes ride a driver-built
+    * plan — and the S rows read back for the broadcast. fpp and shard count
+    * ride the filter, so a new engine under other settings rebuilds it. */
+  private def buildFilter(b: Long, rows: Long): Unit =
+    if (rows < cfg.bloomMinSeen) setFilter(None, b)
+    else {
+      bloomFullBuilds += 1
+      val capacity = math.max(4L * rows / cfg.bloomShards + 1, 65536L)
+      // the seen view at b is base b alone: deltas after b never count
+      store.write("bloom", b, seen(b).select("url_hash")
+        .groupBy(pmod($"url_hash", lit(cfg.bloomShards.toLong)).cast("int").as("shard"))
+        .agg(BloomSeen.bloom_build($"url_hash", capacity, cfg.bloomFpp).as("blob"))
+        .select($"shard", $"blob", lit(cfg.bloomFpp).as("fpp"), lit(cfg.bloomShards).as("shards")))
+      if (!loadFilter(b)) sys.error(s"bloom/v=$b unreadable after write")
+    }
+
+  /** Install `bloom/v=b` if it exists and was built with this config's fpp
+    * and shard count. Shards no key hashed to have no row and probe as
+    * empty filters. */
+  private def loadFilter(b: Long): Boolean = store.exists("bloom", b) && {
+    val rows = store.read("bloom", b, sys.error(s"bloom/v=$b listed but unreadable"))
+      .select("shard", "blob", "fpp", "shards").collect()
     bloomBlobRowsCollected += rows.length
-    lazy val empty: Array[Byte] = {
+    rows.forall(r => r.getDouble(2) == cfg.bloomFpp && r.getInt(3) == cfg.bloomShards) && {
       val bos = new ByteArrayOutputStream()
-      BloomFilter.create(perShardCap, cfg.bloomFpp).writeTo(bos)
-      bos.toByteArray
+      BloomFilter.create(64L, cfg.bloomFpp).writeTo(bos)
+      val out = Array.fill[Array[Byte]](cfg.bloomShards)(bos.toByteArray)
+      rows.foreach(r => out(r.getInt(0)) = r.getAs[Array[Byte]](1))
+      setFilter(Some(out), b)
+      true
     }
-    val out = Array.tabulate(cfg.bloomShards)(_ => empty)
-    rows.foreach(r => out(r.getLong(0).toInt) = r.getAs[Array[Byte]]("blob"))
-    out
   }
 
-  private def perShardCapFor(n: Long): Long = math.max(4L * n / cfg.bloomShards + 1, 64L)
-
-  /** One-time build by scanning the seen view at `v` (also the grow-rebuild /
-    * post-rotation path at compaction). Persisted immediately so folds and
-    * resumes always have an on-disk snapshot to start from. */
-  private def buildBlobsFresh(v: Long, seenCount: Long): Unit = {
-    bloomFullBuilds += 1
-    blobCapacity = math.max(4L * seenCount / cfg.bloomShards + 1, 65536L)
-    persistSnapshotAgg(
-      seen(v).select("url_hash")
-        .groupBy(pmod($"url_hash", lit(cfg.bloomShards.toLong)).as("shard"))
-        .agg(BloomSeen.bloom_build($"url_hash", blobCapacity, cfg.bloomFpp).as("blob")),
-      v)
-  }
-
-  /** Lazy init: load the persisted blob snapshot and replay seen-deltas since
-    * (resume path), or build once from seen. Never a per-batch rebuild. */
+  /** Resolve the filter of the latest committed seen base: a no-op while
+    * the in-memory filter is that base's (every base this engine writes
+    * installs its own). A new engine loads `bloom/v=B`; else (no filter
+    * written for B, or one under other fpp/shard settings) builds it from
+    * the base, sized from the seen view's size; else runs without one. */
   private def ensureBlobs(committed: Long, seenCount: Long): Unit = {
-    if (bloomBc != null || seenCount < cfg.bloomMinSeen) return
-    val snapV = store.latestVersion("bloom", committed)
-    // replay-gap guard (ADVICE r2): a seen base NEWER than the bloom snapshot
-    // means the deltas a replay would need may have been rewritten (rotation)
-    // or expired (expireOldState) — rebuild fresh instead of replaying a hole
-    // into a filter with false negatives.
-    if (snapV.isEmpty || store.latestBase("seen", committed).exists(_ > snapV.get)) {
-      buildBlobsFresh(committed, seenCount); return
-    }
-    val v = snapV.get
-    val snapDf = store.read("bloom", v, sys.error("bloom version listed but unreadable"))
-    // parameter guard (ADVICE r3): a snapshot persisted under different
-    // fpp/shard settings is not fold- or probe-compatible with this config
-    // (bloom_merge would throw IncompatibleMergeException mid-batch; a shard
-    // count change would leave null blob slots). Route the mismatch — and
-    // any pre-r4 snapshot that didn't record its parameters — through the
-    // fresh-rebuild path.
-    if (!snapDf.columns.contains("fpp") || {
-      val p = snapDf.select("fpp", "shards").head()
-      p.getDouble(0) != cfg.bloomFpp || p.getInt(1) != cfg.bloomShards
-    }) {
-      buildBlobsFresh(committed, seenCount); return
-    }
-    val rows = snapDf.collect()
-    bloomBlobRowsCollected += rows.length
-    if (rows.isEmpty) { buildBlobsFresh(committed, seenCount); return }
-    blobCapacity = rows.head.getAs[Long]("capacity")
-    setSnapshot(blobArrayOf(rows), v)
-    // replay post-snapshot seen-deltas as one recent-tier entry — built
-    // executor-side; the driver never materializes the replayed keys
-    store.readDeltaAdds("seen", v, committed).foreach { d =>
-      val n = d.count()
-      if (n > 0) addRecentTier(buildShardBlobs(d.select("url_hash"), perShardCapFor(n)))
-    }
-  }
-
-  /** S snapshot rows → dense per-shard array; shards with no row (no key has
-    * ever hashed there) decode as empty filters of the snapshot's capacity —
-    * merge-compatible and probe-correct (might-contain = false). */
-  private def blobArrayOf(rows: Array[org.apache.spark.sql.Row]): Array[Array[Byte]] = {
-    val bos = new ByteArrayOutputStream()
-    BloomFilter.create(blobCapacity, cfg.bloomFpp).writeTo(bos)
-    val empty = bos.toByteArray
-    val out = Array.fill[Array[Byte]](cfg.bloomShards)(empty)
-    rows.foreach(r => out(r.getAs[Int]("shard")) = r.getAs[Array[Byte]]("blob"))
-    out
-  }
-
-  /** Persist + install a snapshot tier from its per-shard aggregate, WITHOUT
-    * routing the blob bytes through a driver-built plan: the aggregate writes
-    * straight to parquet (a distributed job — each reduce task emits its own
-    * shard's blob; task closures carry only the plan), then the S rows read
-    * back for the executor-shipped broadcast. The previous shape collected
-    * the blobs and wrote them back through a driver-local DataFrame, which
-    * embedded O(|seen|) bytes in the write task's closure — the recorded
-    * 3.5 MiB `task of very large size` warning at sf0.1, and hundreds of MB
-    * per task at production |seen| (VERDICT r4 follow-up).
-    * fpp + shard count ride the snapshot (ADVICE r3): a resume under changed
-    * bloom parameters must detect the incompatibility and rebuild instead of
-    * folding mismatched filters. */
-  private def persistSnapshotAgg(agg: DataFrame, v: Long): Unit = {
-    store.write("bloom", v, agg.select(
-      $"shard".cast("int").as("shard"), $"blob",
-      lit(blobCapacity).as("capacity"), lit(cfg.bloomFpp).as("fpp"),
-      lit(cfg.bloomShards).as("shards")))
-    val rows = store.read("bloom", v, sys.error("bloom snapshot unreadable after write"))
-      .select("shard", "blob").collect()
-    bloomBlobRowsCollected += rows.length
-    setSnapshot(blobArrayOf(rows), v)
-  }
-
-  /** Compaction-point refresh: fold the recent tiers into the next snapshot
-    * EXECUTOR-SIDE (bloom_merge over snapshot blob rows ∪ post-snapshot
-    * seen-delta keys), or rebuild exactly with doubled headroom once |seen|
-    * outgrows capacity (between rebuilds an overfull filter only degrades fpp
-    * — more exact-probe work, never correctness: no false negatives). */
-  private def refreshBloomAtCompaction(v: Long, seenCount: Long): Unit = {
-    if (bloomBc == null) return
-    // an intervening seen base (rotation) means post-snapshot deltas may not
-    // cover the gap (and may already be expired) — exact rebuild instead
-    val intervening = store.latestBase("seen", v - 1).exists(_ > bloomSnapshotV)
-    if (seenCount > blobCapacity * cfg.bloomShards / 2 || intervening) {
-      buildBlobsFresh(v, seenCount)
-    } else {
-      val blobRel = store.read("bloom", bloomSnapshotV,
-          sys.error("bloom snapshot missing at fold"))
-        .select($"shard".cast("long").as("shard"), $"blob",
-          lit(null).cast("long").as("url_hash"))
-      val deltas = store.readDeltaAdds("seen", bloomSnapshotV, v)
-        .map(_.select(pmod($"url_hash", lit(cfg.bloomShards.toLong)).as("shard"),
-          lit(null).cast("binary").as("blob"), $"url_hash"))
-      val unioned = deltas.fold(blobRel)(blobRel.unionByName(_))
-      persistSnapshotAgg(
-        unioned.groupBy("shard")
-          .agg(BloomSeen.bloom_merge($"blob", $"url_hash", blobCapacity, cfg.bloomFpp).as("blob")),
-        v)
-    }
+    val b = store.latestBase("seen", committed).getOrElse(-1L)
+    // initialize's base (v = -1) is always empty
+    if (b != bloomBase && !loadFilter(b)) buildFilter(b, if (b < 0) 0L else seenCount)
   }
 
   private val timing = sys.env.contains("GRAFT_TIMING")
@@ -899,9 +809,11 @@ class CrawlEngine(
     // after every commit (initialize starts seen empty; batches and purges
     // move rows frontier → seen, adds are anti-joined against both; rotation
     // drops the re-queued roots from seen), so only link keys are unknown.
-    // The keyed collect returns each link key with its bloom might-contain
-    // bit (every key while no bloom is built); seen is read for flagged keys
-    // only — no false negatives — and the frontier for all. A batch with
+    // The keyed collect returns each link key with the might-contain bit of
+    // the seen base's filter (every key while the base has none). The seen
+    // base is read for the flagged keys only — no false negatives — and the
+    // seen deltas since that base (which no filter covers) and the frontier
+    // for all keys. A batch with
     // more parsed pages than the key cap almost surely has more link keys:
     // skip the collect (a wrong skip only costs the broadcast-semi path).
     val cap = cfg.probePushdownMaxKeys
@@ -910,7 +822,7 @@ class CrawlEngine(
       else timed("link_keys") {
         val maybeSeen =
           if (bloomBc == null) lit(true)
-          else BloomSeen.bloom_probe(bloomBc, bloomRecent.toList, $"url_hash")
+          else BloomSeen.bloom_probe(bloomBc, Nil, $"url_hash")
         val rows = linksRaw.select("url_hash").distinct()
           .select($"url_hash", maybeSeen).limit(cap + 1).collect()
         if (rows.length > cap) None
@@ -931,17 +843,18 @@ class CrawlEngine(
     val midPath = linkKeyArr.isEmpty && metric("links") <= CrawlEngine.LinksBroadcastMaxKeys
     lazy val linkKeysBcast = broadcast(linksRaw.select("url_hash"))
     def membershipHits(table: String, fullDf: DataFrame, schemaOf: => DataFrame,
-        keys: Option[Array[Long]]): DataFrame =
+        keys: Option[(Array[Long], Array[Long])]): DataFrame = // (all keys, base keys)
       keys match {
-        case Some(ks) =>
-          store.readViewKeyed(table, committed, schemaOf, ks).select("url_hash")
+        case Some((ks, baseKs)) =>
+          store.readViewKeyed(table, committed, schemaOf, ks, Some(baseKs)).select("url_hash")
         case None if midPath => fullDf.select("url_hash")
           .join(linkKeysBcast, Seq("url_hash"), "left_semi")
         case None => fullDf.select("url_hash")
           .join(linksRaw.select("url_hash"), Seq("url_hash"), "left_semi")
       }
-    val seenHit = membershipHits("seen", seenDf, emptySeen, linkKeyArr.map(_._2))
-    val frontHit = membershipHits("frontier", front, emptyFrontier, linkKeyArr.map(_._1))
+    val seenHit = membershipHits("seen", seenDf, emptySeen, linkKeyArr)
+    val frontHit = membershipHits("frontier", front, emptyFrontier,
+      linkKeyArr.map { case (ks, _) => (ks, ks) })
     // ONE union-exclude anti-join instead of three chained antis (guide
     // §2.4): the three exclusion sets are all url_hash key sets, so linksRaw
     // is probed once against their union — one join (broadcast-hinted when
@@ -1016,20 +929,8 @@ class CrawlEngine(
       store.writeDeltaDels("frontier", batchId, processedRows)))(commitPool)
     val fSeen = scala.concurrent.Future(timed("write_seen_adds")(
       store.writeDeltaAdds("seen", batchId, seenAdds)))(commitPool)
-    // incremental bloom maintenance: this batch's keys become one recent-tier
-    // delta blob, built EXECUTOR-SIDE by the bloom_build aggregate — the
-    // driver collects S blob rows (O(batch) bytes), never the key set.
-    // The blobs are appended to the recent tier AFTER the await (driver
-    // state is only touched from this thread).
-    val fBloom: Option[scala.concurrent.Future[Array[Array[Byte]]]] =
-      if (bloomBc != null && schedCount + robotsBlockedCount > 0)
-        Some(scala.concurrent.Future(timed("bloom_delta")(
-          buildShardBlobs(processedHashes,
-            perShardCapFor(schedCount + robotsBlockedCount))))(commitPool))
-      else None
     import scala.concurrent.duration.Duration
     Seq(fAdds, fDels, fSeen).foreach(scala.concurrent.Await.result(_, Duration.Inf))
-    fBloom.foreach(f => addRecentTier(scala.concurrent.Await.result(f, Duration.Inf)))
 
     // arithmetic size updates: dels are frontier-present exactly once,
     // adds are frontier-absent (anti-joined above) — no O(|state|) count jobs
@@ -1038,19 +939,11 @@ class CrawlEngine(
     val newFrontierSize = frontCount - (schedCount + robotsBlockedCount) + addsCount
 
     // amortized compaction: fold deltas into range-clustered base snapshots
-    // and fold the bloom recent tiers into the next snapshot (executor-side)
+    // and build the new seen base's filter (its size is exact: no seen dels)
     if (cfg.compactEvery > 0 && (batchId + 1) % cfg.compactEvery == 0) timed("compact") {
       store.compact("frontier", batchId, emptyFrontier, cfg.shufflePartitions)
       store.compact("seen", batchId, emptySeen, cfg.shufflePartitions)
-      refreshBloomAtCompaction(batchId, newSeenSize)
-    } else if (bloomRecent.size >= cfg.bloomRecentCap) {
-      // recent-tier cap (ADVICE r3): with compaction off (compactEvery=0 is
-      // explicitly supported) the per-batch delta blobs would otherwise
-      // accumulate forever — per-row probe cost, driver memory, and the task
-      // closure all growing linearly. Fold them into a fresh snapshot once
-      // the tier exceeds a small cap, independent of the compaction cadence
-      // (the fold reads this batch's already-written seen deltas).
-      timed("bloom_fold")(refreshBloomAtCompaction(batchId, newSeenSize))
+      buildFilter(batchId, newSeenSize)
     }
 
     val metrics = Map(
@@ -1152,11 +1045,8 @@ class CrawlEngine(
       clusterPartitions = cfg.shufflePartitions, rowCount = Some(seenObs))
     val frontNow = frontObs.get("n").asInstanceOf[Long]
     val seenNow = seenObs.get("n").asInstanceOf[Long]
-    // the in-memory bloom keeps the forgotten keys — a harmless
-    // false-positive superset resolved by the exact membership check. No
-    // snapshot is persisted here: the new seen base is NEWER than the bloom
-    // snapshot, so both the resume path and the next compaction fold detect
-    // the gap and rebuild exactly (ensureBlobs/refreshBloomAtCompaction).
+    // the new seen base gets its own filter: the old one flags forgotten keys
+    buildFilter(batchId, seenNow)
     writeLedgerRow(batchId, "ROTATED", seenNow, frontierSize = frontNow)
     store.commit(batchId)
     seenSizeCache = seenNow
@@ -1219,25 +1109,14 @@ class CrawlEngine(
     val blocked = robotsBlockedOf(frontier(committed)).persist()
     val n = blocked.count()
     if (n == 0) { blocked.unpersist(); return 0L }
-    // rules are fixed per engine, so a rule change purges in an engine that
-    // has not run a batch yet: load the bloom here (a no-op once loaded) so
-    // the purged keys take the same recent-tier insert and cap fold as in
-    // an engine that has
-    ensureBlobs(committed, seenSize(committed))
+    // the purged keys enter a seen delta, which the keyed seen read takes
+    // for every link key: no bloom work here
     store.writeDeltaDels("frontier", batchId, blocked.select("url_hash"))
     store.writeDeltaAdds("seen", batchId, blocked
       .withColumn("first_batch", lit(batchId))
       .select("url_hash", "url_canon", "first_batch"))
     val newSeen = seenSize(committed) + n
     val newFront = frontierSize(committed) - n
-    if (bloomBc != null) {
-      addRecentTier(buildShardBlobs(blocked.select("url_hash"), perShardCapFor(n)))
-      // same recent-tier cap runBatch applies (ADVICE r4): repeated purges —
-      // or a purge landing on an already-at-cap tier — must fold instead of
-      // exceeding the documented probe-cost / broadcast-count bound
-      if (bloomRecent.size >= cfg.bloomRecentCap)
-        refreshBloomAtCompaction(batchId, newSeen)
-    }
     writeLedgerRow(batchId, "PURGED", newSeen,
       robotsBlocked = n, frontierSize = newFront)
     store.commit(batchId)
@@ -1257,7 +1136,8 @@ class CrawlEngine(
     val committed = store.committedBatch
     store.expireBefore("frontier", committed)
     store.expireBefore("seen", committed)
-    store.expireSnapshotsBefore("bloom", committed)
+    // a filter is read only for the latest seen base, the one base kept
+    store.latestBase("seen", committed).foreach(store.expireSnapshotsBelow("bloom", _))
     store.expireSnapshotsBefore("seeds", committed)
   }
 

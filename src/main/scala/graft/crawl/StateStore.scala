@@ -248,11 +248,12 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     readViewCapped(table, v, schemaOf, v)
 
   private def readViewCapped(table: String, v: Long, schemaOf: => DataFrame,
-      maxBaseV: Long, keys: Option[Array[Long]] = None): DataFrame = {
+      maxBaseV: Long, keys: Option[Array[Long]] = None,
+      baseKeys: Option[Array[Long]] = None): DataFrame = {
     val baseV = latestBase(table, maxBaseV)
-    val base = baseV.map { b =>
+    val base = baseV.filterNot(_ => baseKeys.exists(_.isEmpty)).map { b =>
       val raw = readBaseRaw(table, b, schemaOf)
-      val pruned = keys match {
+      val pruned = baseKeys match {
         case Some(ks) =>
           // planning-time partition pruning on the bucket column + pushed
           // In(url_hash) for row-group pruning within the touched buckets
@@ -297,11 +298,16 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
    * instead of a full O(|state|) scan per membership check. Callers bound
    * |keys| (politeness budgets / batch size) and fall back to the
    * broadcast-semi full scan when the set exceeds the pushdown cap.
+   *
+   * `baseKeys` (⊆ keys) narrows the base read alone, for a caller that
+   * knows the other keys are absent from the base: the engine passes the
+   * keys its seen-base bloom filter flags. The deltas are read for all
+   * `keys`.
    */
   def readViewKeyed(table: String, v: Long, schemaOf: => DataFrame,
-      keys: Array[Long]): DataFrame =
+      keys: Array[Long], baseKeys: Option[Array[Long]] = None): DataFrame =
     if (keys.isEmpty) schemaOf.limit(0)
-    else readViewCapped(table, v, schemaOf, v, Some(keys))
+    else readViewCapped(table, v, schemaOf, v, Some(keys), Some(baseKeys.getOrElse(keys)))
 
   /** Fold all deltas ≤ v into a new base snapshot at v, range-clustered and
     * bucket-partitioned on url_hash (see writeBase) so the keyed membership
@@ -407,13 +413,15 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
         .foreach(b => StateStore.deleteRecursively(delDir(table, b)))
     }
 
-  /** expire for snapshot tables (seeds/bloom/summary): keep only the latest
+  /** expire for snapshot tables (seeds/summary): keep only the latest
     * version ≤ v. */
   def expireSnapshotsBefore(table: String, v: Long): Unit =
-    latestVersion(table, v).foreach { keep =>
-      listIds(rootPath.resolve(table), "v=", Long.MinValue, keep - 1)
-        .foreach(b => StateStore.deleteRecursively(rootPath.resolve(table).resolve(s"v=$b")))
-    }
+    latestVersion(table, v).foreach(expireSnapshotsBelow(table, _))
+
+  /** Delete every version of a snapshot table below `keep`. */
+  def expireSnapshotsBelow(table: String, keep: Long): Unit =
+    listIds(rootPath.resolve(table), "v=", Long.MinValue, keep - 1)
+      .foreach(b => StateStore.deleteRecursively(rootPath.resolve(table).resolve(s"v=$b")))
 
   /** Read log batches in (afterBatch, upToBatch]. Directory handles closed
     * even on error (long-running drivers poll logs across thousands of

@@ -97,7 +97,7 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("seen-set: first occurrence wins, no url fetched twice") {
-    // bloom built at batch 1, folded every 2 batches, keyed expansion probes:
+    // a bloom filter per seen base (compaction every 2 batches), keyed expansion probes:
     // both invariants must hold after every state-changing operation. The
     // depth bound lets cross links reach already-seen pages, so the seen
     // probe has hits to find.
@@ -114,7 +114,7 @@ class CrawlSpec extends AnyFunSuite {
     val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
     eng.initialize(seeds(6))
     eng.run(4)
-    assert(eng.bloomFullBuilds == 1, "premise: the bloom is built and probed")
+    assert(eng.bloomFullBuilds >= 1, "premise: the bloom is built and probed")
     check(eng, "run")
     // seen ⊇ fetched
     val notSeen = eng.fetched().get.select("url_hash").distinct()
@@ -141,41 +141,48 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("keyed seen probe: back-links to already-fetched pages never re-enter the frontier") {
-    // root r links to 20 pages a_i, a_i links to b_i, and every b_i links
-    // back to r and to all 20 a_j. Batch 2 expands 420 links onto 21
-    // distinct seen urls — below probePushdownMaxKeys, so the keyed seen read
-    // alone must find all 21; each one it missed would be fetched again.
+    // root r links to 20 pages a_i, a_i links to b_i, every b_i links back
+    // to r and to all 20 a_j and on to c_i, and every c_i links back to all
+    // 20 b_j. Batch 2 expands 420 back-links onto 21 distinct seen urls,
+    // batch 3 expands 400 onto the 20 b_j — below probePushdownMaxKeys, so
+    // the keyed seen read alone must find them; each one it missed would be
+    // fetched again. With the bloom on, compaction every 2 batches gives the
+    // filter batch 1's seen base {r, a_i}, and the b_j are seen only in
+    // batch 2's delta, which no filter covers: the keyed read must take the
+    // seen deltas for every link key, not only the keys the filter flags.
     val base = PagesGen.BaseTsMillis
     val host = "https://hk.example.test"
     val r = s"$host/r"
     def a(i: Int) = s"$host/a/$i"
     def b(i: Int) = s"$host/b/$i"
+    def c(i: Int) = s"$host/c/$i"
     def links(us: Seq[String]) = us.map(u => s"""<a href="$u">x</a>""").mkString(" ")
     def mk(url: String, ageMin: Int, html: String) =
       Page(url, new java.sql.Timestamp(base - ageMin * 60000L), html.getBytes("UTF-8"),
         TextExtract.extractText(html), "en")
     val n = 20
-    val back = links(r +: (0 until n).map(a))
     val pages = (mk(r, 0, links((0 until n).map(a)) + " root") +:
       ((0 until n).map(i => mk(a(i), 1 + i, links(Seq(b(i))) + s" a$i")) ++
-        (0 until n).map(i => mk(b(i), 100 + i, back + s" b$i")))).toDF
+        (0 until n).map(i => mk(b(i), 100 + i, links(r +: (0 until n).map(a) :+ c(i)) + s" b$i")) ++
+        (0 until n).map(i => mk(c(i), 200 + i, links((0 until n).map(b)) + s" c$i")))).toDF
     val seed = Seed("s", r, new java.sql.Timestamp(base - 86400000L),
       new java.sql.Timestamp(base + 86400000L))
-    // bloom off (every key flagged) and on (built at batch 1)
+    // bloom off (every key flagged) and on (a filter over batch 1's seen base)
     for (minSeen <- Seq(Long.MaxValue, 1L)) {
       val cfg = CrawlConfig(defaultHostBudget = 1000, shufflePartitions = 4, maxDepth = 8,
-        bloomMinSeen = minSeen)
+        bloomMinSeen = minSeen, compactEvery = 2)
       val eng = new CrawlEngine(spark, pages, tmp(), cfg)
       eng.initialize(Seq(seed))
-      val ms = eng.run(5)
+      val ms = eng.run(6)
       val f = eng.fetched().get
       val linksPerBatch = f.groupBy("batch_id").agg(sum("n_outlinks")).collect().map(_.getLong(1))
-      assert(linksPerBatch.max == n * (n + 1) && linksPerBatch.max <= cfg.probePushdownMaxKeys,
-        "premise: batch 2's back-links take the keyed probe")
-      assert(f.count() == 1 + 2 * n, s"bloomMinSeen=$minSeen: fetched ${f.count()} rows")
+      assert(linksPerBatch.max == n * (n + 2) && linksPerBatch.max <= cfg.probePushdownMaxKeys,
+        "premise: batch 2's and 3's back-links take the keyed probe")
+      assert(eng.bloomFullBuilds == (if (minSeen == 1L) 2 else 0), "premise: bloom on/off")
+      assert(f.count() == 1 + 3 * n, s"bloomMinSeen=$minSeen: fetched ${f.count()} rows")
       assert(f.groupBy("url_hash").count().filter($"count" > 1).count() == 0,
         s"bloomMinSeen=$minSeen: a url was fetched twice")
-      assert(ms.map(_("scheduled")) == Seq(1L, n.toLong, n.toLong),
+      assert(ms.map(_("scheduled")) == Seq(1L, n.toLong, n.toLong, n.toLong),
         s"bloomMinSeen=$minSeen: schedule ${ms.map(_("scheduled"))}")
       assert(ms.last("frontier_size") == 0L)
     }
@@ -201,29 +208,6 @@ class CrawlSpec extends AnyFunSuite {
         BloomSeen.bloom_probe(bc, Seq(spark.sparkContext.broadcast(delta)), $"h"))
       .filter(!$"c").count()
     assert(misses2 == 0, "recent-tier delta blob not probed")
-  }
-
-  test("bloom_merge folds snapshot blobs + delta keys executor-side with no false negatives") {
-    // snapshot tier: keys 0..2000; delta keys 5000..5400; fold = blob rows
-    // (shard, blob, null) ∪ key rows (shard, null, key) grouped per shard —
-    // exactly the compaction fold's shape
-    val cap = 1000L
-    val hashes = spark.range(0, 2000).select(xxhash64($"id").as("h"))
-    val snap = hashes.groupBy(pmod($"h", lit(4L)).as("shard"))
-      .agg(BloomSeen.bloom_build($"h", cap, 0.01).as("blob"))
-      .select($"shard", $"blob", lit(null).cast("long").as("h"))
-    val extra = spark.range(5000, 5400).select(xxhash64($"id").as("h"))
-    val deltas = extra.select(pmod($"h", lit(4L)).as("shard"),
-      lit(null).cast("binary").as("blob"), $"h")
-    val folded = snap.unionByName(deltas).groupBy("shard")
-      .agg(BloomSeen.bloom_merge($"blob", $"h", cap, 0.01).as("blob"))
-      .collect().sortBy(_.getLong(0)).map(_.getAs[Array[Byte]]("blob"))
-    assert(folded.length == 4)
-    val bc2 = spark.sparkContext.broadcast(folded)
-    val all = hashes.unionByName(extra)
-    val misses = all.withColumn("c", BloomSeen.bloom_probe(bc2, Nil, $"h"))
-      .filter(!$"c").count()
-    assert(misses == 0, "folded filter dropped a key from either tier")
   }
 
   test("resume: kill after k batches == uninterrupted run (MERGE checkpoint)") {
@@ -1031,10 +1015,10 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
     eng.initialize(seeds(6))
     val ms = eng.run(4)
-    // every bloom job (fresh build, per-batch delta, compaction fold, resume
-    // load) returns at most S=bloomShards blob rows; a driver that ever
+    // every bloom job (one build per compaction, a new engine's load)
+    // returns at most S=bloomShards blob rows; a driver that ever
     // materialized a key set would blow this bound by orders of magnitude
-    val jobsUpperBound = cfg.bloomShards.toLong * (2L * ms.length + 3L)
+    val jobsUpperBound = cfg.bloomShards.toLong * (ms.length / cfg.compactEvery + 1L)
     assert(eng.bloomBlobRowsCollected > 0 && eng.bloomBlobRowsCollected <= jobsUpperBound,
       s"driver collected ${eng.bloomBlobRowsCollected} rows for bloom maintenance — " +
         s"must be ≤ $jobsUpperBound blob rows (S per job), never O(keys)")
@@ -1080,40 +1064,25 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       bloomMinSeen = 1, compactEvery = 2)
     val e1 = new CrawlEngine(spark, pagesDF, dir, cfg)
     e1.initialize(seeds(6))
-    e1.run(2)
+    e1.run(2) // batch 1 compacts: base 1 and its filter
     assert(e1.bloomFullBuilds == 1)
-    // resume with a DIFFERENT fpp: the persisted snapshot is incompatible
-    // (fold would throw IncompatibleMergeException) — must rebuild fresh
+    def recorded(c: String) =
+      spark.read.parquet(s"$dir/bloom/v=1").select(c).distinct().collect().map(_.get(0)).toSeq
+    // resume with a DIFFERENT fpp: the persisted filter does not match it
+    // and must be rebuilt from base 1, not probed
     val e2 = new CrawlEngine(spark, pagesDF, dir, cfg.copy(bloomFpp = 0.001))
-    e2.run(2)
+    e2.run(1) // batch 2: no compaction
     assert(e2.bloomFullBuilds == 1,
       "changed bloomFpp on resume must trigger exactly one fresh rebuild")
+    assert(recorded("fpp") == Seq(0.001))
     assert(e2.fetched().get.groupBy("url_hash").count().filter($"count" > 1).count() == 0)
     // and a changed shard count likewise
     val e3 = new CrawlEngine(spark, pagesDF, dir, cfg.copy(bloomShards = 4))
-    val ran = e3.run(1)
-    assert(ran.nonEmpty, "corpus exhausted before the shard-mismatch resume could run")
-    assert(e3.bloomFullBuilds == 1,
-      "changed bloomShards on resume must trigger exactly one fresh rebuild")
-  }
-
-  test("recent bloom tiers fold at the cap even with compaction off (ADVICE r3)") {
-    val dir = tmp()
-    val eng = new CrawlEngine(spark, pagesDF, dir,
-      CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
-        bloomMinSeen = 1, compactEvery = 0, bloomRecentCap = 2))
-    eng.initialize(seeds(6))
-    val ms = eng.run(6)
-    assert(ms.length == 6)
-    assert(eng.bloomRecentTiers < 2 + 1,
-      s"recent tier grew to ${eng.bloomRecentTiers} entries — cap fold never ran")
-    // the fold persisted a newer snapshot (not just the initial build's)
-    val snaps = new java.io.File(s"$dir/bloom").list().toSeq.sorted
-    assert(snaps.length > 1, s"no folded snapshot persisted: $snaps")
-    // correctness unchanged under cap folds
-    assert(eng.fetched().get.groupBy("url_hash").count().filter($"count" > 1).count() == 0)
-    assert(eng.seen().count() ==
-      eng.ledger().get.orderBy($"batch_id".desc).select("seen_size").head.getLong(0))
+    val ran = e3.runBatch() // batch 3: rebuilds base 1's filter, then compacts
+    assert(ran("scheduled") > 0, "corpus exhausted before the shard-mismatch resume could run")
+    assert(recorded("shards") == Seq(4))
+    assert(e3.bloomFullBuilds == 2,
+      "changed bloomShards on resume must rebuild base 1's filter once (plus base 3's build)")
   }
 
   test("bloom probe closure is O(1) in batch size: recent tiers ride broadcasts, never the task closure (VERDICT r4)") {
@@ -1135,42 +1104,26 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     (recents :+ snap).foreach(_.unpersist())
   }
 
-  test("a robots purge folds the recent tier at the cap instead of exceeding it (ADVICE r4)") {
-    val mega = "h0.example.test"
-    // blocked frontier rows come from a rule change: crawl without rules,
-    // then purge in a new engine that has the rule
-    val dir = tmp()
-    val cfg = CrawlConfig(defaultHostBudget = 2, shufflePartitions = 4,
-      bloomMinSeen = 1, compactEvery = 8, bloomRecentCap = 2)
-    val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
-    eng.initialize(seeds(8))
-    eng.run(2) // batch 1 builds the bloom + appends one recent tier
-    assert(eng.bloomRecentTiers == 1, s"premise: one live tier, got ${eng.bloomRecentTiers}")
-    val purger = new CrawlEngine(spark, pagesDF, dir, cfg.copy(robotsDisallow = Seq((mega, "/u/"))))
-    val purged = purger.purgeRobotsBlocked()
-    assert(purged > 0, "premise: the purge must have blocked frontier rows to drop")
-    // the purge loads the bloom (batch 1's tier replays as one tier) and its
-    // appended tier hits the cap (2) — it must FOLD, not exceed it
-    assert(purger.bloomRecentTiers == 0,
-      s"purge left ${purger.bloomRecentTiers} recent tiers — cap fold did not run")
-    val v = purger.store.committedBatch
-    assert(purger.store.latestVersion("bloom", v).contains(v),
-      "the cap fold must persist a bloom snapshot at the purge's version")
-  }
-
-  test("bloom lifecycle: one full build, then incremental; resume loads snapshot + replays deltas") {
+  test("bloom lifecycle: one build per qualifying seen base; a resumed engine loads the latest base's filter") {
     val dir = tmp()
     val cfg = CrawlConfig(defaultHostBudget = 4, shufflePartitions = 4,
       bloomMinSeen = 1, compactEvery = 2)
     val e1 = new CrawlEngine(spark, pagesDF, dir, cfg)
     e1.initialize(seeds(6))
-    e1.run(4)
-    assert(e1.bloomFullBuilds == 1,
-      s"bloom fully built ${e1.bloomFullBuilds} times — must be once, then per-batch inserts")
-    // resume in a fresh engine: persisted snapshot + delta replay, never a rescan
+    assert(e1.run(4).length == 4)
+    // compactions at batches 1 and 3; initialize's empty base gets no filter
+    def versions(t: String) = new java.io.File(dir, t).list().toSeq.sorted
+    assert(e1.bloomFullBuilds == 2,
+      s"bloom built ${e1.bloomFullBuilds} times — must be once per qualifying seen base")
+    assert(versions("bloom") == Seq("v=1", "v=3"))
+    assert(versions("bloom").forall(versions("seen/base").contains),
+      "a bloom filter without its seen base")
+    // resume in a fresh engine: it loads base 3's filter, never a rescan
     val e2 = new CrawlEngine(spark, pagesDF, dir, cfg)
-    e2.run(3)
+    e2.runBatch()
     assert(e2.bloomFullBuilds == 0, "resume re-scanned seen to rebuild the bloom")
+    e2.run(2) // batch 5 compacts: one more base, one more filter
+    assert(e2.bloomFullBuilds == 1)
     // correctness unchanged: no url fetched twice across crash+resume
     assert(e2.fetched().get.groupBy("url_hash").count().filter($"count" > 1).count() == 0)
     assert(e2.seen().count() ==
