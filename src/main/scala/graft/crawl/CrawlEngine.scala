@@ -146,8 +146,8 @@ case class CrawlConfig(
  *
  * Scale invariants (the parts that survive 100×):
  *  - **bytes written per batch are O(batch)**: seen/frontier updates are
- *    delta appends (adds + del-keys), folded into a base snapshot only every
- *    `compactEvery` batches (StateStore delta tables);
+ *    add deltas (a url's frontier removal IS its seen add), folded into a
+ *    base snapshot only every `compactEvery` batches (StateStore);
  *  - **the big state sides are scanned, never shuffled**: every membership
  *    check against seen/frontier is inverted into a broadcast-semi of the
  *    bounded batch keys against the big table, then a broadcast anti-join of
@@ -287,8 +287,8 @@ class CrawlEngine(
     * "none" before the first batch). */
   private[graft] def lastRankPlan: String = rankPlan
 
-  /** running |frontier| — same arithmetic maintenance (deltas are exact:
-    * every del key is frontier-present, every add is frontier-absent). */
+  /** running |frontier| — same arithmetic (exact: every seen add leaves the
+    * frontier, every frontier add is frontier-absent). */
   private var frontierSizeCache: Long = -1L
   private def frontierSize(committed: Long): Long = {
     if (frontierSizeCache < 0) {
@@ -543,6 +543,7 @@ class CrawlEngine(
   private def runBatchImpl(): Map[String, Long] = {
     val committed = store.committedBatch
     val batchId = committed + 1
+    store.begin(batchId)
 
     val front = frontier(committed)
     val seenDf = seen(committed)
@@ -911,8 +912,8 @@ class CrawlEngine(
     // ---- atomic multi-table delta commit (Iceberg MERGE analog):
     // O(batch) bytes — never a rewrite of the full seen/frontier state.
     // The adds count piggybacks on the write job (Observation) — no
-    // re-read of the delta just to count it. The four jobs below are
-    // independent (all derive from the already-written parsed log), so they
+    // re-read of the delta just to count it. The two writes below are
+    // independent (both derive from the already-written parsed log), so they
     // are SUBMITTED CONCURRENTLY — each is a small job whose fixed
     // submission/commit latency would otherwise serialize on the driver
     // (the per-batch fixed term of the executor-JVM scaling pair).
@@ -925,15 +926,13 @@ class CrawlEngine(
     val fAdds = scala.concurrent.Future(timed("write_fr_adds")(
       store.writeDeltaAdds("frontier", batchId,
         newFrontAdds.observe(addsObs, count(lit(1)).as("n")))))(commitPool)
-    val fDels = scala.concurrent.Future(timed("write_fr_dels")(
-      store.writeDeltaDels("frontier", batchId, processedRows)))(commitPool)
     val fSeen = scala.concurrent.Future(timed("write_seen_adds")(
       store.writeDeltaAdds("seen", batchId, seenAdds)))(commitPool)
     import scala.concurrent.duration.Duration
-    Seq(fAdds, fDels, fSeen).foreach(scala.concurrent.Await.result(_, Duration.Inf))
+    Seq(fAdds, fSeen).foreach(scala.concurrent.Await.result(_, Duration.Inf))
 
-    // arithmetic size updates: dels are frontier-present exactly once,
-    // adds are frontier-absent (anti-joined above) — no O(|state|) count jobs
+    // arithmetic size updates: seen adds leave the frontier exactly once,
+    // frontier adds are frontier-absent (anti-joined above) — no count jobs
     val addsCount = addsObs.get("n").asInstanceOf[Long]
     val newSeenSize = seenCount + schedCount + robotsBlockedCount
     val newFrontierSize = frontCount - (schedCount + robotsBlockedCount) + addsCount
@@ -953,12 +952,7 @@ class CrawlEngine(
       "invariant_violations" -> invariantViolations,
       "frontier_size" -> newFrontierSize, "seen_size" -> newSeenSize,
       "partitions_used" -> nPartitions)
-    store.appendLogDirect("ledger", batchId, CrawlEngine.LedgerSchema,
-      Seq(Seq(batchId, "SUCCESS", schedCount, inRange, notFound,
-        robotsBlockedCount, invariantViolations, newFrontierSize, newSeenSize, nPartitions)))
-    store.commit(batchId)
-    seenSizeCache = newSeenSize
-    frontierSizeCache = newFrontierSize
+    commitVersion("SUCCESS", metrics)
     missingRows.foreach(_.unpersist())
     schedDf.unpersist()
     linksRaw.unpersist()
@@ -977,15 +971,18 @@ class CrawlEngine(
   private def notifyOnce(condition: String, message: String): Unit =
     if (notifiedConditions.add(condition)) notifier.notify(message)
 
-  /** One ledger row, written DRIVER-DIRECT (no Spark job — the ledger is a
-    * 1-row-per-batch log and a per-batch write job was pure fixed cost). */
-  private def writeLedgerRow(batchId: Long, state: String, seenSizeNow: Long,
-      scheduled: Long = -1, fetchedN: Long = -1, notFound: Long = -1,
-      robotsBlocked: Long = -1, violations: Long = -1,
-      frontierSize: Long = -1, nPartitions: Long = -1): Unit =
-    store.appendLogDirect("ledger", batchId, CrawlEngine.LedgerSchema,
-      Seq(Seq(batchId, state, scheduled, fetchedN, notFound,
-        robotsBlocked, violations, frontierSize, seenSizeNow, nPartitions)))
+  /** Commit version `metrics("batch_id")` with its ledger row, written
+    * DRIVER-DIRECT (a per-version write job was pure fixed cost), and cache
+    * its sizes. `metrics` is keyed by ledger column; a missing one is -1. */
+  private def commitVersion(state: String, metrics: Map[String, Long]): Unit = {
+    val b = metrics("batch_id")
+    store.appendLogDirect("ledger", b, CrawlEngine.LedgerSchema,
+      Seq(CrawlEngine.LedgerSchema.fieldNames.toSeq.map(c =>
+        if (c == "state") state else metrics.getOrElse(c, -1L))))
+    store.commit(b)
+    seenSizeCache = metrics("seen_size")
+    frontierSizeCache = metrics("frontier_size")
+  }
 
   /** latest ROTATED ledger entry — the rotation watermark bounding which
     * deferred-log batches the next rotation may re-open (ADVICE r1: without
@@ -1033,6 +1030,7 @@ class CrawlEngine(
     val newFrontier = frontier(committed)
       .join(broadcast(roots.select("url_hash")), Seq("url_hash"), "left_anti")
       .unionByName(roots)
+    store.begin(batchId)
     store.write("seeds", batchId, rotated)
     // rotation = compaction point: write full bases (rare by design); the
     // size counts piggyback on the write jobs via Observation — no extra
@@ -1047,10 +1045,8 @@ class CrawlEngine(
     val seenNow = seenObs.get("n").asInstanceOf[Long]
     // the new seen base gets its own filter: the old one flags forgotten keys
     buildFilter(batchId, seenNow)
-    writeLedgerRow(batchId, "ROTATED", seenNow, frontierSize = frontNow)
-    store.commit(batchId)
-    seenSizeCache = seenNow
-    frontierSizeCache = frontNow
+    commitVersion("ROTATED",
+      Map("batch_id" -> batchId, "seen_size" -> seenNow, "frontier_size" -> frontNow))
   }
 
   /** frontier rows from a seeds DataFrame (root url, depth 0, priority =
@@ -1109,19 +1105,14 @@ class CrawlEngine(
     val blocked = robotsBlockedOf(frontier(committed)).persist()
     val n = blocked.count()
     if (n == 0) { blocked.unpersist(); return 0L }
-    // the purged keys enter a seen delta, which the keyed seen read takes
-    // for every link key: no bloom work here
-    store.writeDeltaDels("frontier", batchId, blocked.select("url_hash"))
+    // the purged keys enter a seen delta (also their frontier removal), which
+    // the keyed seen read takes for every link key: no bloom work here
+    store.begin(batchId)
     store.writeDeltaAdds("seen", batchId, blocked
       .withColumn("first_batch", lit(batchId))
       .select("url_hash", "url_canon", "first_batch"))
-    val newSeen = seenSize(committed) + n
-    val newFront = frontierSize(committed) - n
-    writeLedgerRow(batchId, "PURGED", newSeen,
-      robotsBlocked = n, frontierSize = newFront)
-    store.commit(batchId)
-    seenSizeCache = newSeen
-    frontierSizeCache = newFront
+    commitVersion("PURGED", Map("batch_id" -> batchId, "robots_blocked" -> n,
+      "seen_size" -> (seenSize(committed) + n), "frontier_size" -> (frontierSize(committed) - n)))
     blocked.unpersist()
     n
   }
@@ -1215,8 +1206,12 @@ class CrawlEngine(
     var continue = true
     while (i < maxBatches && continue) {
       if (stopRequested) {
-        writeLedgerRow(store.committedBatch + 1, "STOPPED", seenSize(store.committedBatch))
-        notifyOnce("stopped", s"run stopped by command at batch ${store.committedBatch + 1}")
+        // the stop commits as its own version, as ROTATED and PURGED do
+        val b = store.committedBatch + 1
+        store.begin(b)
+        commitVersion("STOPPED", Map("batch_id" -> b,
+          "seen_size" -> seenSize(b - 1), "frontier_size" -> frontierSize(b - 1)))
+        notifyOnce("stopped", s"run stopped by command at batch $b")
         continue = false
       } else if (frontierSize(store.committedBatch) == 0) {
         // arithmetic size cache — no per-iteration Spark job

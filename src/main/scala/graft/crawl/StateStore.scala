@@ -3,7 +3,7 @@ package graft.crawl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import org.apache.spark.sql.functions.{broadcast, col, lit, shiftrightunsigned}
+import org.apache.spark.sql.functions.{col, lit, shiftrightunsigned}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -28,20 +28,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    append-mode incrementality, weibo.py:1729-1757, generalized). Layout:
  *
  *        <table>/base/v=<B>           compacted snapshot == full view at batch B
- *        <table>/delta_add/batch=<N>  rows added by batch N   (tag _add_batch)
- *        <table>/delta_del/batch=<N>  url_hash keys removed by batch N (tag _del_batch)
+ *        <table>/delta_add/batch=<N>  rows added by batch N
  *
- *    View at batch V = base(B⋆) ∪ adds(B⋆, V]  minus  keys whose newest del in
- *    (B⋆, V] is newer than the row's add batch (so delete-then-re-add in a
- *    later batch survives — rotation re-seeds roots this way). Dels are
- *    bounded by Σ batch sizes since compaction, so the subtraction is a
- *    broadcast anti-join: the big side is scanned but NEVER shuffled.
- *    `compact()` (called by the engine every `compactEvery` batches, and at
- *    every rotation) folds deltas into a new base — amortized O(|state|/C).
+ *    View at batch V = base(B⋆) ∪ adds(B⋆, V]. Only the frontier has
+ *    removals, and they are the seen table's adds: a url leaves the
+ *    frontier exactly when it enters seen (the reference records "done" in
+ *    its seen list alone, weibo.py:1698-1699), so the frontier view is that
+ *    union minus the url_hash keys of seen's adds in (B⋆, V] — a plain key
+ *    anti-join, and the fact is written once. It is exact because within
+ *    one base window no key re-enters the frontier after it entered seen
+ *    (batch adds are anti-joined against seen; a purge adds nothing), and
+ *    because every base writer (initialize, compaction, rotation) writes
+ *    both tables' bases at the same version. The removal keys are bounded
+ *    by Σ batch sizes since the base; the big side is scanned but NEVER
+ *    shuffled. `compact()` (called by the engine every `compactEvery`
+ *    batches) and rotation write new bases — amortized O(|state|/C).
  *    This is exactly the copy-on-write MERGE + periodic rewrite an Iceberg
- *    table would do; uncommitted delta/base dirs from a crashed batch are
- *    invisible (readers bound by the `_COMMITTED` pointer) and overwritten
- *    idempotently on retry.
+ *    table would do; entries of an uncommitted version are invisible
+ *    (readers bound by the `_COMMITTED` pointer), and [[begin]] deletes
+ *    what a crashed attempt left before the version is written again.
  *
  *  - a single store-level `_COMMITTED` pointer is flipped via write-temp +
  *    ATOMIC_MOVE — the one-file analog of an Iceberg snapshot commit covering
@@ -129,8 +134,23 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     rootPath.resolve(table).resolve("base").resolve(s"v=$v")
   private def addDir(table: String, b: Long): Path =
     rootPath.resolve(table).resolve("delta_add").resolve(s"batch=$b")
-  private def delDir(table: String, b: Long): Path =
-    rootPath.resolve(table).resolve("delta_del").resolve(s"batch=$b")
+
+  /** The table whose adds are a table's removals: a url leaves the frontier
+    * exactly when it enters seen. Other tables have no removals. */
+  private val removalsOf = Map("frontier" -> "seen")
+
+  /** Start writing version `b`: delete every entry a crashed attempt at `b`
+    * left in any table (snapshot and base `v=b`, delta and log `batch=b`),
+    * so no leftover becomes visible when `b` commits, whatever kind of
+    * version (batch, rotation, purge, stop) the retry writes. */
+  def begin(b: Long): Unit = {
+    require(b > committedBatch, s"version $b is already committed")
+    val st = Files.list(rootPath)
+    try st.iterator().forEachRemaining { t =>
+      Seq(t.resolve(s"v=$b"), t.resolve(s"batch=$b"), t.resolve("base").resolve(s"v=$b"),
+        t.resolve("delta_add").resolve(s"batch=$b")).foreach(StateStore.deleteRecursively)
+    } finally st.close()
+  }
 
   /** List ids under a prefixed dir (`v=` / `batch=`), _SUCCESS-committed only. */
   private def listIds(dir: Path, prefix: String, lo: Long, hi: Long): Seq[Long] = {
@@ -220,37 +240,25 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
 
   /** Per-batch added rows — O(batch) bytes. */
   def writeDeltaAdds(table: String, batch: Long, adds: DataFrame): Unit =
-    adds.withColumn("_add_batch", lit(batch))
-      .write.mode("overwrite").option("compression", codec).parquet(addDir(table, batch).toString)
+    adds.write.mode("overwrite").option("compression", codec).parquet(addDir(table, batch).toString)
 
-  /** Per-batch removed keys (url_hash) — O(batch) bytes. */
-  def writeDeltaDels(table: String, batch: Long, delKeys: DataFrame): Unit =
-    delKeys.select(col("url_hash").as("_del_hash")).withColumn("_del_batch", lit(batch))
-      .write.mode("overwrite").option("compression", codec).parquet(delDir(table, batch).toString)
-
-  /** Union of add-deltas in (afterExcl, upToIncl], tagged with _add_batch. */
-  def readDeltaAdds(table: String, afterExcl: Long, upToIncl: Long): Option[DataFrame] = {
+  /** Union of add-deltas in (afterExcl, upToIncl]. */
+  private def readDeltaAdds(table: String, afterExcl: Long, upToIncl: Long): Option[DataFrame] = {
     val ids = listIds(rootPath.resolve(table).resolve("delta_add"), "batch=", afterExcl, upToIncl)
     if (ids.isEmpty) None
     else Some(readCached(s"adds:$table", None, ids.map(addDir(table, _).toString)))
   }
 
-  private def readDeltaDels(table: String, afterExcl: Long, upToIncl: Long): Option[DataFrame] = {
-    val ids = listIds(rootPath.resolve(table).resolve("delta_del"), "batch=", afterExcl, upToIncl)
-    if (ids.isEmpty) None
-    else Some(readCached(s"dels:$table", None, ids.map(delDir(table, _).toString)))
-  }
-
-  /** Reconstruct the table view at batch `v`: base ∪ adds, minus keys with a
-    * newer del. The del set is bounded (≤ compactEvery batches of keys) so it
-    * broadcasts; the base is scanned once, shuffle-free. */
+  /** Reconstruct the table view at batch `v`: base ∪ adds, minus the
+    * table's removals since the base (see the class doc). */
   def readView(table: String, v: Long, schemaOf: => DataFrame): DataFrame =
-    readViewCapped(table, v, schemaOf, v)
+    view(table, v, schemaOf, None, None)
 
-  private def readViewCapped(table: String, v: Long, schemaOf: => DataFrame,
-      maxBaseV: Long, keys: Option[Array[Long]] = None,
-      baseKeys: Option[Array[Long]] = None): DataFrame = {
-    val baseV = latestBase(table, maxBaseV)
+  private def view(table: String, v: Long, schemaOf: => DataFrame,
+      keys: Option[Array[Long]], baseKeys: Option[Array[Long]]): DataFrame = {
+    val baseV = latestBase(table, v)
+    def keyed(df: DataFrame): DataFrame =
+      keys.fold(df)(ks => df.filter(col("url_hash").isin(ks.map(Long.box).toSeq: _*)))
     val base = baseV.filterNot(_ => baseKeys.exists(_.isEmpty)).map { b =>
       val raw = readBaseRaw(table, b, schemaOf)
       val pruned = baseKeys match {
@@ -263,29 +271,23 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
           withHb.filter(col("url_hash").isin(ks.map(Long.box).toSeq: _*))
         case None => raw
       }
-      (if (pruned.columns.contains("_hb")) pruned.drop("_hb") else pruned)
-        .withColumn("_add_batch", lit(b))
+      if (pruned.columns.contains("_hb")) pruned.drop("_hb") else pruned
     }
-    val adds = readDeltaAdds(table, baseV.getOrElse(Long.MinValue), v).map { a =>
-      keys.fold(a)(ks => a.filter(col("url_hash").isin(ks.map(Long.box).toSeq: _*)))
-    }
+    val after = baseV.getOrElse(Long.MinValue)
+    val adds = readDeltaAdds(table, after, v).map(keyed)
     val all = (base, adds) match {
       case (Some(b), Some(a)) => b.unionByName(a)
       case (Some(b), None)    => b
       case (None, Some(a))    => a
       case (None, None)       => return schemaOf.limit(0)
     }
-    // no broadcast hint on the del keys: politeness-bounded del sets are
+    // no broadcast hint on the removal keys: politeness-bounded sets are
     // broadcast by AQE from runtime stats anyway; unbounded (bench-sized)
     // ones become a partitioned join instead of a driver-built broadcast
-    val view = readDeltaDels(table, baseV.getOrElse(Long.MinValue), v) match {
-      case Some(dels) =>
-        all.join(dels,
-          all("url_hash") === dels("_del_hash") && dels("_del_batch") > all("_add_batch"),
-          "left_anti")
+    removalsOf.get(table).flatMap(readDeltaAdds(_, after, v)) match {
+      case Some(removed) => all.join(keyed(removed.select("url_hash")), Seq("url_hash"), "left_anti")
       case None => all
     }
-    view.drop("_add_batch")
   }
 
   /**
@@ -307,20 +309,16 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
   def readViewKeyed(table: String, v: Long, schemaOf: => DataFrame,
       keys: Array[Long], baseKeys: Option[Array[Long]] = None): DataFrame =
     if (keys.isEmpty) schemaOf.limit(0)
-    else readViewCapped(table, v, schemaOf, v, Some(keys), Some(baseKeys.getOrElse(keys)))
+    else view(table, v, schemaOf, Some(keys), Some(baseKeys.getOrElse(keys)))
 
   /** Fold all deltas ≤ v into a new base snapshot at v, range-clustered and
     * bucket-partitioned on url_hash (see writeBase) so the keyed membership
-    * probes prune files and row groups. (Old versions are retained for
-    * time-travel/resume, exactly like Iceberg snapshots; GC of expired
-    * snapshots is an offline concern.) */
-  def compact(table: String, v: Long, schemaOf: => DataFrame, partitions: Int): Unit = {
-    // bases capped at v-1: a base already at v can only be the orphan of a
-    // crashed previous attempt at this same compaction — reading it would
-    // poison the recompaction (deltas at v are included either way)
-    val view = readViewCapped(table, v, schemaOf, v - 1)
-    writeBase(table, v, view, clusterPartitions = partitions)
-  }
+    * probes prune files and row groups. Call after [[begin]]`(v)`: a base a
+    * crashed attempt left at v is gone, so the view reads the previous
+    * base. (Old versions are retained for time-travel/resume, exactly like
+    * Iceberg snapshots; [[expireBefore]] drops them.) */
+  def compact(table: String, v: Long, schemaOf: => DataFrame, partitions: Int): Unit =
+    writeBase(table, v, readView(table, v, schemaOf), clusterPartitions = partitions)
 
   /** Append-only log table written per batch under `<table>/batch=<id>`;
     * retry overwrites the same directory (idempotent). Readers filter
@@ -409,8 +407,6 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
         .foreach(b => StateStore.deleteRecursively(baseDir(table, b)))
       listIds(rootPath.resolve(table).resolve("delta_add"), "batch=", Long.MinValue, keep)
         .foreach(b => StateStore.deleteRecursively(addDir(table, b)))
-      listIds(rootPath.resolve(table).resolve("delta_del"), "batch=", Long.MinValue, keep)
-        .foreach(b => StateStore.deleteRecursively(delDir(table, b)))
     }
 
   /** expire for snapshot tables (seeds/summary): keep only the latest

@@ -525,10 +525,14 @@ class CrawlSpec extends AnyFunSuite {
     eng.requestStop()
     val more = eng.run(5)
     assert(more.isEmpty)
-    val states = eng.store.readLog("ledger", Long.MaxValue).get
-      .select("state").collect().map(_.getString(0)).toSet
-    assert(states.contains("STOPPED"))
+    // the stop commits as its own version, so the committed ledger shows it
+    // and the next batch takes the version after it
+    def rows() = eng.ledger().get.orderBy("batch_id").select("batch_id", "state")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows() == Seq((0L, "SUCCESS"), (1L, "STOPPED")))
     eng.clearStop()
+    eng.run(1)
+    assert(rows() == Seq((0L, "SUCCESS"), (1L, "STOPPED"), (2L, "SUCCESS")))
   }
 
   test("notifier: health anomalies alert once per condition (U6, weibo.py:436-450)") {
@@ -748,8 +752,8 @@ class CrawlResilienceSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("orphan uncommitted version from a crashed batch is invisible and overwritten on retry") {
     val dir = tmp()
     // compactEvery=1 ⇒ every batch also writes a base snapshot, so the crash
-    // leaves BOTH orphan deltas and an orphan base — the retry must overwrite
-    // all of them (a crashed compaction replays deterministically)
+    // leaves BOTH orphan deltas and an orphan base — the retry must read
+    // none of them (a crashed compaction replays deterministically)
     val cfg = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, compactEvery = 1)
     val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
     eng.initialize(seeds(4)); eng.run(1)
@@ -757,7 +761,8 @@ class CrawlResilienceSpec extends org.scalatest.funsuite.AnyFunSuite {
     // pointer still 0
     val garbage = eng.frontier().limit(1)
     eng.store.writeDeltaAdds("frontier", 1L, garbage)
-    eng.store.writeDeltaDels("frontier", 1L, eng.frontier().limit(3).select("url_hash"))
+    eng.store.writeDeltaAdds("seen", 1L, eng.frontier().limit(3)
+      .select($"url_hash", $"url_canon", lit(1L).as("first_batch")))
     eng.store.writeBase("seen", 1L, eng.seen().limit(0))
     eng.store.appendLog("parsed", 1L, eng.fetched().get.limit(1))
     assert(eng.store.committedBatch == 0L)
@@ -776,6 +781,41 @@ class CrawlResilienceSpec extends org.scalatest.funsuite.AnyFunSuite {
     def f(e: CrawlEngine) = e.fetched().get.select("url_hash", "batch_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(f(eng2) == f(ref), "retry after crash diverges from clean run")
+
+    // a kill just before store.commit(1): batch 1 wrote everything, the
+    // pointer still says 0. A rotation or a purge takes version 1 instead of
+    // a retry and must not expose what the killed batch left there.
+    def killedBeforeCommit(): String = {
+      val d = tmp()
+      val e = new CrawlEngine(spark, pagesDF, d, cfg)
+      e.initialize(seeds(4)); e.run(2); e.store.commit(0L)
+      d
+    }
+    def afterOneBatch(): String = {
+      val d = tmp()
+      new CrawlEngine(spark, pagesDF, d, cfg).initialize(seeds(4))
+      new CrawlEngine(spark, pagesDF, d, cfg).run(1)
+      d
+    }
+    def noRefetch(e: CrawlEngine, arm: String): Unit = assert(
+      e.fetched().get.groupBy("url_hash").count().filter($"count" > 1).count() == 0,
+      s"$arm: a url was fetched twice")
+    val newEnd = new java.sql.Timestamp(PagesGen.BaseTsMillis + 3600_000L)
+    val rotated = Seq(killedBeforeCommit(), afterOneBatch()).map { d =>
+      val e = new CrawlEngine(spark, pagesDF, d, cfg)
+      e.rotateWindows(newEnd); e.run(2); e
+    }
+    noRefetch(rotated.head, "rotate")
+    assert(f(rotated.head) == f(rotated(1)), "rotate over a killed batch diverges from a clean rotate")
+    val host = new CrawlEngine(spark, pagesDF, afterOneBatch(), cfg).frontier()
+      .select("host").distinct().orderBy("host").head().getString(0)
+    val purged = Seq(killedBeforeCommit(), afterOneBatch()).map { d =>
+      val e = new CrawlEngine(spark, pagesDF, d, cfg.copy(robotsDisallow = Seq((host, "/"))))
+      assert(e.purgeRobotsBlocked() > 0, "premise: the rule blocks frontier rows")
+      e.run(2); e
+    }
+    noRefetch(purged.head, "purge")
+    assert(f(purged.head) == f(purged(1)), "purge over a killed batch diverges from a clean purge")
   }
 }
 
@@ -940,6 +980,40 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     // arithmetic size maintenance stays exact against the real views
     assert(ms.last("seen_size") == eng.seen().count())
     assert(ms.last("frontier_size") == eng.frontier().count())
+  }
+
+  test("frontier removals are the seen adds: paired bases, disjoint views, exact ledger sizes") {
+    val dir = tmp()
+    val cfg = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, compactEvery = 2,
+      maxDepth = 8, robotsDisallow = Seq(("h0.example.test", "/u/2/")))
+    def check(e: CrawlEngine, step: String): Unit = {
+      val c = e.store.committedBatch
+      assert(e.store.latestBase("frontier", c) == e.store.latestBase("seen", c),
+        s"$step: frontier and seen bases differ")
+      val frontierDirs = new java.io.File(s"$dir/frontier").list().toSet
+      assert(frontierDirs.subsetOf(Set("base", "delta_add")),
+        s"$step: the frontier holds more than bases and add deltas: $frontierDirs")
+      val fr = e.frontier().select("url_hash")
+      val sn = e.seen().select("url_hash")
+      assert(fr.join(sn, Seq("url_hash")).count() == 0, s"$step: frontier ∩ seen ≠ ∅")
+      val last = e.ledger().get.orderBy($"batch_id".desc)
+        .select("frontier_size", "seen_size").head()
+      assert((last.getLong(0), last.getLong(1)) == ((fr.count(), sn.count())),
+        s"$step: ledger sizes differ from the views")
+    }
+    val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
+    eng.initialize(seeds(6))
+    eng.run(3); check(eng, "batches") // compaction at batch 1, batch 2 in deltas
+    eng.rotateWindows(new java.sql.Timestamp(PagesGen.BaseTsMillis + 3600_000L))
+    check(eng, "rotation")
+    eng.run(1); check(eng, "batch after rotation")
+    val host = eng.frontier().select("host").distinct().orderBy("host").head().getString(0)
+    val eng2 = new CrawlEngine(spark, pagesDF, dir,
+      cfg.copy(robotsDisallow = cfg.robotsDisallow :+ ((host, "/"))))
+    assert(eng2.purgeRobotsBlocked() > 0, "premise: the rule change blocks frontier rows")
+    check(eng2, "purge")
+    eng2.run(2); check(eng2, "batches after purge") // compaction at batch 7
+    eng2.expireOldState(); check(eng2, "expire")
   }
 
   test("compaction folds deltas: views identical with and without it") {
