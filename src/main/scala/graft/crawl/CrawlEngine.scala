@@ -269,13 +269,7 @@ class CrawlEngine(
   /** running |seen| — avoids a count job per batch; exact because every
     * scheduled/blocked url is frontier-unique and anti-joined against seen. */
   private var seenSizeCache: Long = -1L
-  private def seenSize(committed: Long): Long = {
-    if (seenSizeCache < 0) {
-      seenSizeCache = lastLedgerMetric(committed, "seen_size")
-        .getOrElse(if (committed >= 0) seen(committed).count() else 0L)
-    }
-    seenSizeCache
-  }
+  private def seenSize(committed: Long): Long = { loadSizes(committed); seenSizeCache }
 
   /** previous batch's scheduled-row count (this engine instance only; -1 =
     * no history) — the rank-plan regime predictor. Deliberately NOT
@@ -290,19 +284,20 @@ class CrawlEngine(
   /** running |frontier| — same arithmetic (exact: every seen add leaves the
     * frontier, every frontier add is frontier-absent). */
   private var frontierSizeCache: Long = -1L
-  private def frontierSize(committed: Long): Long = {
-    if (frontierSizeCache < 0) {
-      frontierSizeCache = lastLedgerMetric(committed, "frontier_size")
-        .getOrElse(frontier(committed).count())
-    }
-    frontierSizeCache
-  }
+  private def frontierSize(committed: Long): Long = { loadSizes(committed); frontierSizeCache }
 
-  private def lastLedgerMetric(committed: Long, colName: String): Option[Long] =
-    ledger(committed).flatMap { l =>
-      val rows = l.filter($"state".isin("SUCCESS", "ROTATED", "PURGED")).orderBy($"batch_id".desc)
-        .select(colName).limit(1).collect()
-      if (rows.nonEmpty && rows(0).getLong(0) >= 0) Some(rows(0).getLong(0)) else None
+  /** A resumed engine's running sizes: both from ONE read of the latest
+    * ledger row that carries them; a size the ledger lacks is counted from
+    * its view. Every commit and initialize set both caches. */
+  private def loadSizes(committed: Long): Unit =
+    if (seenSizeCache < 0 || frontierSizeCache < 0) {
+      val last = ledger(committed).flatMap(_.filter($"state".isin("SUCCESS", "ROTATED", "PURGED"))
+        .orderBy($"batch_id".desc).select("seen_size", "frontier_size").limit(1).collect().headOption)
+      def logged(i: Int): Option[Long] = last.map(_.getLong(i)).filter(_ >= 0)
+      if (seenSizeCache < 0)
+        seenSizeCache = logged(0).getOrElse(if (committed >= 0) seen(committed).count() else 0L)
+      if (frontierSizeCache < 0)
+        frontierSizeCache = logged(1).getOrElse(frontier(committed).count())
     }
 
   private def emptyFrontier: DataFrame = Seq.empty[(String, String, Long, String, Int,
@@ -331,12 +326,16 @@ class CrawlEngine(
     * found=false even when the page exists. */
   def initializeWithFrontier(frontier: DataFrame): Unit = {
     require(store.committedBatch < 0, s"state at $stateDir already initialized")
+    // the frontier's size piggybacks on its base write; seen starts empty
+    val frontObs = org.apache.spark.sql.Observation()
     store.writeBase("frontier", -1L,
       frontier.withColumn("url_hash", xxhash64($"url_canon")),
-      clusterPartitions = cfg.shufflePartitions)
+      clusterPartitions = cfg.shufflePartitions, rowCount = Some(frontObs))
     store.writeBase("seen", -1L, emptySeen)
     // version -1 is readable but the pointer still says -1 ⇒ batch 0 is next
     store.commit(-1L)
+    frontierSizeCache = frontObs.get("n").asInstanceOf[Long]
+    seenSizeCache = 0L
   }
 
   def frontier(v: Long = store.committedBatch): DataFrame = store.readView("frontier", v, emptyFrontier)

@@ -3,8 +3,9 @@ package graft.crawl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, lit, shiftrightunsigned}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 
 /**
  * Snapshot-versioned, atomically-committed table state — the engine's
@@ -48,6 +49,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    (readers bound by the `_COMMITTED` pointer), and [[begin]] deletes
  *    what a crashed attempt left before the version is written again.
  *
+ *    A base is IMMUTABLE once its `_SUCCESS` is written, so its file index
+ *    (the listing Spark does to resolve a read — a parallel listing job
+ *    once a bucketed base has more than 32 `_hb=` dirs) is built once per
+ *    store and reused by every later read of that base: the views, the
+ *    keyed reads with their `_hb` pruning, compaction and the filter build.
+ *    The entry is checked against the identity (file key, mtime) of the
+ *    base's `_SUCCESS` on every read, so a base rewritten at the same
+ *    version — a retry after [[begin]], or another store on the same dir —
+ *    is listed again; [[writeBase]], [[begin]] and [[expireBefore]] also
+ *    drop the entries of the bases they replace or delete.
+ *
  *  - a single store-level `_COMMITTED` pointer is flipped via write-temp +
  *    ATOMIC_MOVE — the one-file analog of an Iceberg snapshot commit covering
  *    all tables of the batch;
@@ -74,7 +86,12 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     * StateStore` jobs). Schemas are constant per family for the life of a
     * store, so the FIRST read infers and later reads reuse. The cached
     * schema is what Spark inferred (partition columns like `_hb`/`batch`
-    * included), so reads are byte-identical to the uncached ones. */
+    * included), so reads are byte-identical to the uncached ones.
+    *
+    * A base read goes one step further: [[baseReads]] keeps its whole
+    * resolved relation (schema AND file index), since its files never
+    * change; logs and deltas keep only the schema, as their file sets grow
+    * with every batch. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
   private def readCached(key: String, basePath: Option[String], paths: Seq[String]): DataFrame = {
@@ -145,6 +162,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     * version (batch, rotation, purge, stop) the retry writes. */
   def begin(b: Long): Unit = {
     require(b > committedBatch, s"version $b is already committed")
+    baseReads.keySet().forEach(t => dropBaseRead(t, _ == b))
     val st = Files.list(rootPath)
     try st.iterator().forEachRemaining { t =>
       Seq(t.resolve(s"v=$b"), t.resolve(s"batch=$b"), t.resolve("base").resolve(s"v=$b"),
@@ -197,6 +215,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
    */
   def writeBase(table: String, v: Long, df: DataFrame, clusterPartitions: Int = 0,
       rowCount: Option[org.apache.spark.sql.Observation] = None): Unit = {
+    dropBaseRead(table, _ == v)
     val dir = baseDir(table, v).toString
     // rowCount piggybacks the snapshot size on the write job (no extra count
     // action). It observes ABOVE the range exchange: the range partitioner's
@@ -214,28 +233,62 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
       // materialized snapshot size, which the write pays anyway.
       val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        counted(cached.repartitionByRange(clusterPartitions, col("url_hash"))
-            .sortWithinPartitions("url_hash"))
+        // the sort leads with `_hb`: the partitioned write needs its input
+        // ordered by `_hb`, and a sort on url_hash alone (signed, so not
+        // `_hb` order) got replaced by the write's own `_hb` sort, leaving
+        // files unsorted and row-group min/max spanning the bucket. The
+        // observation sits below the sort so nothing hides the ordering.
+        counted(cached.repartitionByRange(clusterPartitions, col("url_hash")))
           .withColumn("_hb", hbCol)
+          .sortWithinPartitions("_hb", "url_hash")
           .write.mode("overwrite").option("compression", codec).partitionBy("_hb").parquet(dir)
       } finally cached.unpersist()
     } else counted(df).write.mode("overwrite").option("compression", codec).parquet(dir)
   }
 
-  /** Base snapshot as stored (with `_hb` when bucket-partitioned). An empty
-    * partitioned write leaves no data files to infer a schema from — detect
-    * that cheaply (no thrown/caught AnalysisException per read) and fall
-    * back to the empty frame. */
+  /** The resolved read of one base: its version, the identity of its
+    * `_SUCCESS` marker when it was listed, and the analyzed relation. */
+  private case class BaseRead(v: Long, stamp: AnyRef, plan: LogicalPlan)
+  /** One entry per table, the base it read last: the engine reads only the
+    * latest base, and an older base's entry would only hold memory. */
+  private val baseReads = new java.util.concurrent.ConcurrentHashMap[String, BaseRead]()
+  private def dropBaseRead(table: String, versions: Long => Boolean): Unit =
+    baseReads.computeIfPresent(table, (_, r) => if (versions(r.v)) null else r)
+
+  /** Identity of a base's `_SUCCESS` (file key plus last-modified time):
+    * a rewrite of the version makes a new marker. None if it is gone. */
+  private def successStamp(dir: Path): Option[AnyRef] =
+    try {
+      val a = Files.readAttributes(dir.resolve("_SUCCESS"),
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      Some((a.fileKey(), a.lastModifiedTime()))
+    } catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Base snapshot as stored (with `_hb` when bucket-partitioned), listed
+    * once per base (see the class doc). An empty partitioned write leaves
+    * no data files to infer a schema from — detect that cheaply (no
+    * thrown/caught AnalysisException per read) and fall back to the empty
+    * frame. */
   private def readBaseRaw(table: String, b: Long, schemaOf: => DataFrame): DataFrame = {
     val dir = baseDir(table, b)
-    val st = Files.list(dir)
-    val hasData =
-      try st.anyMatch(p => {
-        val n = p.getFileName.toString
-        n.startsWith("_hb=") || n.endsWith(".parquet")
-      })
-      finally st.close()
-    if (hasData) readCached(s"base:$table", None, Seq(dir.toString)) else schemaOf.limit(0)
+    val stamp = successStamp(dir)
+    val known = Option(baseReads.get(table)).filter(r => r.v == b && stamp.contains(r.stamp))
+    known.orElse {
+      val st = Files.list(dir)
+      val hasData =
+        try st.anyMatch(p => {
+          val n = p.getFileName.toString
+          n.startsWith("_hb=") || n.endsWith(".parquet")
+        })
+        finally st.close()
+      if (!hasData) None
+      else {
+        val plan = graftbridge.analyzedPlan(readCached(s"base:$table", None, Seq(dir.toString)))
+        val read = BaseRead(b, stamp.orNull, plan)
+        if (stamp.isDefined) baseReads.put(table, read)
+        Some(read)
+      }
+    }.fold(schemaOf.limit(0))(r => graftbridge.ofPlan(spark, r.plan))
   }
 
   /** Per-batch added rows — O(batch) bytes. */
@@ -403,6 +456,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     * a full copy per compaction forever. */
   def expireBefore(table: String, v: Long): Unit =
     latestBase(table, v).foreach { keep =>
+      dropBaseRead(table, _ < keep)
       listIds(rootPath.resolve(table).resolve("base"), "v=", Long.MinValue, keep - 1)
         .foreach(b => StateStore.deleteRecursively(baseDir(table, b)))
       listIds(rootPath.resolve(table).resolve("delta_add"), "batch=", Long.MinValue, keep)

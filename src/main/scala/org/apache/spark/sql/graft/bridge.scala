@@ -45,6 +45,19 @@ object graftbridge {
   def planHash(df: Dataset[Row]): Int =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.semanticHash()
 
+  /** Analyzed logical plan of a DataFrame: its relations resolved (a file
+    * source's listing done), ready to re-wrap with [[ofPlan]]. */
+  def analyzedPlan(df: Dataset[Row]): catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** A new DataFrame over an analyzed plan, resolving nothing again (the
+    * package-private Dataset factory). The plan is wrapped in a fresh
+    * Project so each DataFrame's tags land on its own node, never on the
+    * shared plan. */
+  def ofPlan(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): Dataset[Row] =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.Project(plan.output, plan))
+
   /** DataFrame → RDD[InternalRow] (post-optimization physical output). */
   def toInternalRdd(df: Dataset[Row]): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd

@@ -20,6 +20,21 @@ object SparkTestSession {
     .getOrCreate()
 }
 
+object CrawlFixtures {
+  /** Every page as a depth-0 frontier row (all 64 `_hb` buckets filled at
+    * the specs' 512 pages): rows the robots rules block are already in the
+    * frontier, as after a rule change. */
+  def preload(pages: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    pages.select(col("url"),
+      gf.canonicalize_url(col("url")).as("url_canon"),
+      xxhash64(gf.canonicalize_url(col("url"))).as("url_hash"),
+      gf.url_host(col("url")).as("host"),
+      lit(0).as("depth"), col("warc_ts").as("priority_ts"), lit("pre").as("seed_id"),
+      lit(new java.sql.Timestamp(0L)).as("since_ts"),
+      lit(new java.sql.Timestamp(PagesGen.BaseTsMillis + 86400000L)).as("end_ts"),
+      lit(-1L).as("discovered_batch"))
+}
+
 /**
  * End-to-end crawl-engine goldens (FIXTURES.md §5, SURVEY.md §5):
  * byte-identical parse invariant, reference crawl ordering, seen-set
@@ -351,16 +366,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(eng.frontier().filter($"host" === megaHost).count() == 0)
   }
 
-  /** Every page as a depth-0 frontier row: rows the robots rules block are
-    * already in the frontier, as after a rule change. */
-  private def preload = pagesDF.select($"url",
-    gf.canonicalize_url($"url").as("url_canon"),
-    xxhash64(gf.canonicalize_url($"url")).as("url_hash"),
-    gf.url_host($"url").as("host"),
-    lit(0).as("depth"), $"warc_ts".as("priority_ts"), lit("pre").as("seed_id"),
-    lit(new java.sql.Timestamp(0L)).as("since_ts"),
-    lit(new java.sql.Timestamp(PagesGen.BaseTsMillis + 86400000L)).as("end_ts"),
-    lit(-1L).as("discovered_batch"))
+  private def preload = CrawlFixtures.preload(pagesDF)
 
   private val megaRules = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4,
     maxDepth = 8, compactEvery = 3, bloomMinSeen = 1,
@@ -1176,6 +1182,108 @@ class IncrementalStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"bloom probe expression serialized to ${bos.size()} bytes — " +
         "delta blobs are riding the task closure instead of broadcasts")
     (recents :+ snap).foreach(_.unpersist())
+  }
+
+  test("base files are sorted by url_hash: initialize's, compaction's and rotation's bases") {
+    val dir = tmp()
+    val eng = new CrawlEngine(spark, pagesDF, dir,
+      CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, compactEvery = 2))
+    // the seeds table rotation re-queues, under a preloaded frontier
+    eng.store.write("seeds", -1L, seeds(6).toDF("seed_id", "root_url", "since_ts", "end_ts"))
+    eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
+    eng.run(2) // batch 1 compacts
+    eng.rotateWindows(new java.sql.Timestamp(PagesGen.BaseTsMillis + 3600_000L)) // version 2
+    for (table <- Seq("frontier", "seen"); v <- Seq(-1, 1, 2)
+         if new java.io.File(s"$dir/$table/base/v=$v").list().exists(_.startsWith("_hb="))) {
+      // one split reads a file in order, and files are read one after
+      // another: the id orders the rows of each file as stored
+      val files = spark.read.parquet(s"$dir/$table/base/v=$v")
+        .select(input_file_name(), monotonically_increasing_id(), $"url_hash").collect()
+        .groupBy(_.getString(0)).values.map(_.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq)
+      if (table == "frontier")
+        assert(files.count(_.length > 1) >= 8, s"premise: frontier base v=$v has multi-row files")
+      val unsorted = files.map(f => f.zip(f.drop(1)).count { case (a, b) => a > b }).sum
+      assert(unsorted == 0,
+        s"$table base v=$v: $unsorted adjacent row pairs out of url_hash order within a file")
+    }
+  }
+
+  test("each immutable base is listed once per engine: no parallel listing job repeats") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val dir = tmp()
+    val cfg = CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, compactEvery = 2)
+    val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
+    eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
+    val buckets = new java.io.File(s"$dir/frontier/base/v=-1").list().count(_.startsWith("_hb="))
+    assert(buckets > 32, s"premise: $buckets buckets, above Spark's parallel listing threshold")
+    // the job description of a parallel listing names the listed dirs
+    val baseOf = raw"\Q$dir\E/frontier/base/v=(-?\d+)/".r
+    val listed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files"))
+          .flatMap(baseOf.findFirstMatchIn).foreach(m => listed.add(m.group(1).toLong))
+    }
+    def drained(): Seq[Long] = {
+      org.apache.spark.GraftTestBus.drain(sc)
+      val out = listed.asScala.toSeq
+      listed.clear()
+      out
+    }
+    sc.addSparkListener(listener)
+    try {
+      val perBatch = (0 until 4).map { _ => eng.runBatch(); drained() } // compactions at 1, 3
+      assert(perBatch(0) == Seq(-1L),
+        s"batch 0 listed ${perBatch(0)}: initialize's base once, no frontier count")
+      assert(perBatch(1).isEmpty && perBatch(3).isEmpty,
+        s"compacting batches listed ${perBatch(1)} and ${perBatch(3)}")
+      assert(perBatch.flatten == Seq(-1L, 1L),
+        s"per batch ${perBatch.mkString(", ")}: each base at most once per engine")
+      val resumed = new CrawlEngine(spark, pagesDF, dir, cfg)
+      resumed.run(2) // batch 5 compacts
+      assert(drained() == Seq(3L), "a resumed engine lists its base once")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("base read reuse is invalidated: a base rewritten at its version, expired bases") {
+    val dir = tmp()
+    def rows(lo: Long, n: Long) =
+      spark.range(lo, lo + n).select(xxhash64($"id").as("url_hash"), $"id".as("payload"))
+    def ids(s: StateStore) = s.readView("t", 0L, rows(0, 0))
+      .select("payload").collect().map(_.getLong(0)).sorted.toSeq
+    def keyedIds(s: StateStore, keys: Array[Long]) = s.readViewKeyed("t", 0L, rows(0, 0), keys)
+      .select("payload").collect().map(_.getLong(0)).sorted.toSeq
+    val store = new StateStore(spark, dir)
+    store.writeBase("t", 0L, rows(0, 400), clusterPartitions = 4)
+    store.commit(0L)
+    val other = new StateStore(spark, dir)
+    assert(ids(store) == (0L until 400L) && ids(other) == (0L until 400L))
+    // a crash before the commit of version 0, then its retry: the pointer
+    // is back before 0, and begin(0) + a base of other rows rewrite v=0
+    store.commit(-1L)
+    store.begin(0L)
+    store.writeBase("t", 0L, rows(1000, 300), clusterPartitions = 4)
+    store.commit(0L)
+    val newKeys = rows(1000, 3).collect().map(_.getLong(0))
+    for ((s, name) <- Seq((store, "the rewriting store"), (other, "a second store"))) {
+      assert(ids(s) == (1000L until 1300L), s"$name read the old base")
+      assert(keyedIds(s, newKeys) == (1000L until 1003L), s"$name's keyed read missed the new base")
+    }
+
+    // expiry deletes bases an engine has read: no later read touches them
+    val eng = new CrawlEngine(spark, pagesDF, tmp(),
+      CrawlConfig(defaultHostBudget = 3, shufflePartitions = 4, compactEvery = 2))
+    eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
+    eng.run(4) // bases 1 and 3
+    val before = (eng.frontier().count(), eng.seen().count())
+    eng.expireOldState()
+    assert(eng.store.latestBase("frontier", 2L).isEmpty, "premise: the bases before 3 are deleted")
+    assert((eng.frontier().count(), eng.seen().count()) == before)
+    assert(eng.frontier(1L).count() == 0L, "a read at an expired version finds no state")
+    eng.run(1)
+    assert(eng.fetched().get.groupBy("url_hash").count().filter($"count" > 1).count() == 0)
   }
 
   test("bloom lifecycle: one build per qualifying seen base; a resumed engine loads the latest base's filter") {
