@@ -13,12 +13,17 @@ then pass the log file(s):
     python3 scripts/spark_jobs.py --summary /tmp/evlog/local-*  # counts only
 
 Each job line gives the job id, its start time relative to the first job,
-the name of its result stage (Spark names a stage after its call site, e.g.
+the crawl batch it ran for (the `graft.batch` local property that
+`CrawlEngine.runBatch` sets on its jobs; `-` outside a batch), the name of
+its result stage (Spark names a stage after its call site, e.g.
 `count at CrawlEngine.scala:603`) and, for a parallel file listing (its
 `spark.job.description` starts with "Listing leaf files"), the state
-directory it listed. The summary counts jobs per call site and listings per
-listed directory: a base directory (`<table>/base/v=<B>`) listed more often
-than the number of engines that read it is being re-listed.
+directory it listed. The summary counts jobs per batch, per call site and
+listings per listed directory: a base directory (`<table>/base/v=<B>`)
+listed more often than the number of engines that read it is being
+re-listed. Batch ids restart with each engine's state directory, so a run
+that crawls several directories (set-ups, a resume) lists each batch id
+once per run of it, in order.
 """
 import argparse
 import collections
@@ -27,6 +32,7 @@ import re
 
 LISTING = "Listing leaf files"
 LISTED_DIR = re.compile(r"file:(\S+?/base/v=-?\d+)/")
+BATCH = "graft.batch"
 
 
 def jobs(path):
@@ -48,7 +54,7 @@ def jobs(path):
             if desc.startswith(LISTING):
                 m = LISTED_DIR.search(desc)
                 listed = m.group(1) if m else "(other dirs)"
-            yield e["Job ID"], e["Submission Time"], site, listed
+            yield e["Job ID"], e["Submission Time"], site, listed, props.get(BATCH)
 
 
 def main():
@@ -61,9 +67,20 @@ def main():
         print(f"== {path}: {len(js)} jobs, {sum(1 for j in js if j[3])} listing jobs")
         t0 = js[0][1] if js else 0
         if not a.summary:
-            for jid, t, site, listed in js:
+            for jid, t, site, listed, batch in js:
                 mark = f"  LIST {listed}" if listed else ""
-                print(f"{jid:6d} {(t - t0) / 1000:9.3f}s  {site}{mark}")
+                print(f"{jid:6d} {(t - t0) / 1000:9.3f}s  {batch or '-':>5}  {site}{mark}")
+        # consecutive jobs of one batch id are one batch run
+        runs, prev = [], None
+        for j in js:
+            if j[4] is not None and j[4] == prev:
+                runs[-1][1] += 1
+            elif j[4] is not None:
+                runs.append([j[4], 1])
+            prev = j[4]
+        print("-- jobs per batch run (graft.batch, in run order)")
+        for batch, n in runs:
+            print(f"{n:6d}  batch {batch}")
         sites = collections.Counter(j[2] for j in js)
         dirs = collections.Counter(j[3] for j in js if j[3])
         print("-- jobs per call site")

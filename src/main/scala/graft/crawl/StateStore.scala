@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, lit, shiftrightunsigned}
-import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, graftbridge}
 
 /**
  * Snapshot-versioned, atomically-committed table state — the engine's
@@ -77,33 +77,26 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
   Files.createDirectories(rootPath)
   private val committedFile = rootPath.resolve("_COMMITTED")
 
-  /** Parquet read-schema cache, keyed by table family (r6, guide §1/§7.3):
-    * every schema-less `spark.read.parquet` pays a footer-inference pass —
-    * a 1-task driver job per read. A crawl batch reads each state family
-    * several times (base, deltas, logs), so at toy/oracle scale those
-    * inference jobs plus their planning dominated the batch (measured: q50
-    * spent >half its wall between jobs, with dozens of 1-task `parquet at
-    * StateStore` jobs). Schemas are constant per family for the life of a
-    * store, so the FIRST read infers and later reads reuse. The cached
-    * schema is what Spark inferred (partition columns like `_hb`/`batch`
-    * included), so reads are byte-identical to the uncached ones.
-    *
-    * A base read goes one step further: [[baseReads]] keeps its whole
-    * resolved relation (schema AND file index), since its files never
-    * change; logs and deltas keep only the schema, as their file sets grow
-    * with every batch. */
-  private val schemaCache =
+  /** Data schemas fixed by the caller's code, per table (the engine
+    * registers each state family's at construction). A schema-less
+    * `spark.read.parquet` pays a footer-inference pass — a 1-task job per
+    * read, which at toy/oracle scale dominated a batch (r6: q50 spent over
+    * half its wall between jobs, with dozens of 1-task `parquet at
+    * StateStore` jobs) — so a registered table is read with `.schema(...)`
+    * and never infers; partition columns (`_hb`, `batch`) are still
+    * discovered from the paths and appended after the data columns, as an
+    * inferred read does. An unregistered table infers on every read. A base
+    * read goes one step further: [[baseReads]] keeps its whole resolved
+    * relation (schema AND file index), since its files never change. */
+  private val knownSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private def readCached(key: String, basePath: Option[String], paths: Seq[String]): DataFrame = {
+  def registerSchema(table: String, schema: org.apache.spark.sql.types.StructType): Unit =
+    knownSchemas.put(table, schema)
+
+  private def readParquet(table: String, basePath: Option[String], paths: Seq[String]): DataFrame = {
     val r0 = spark.read
     val r1 = basePath.fold(r0)(b => r0.option("basePath", b))
-    val cached = schemaCache.get(key)
-    if (cached != null) r1.schema(cached).parquet(paths: _*)
-    else {
-      val df = r1.parquet(paths: _*)
-      schemaCache.put(key, df.schema)
-      df
-    }
+    Option(knownSchemas.get(table)).fold(r1)(r1.schema).parquet(paths: _*)
   }
 
   /** Last fully-committed batch id; -1 if none. */
@@ -134,7 +127,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
 
   /** Read snapshot-table state at the given (committed) version; empty DF w/ given schema if absent. */
   def read(table: String, v: Long, schemaOf: => DataFrame): DataFrame =
-    if (exists(table, v)) readCached(s"snap:$table", None, Seq(versionDir(table, v)))
+    if (exists(table, v)) readParquet(table, None, Seq(versionDir(table, v)))
     else schemaOf.limit(0)
 
   /** Write the next version of a snapshot table (overwrite ⇒ retry-idempotent). */
@@ -283,7 +276,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
         finally st.close()
       if (!hasData) None
       else {
-        val plan = graftbridge.analyzedPlan(readCached(s"base:$table", None, Seq(dir.toString)))
+        val plan = graftbridge.analyzedPlan(readParquet(table, None, Seq(dir.toString)))
         val read = BaseRead(b, stamp.orNull, plan)
         if (stamp.isDefined) baseReads.put(table, read)
         Some(read)
@@ -295,20 +288,28 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
   def writeDeltaAdds(table: String, batch: Long, adds: DataFrame): Unit =
     adds.write.mode("overwrite").option("compression", codec).parquet(addDir(table, batch).toString)
 
+  /** [[writeDeltaAdds]] of a driver-local row set, written by [[writeDirect]]. */
+  def writeDeltaAddsDirect(table: String, batch: Long,
+      schema: org.apache.spark.sql.types.StructType, rows: Iterable[Row]): Unit =
+    writeDirect(addDir(table, batch), schema, rows)
+
   /** Union of add-deltas in (afterExcl, upToIncl]. */
   private def readDeltaAdds(table: String, afterExcl: Long, upToIncl: Long): Option[DataFrame] = {
     val ids = listIds(rootPath.resolve(table).resolve("delta_add"), "batch=", afterExcl, upToIncl)
     if (ids.isEmpty) None
-    else Some(readCached(s"adds:$table", None, ids.map(addDir(table, _).toString)))
+    else Some(readParquet(table, None, ids.map(addDir(table, _).toString)))
   }
 
   /** Reconstruct the table view at batch `v`: base ∪ adds, minus the
     * table's removals since the base (see the class doc). */
   def readView(table: String, v: Long, schemaOf: => DataFrame): DataFrame =
-    view(table, v, schemaOf, None, None)
+    view(table, v, schemaOf, None, None, removals = true)
 
+  /** base ∪ adds at `v`, the adds narrowed to `keys` and the base to
+    * `baseKeys`, with the table's removals since the base taken away when
+    * `removals` is set. */
   private def view(table: String, v: Long, schemaOf: => DataFrame,
-      keys: Option[Array[Long]], baseKeys: Option[Array[Long]]): DataFrame = {
+      keys: Option[Array[Long]], baseKeys: Option[Array[Long]], removals: Boolean): DataFrame = {
     val baseV = latestBase(table, v)
     def keyed(df: DataFrame): DataFrame =
       keys.fold(df)(ks => df.filter(col("url_hash").isin(ks.map(Long.box).toSeq: _*)))
@@ -337,7 +338,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     // no broadcast hint on the removal keys: politeness-bounded sets are
     // broadcast by AQE from runtime stats anyway; unbounded (bench-sized)
     // ones become a partitioned join instead of a driver-built broadcast
-    removalsOf.get(table).flatMap(readDeltaAdds(_, after, v)) match {
+    removalsOf.get(table).filter(_ => removals).flatMap(readDeltaAdds(_, after, v)) match {
       case Some(removed) => all.join(keyed(removed.select("url_hash")), Seq("url_hash"), "left_anti")
       case None => all
     }
@@ -351,18 +352,26 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
    * prunes to the touched `_hb=` directories at PLANNING time and to ~|keys|
    * row groups at read time — per-batch read cost sublinear in |state|
    * instead of a full O(|state|) scan per membership check. Callers bound
-   * |keys| (politeness budgets / batch size) and fall back to the
-   * broadcast-semi full scan when the set exceeds the pushdown cap.
-   *
-   * `baseKeys` (⊆ keys) narrows the base read alone, for a caller that
-   * knows the other keys are absent from the base: the engine passes the
-   * keys its seen-base bloom filter flags. The deltas are read for all
-   * `keys`.
+   * |keys| (politeness budgets / batch size).
    */
-  def readViewKeyed(table: String, v: Long, schemaOf: => DataFrame,
-      keys: Array[Long], baseKeys: Option[Array[Long]] = None): DataFrame =
+  def readViewKeyed(table: String, v: Long, schemaOf: => DataFrame, keys: Array[Long]): DataFrame =
     if (keys.isEmpty) schemaOf.limit(0)
-    else view(table, v, schemaOf, Some(keys), Some(baseKeys.getOrElse(keys)))
+    else view(table, v, schemaOf, Some(keys), Some(keys), removals = true)
+
+  /**
+   * The url_hash of every row STORED for `table` at `v` — base ∪ adds in
+   * (B, v], with no removal anti-join — for a membership read that takes
+   * the union of several tables: the frontier's removals since its base are
+   * seen's adds since the same base, so a union that also reads seen's adds
+   * already holds every removed key, and the union is the same key set as
+   * the union of the views. With `keys`, the adds are read for those keys
+   * and the base for `baseKeys` (⊆ keys: a caller that knows the other keys
+   * are absent from the base, e.g. from the seen base's bloom filter), both
+   * pushed as literal predicates as in [[readViewKeyed]]; without, whole.
+   */
+  def storedKeys(table: String, v: Long, schemaOf: => DataFrame,
+      keys: Option[Array[Long]], baseKeys: Option[Array[Long]]): DataFrame =
+    view(table, v, schemaOf, keys, baseKeys.orElse(keys), removals = false).select("url_hash")
 
   /** Fold all deltas ≤ v into a new base snapshot at v, range-clustered and
     * bucket-partitioned on url_hash (see writeBase) so the keyed membership
@@ -380,58 +389,36 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
   def appendLog(table: String, batch: Long, df: DataFrame): Unit =
     df.write.mode("overwrite").option("compression", codec).parquet(rootPath.resolve(table).resolve(s"batch=$batch").toString)
 
-  /** Driver-direct append of a TINY, driver-local log row set (the ledger:
-    * one row per batch). Routing a 1-row LocalRelation through a Spark write
-    * job costs a full plan + job + commit-protocol round per batch — pure
-    * fixed overhead at high batch rates (guide §1.2: per-batch job count is
-    * the scale killer). This writes the parquet file with parquet-mr on the
-    * driver thread: same directory layout, same `_SUCCESS` marker, same
-    * codec, byte-compatible with [[readLog]] (long → required INT64 and
-    * string → optional BINARY/UTF8, matching what a Spark write of the same
-    * local rows produced). Only long/string columns are supported — exactly
-    * the ledger's shape; anything else must go through [[appendLog]]. */
+  /** [[appendLog]] of a driver-local row set (the ledger's one row per
+    * batch, a key-bounded batch's parsed log), written by [[writeDirect]]. */
   def appendLogDirect(table: String, batch: Long,
-      schema: org.apache.spark.sql.types.StructType, rows: Seq[Seq[Any]]): Unit = {
-    import org.apache.parquet.schema.{PrimitiveType, Type, Types => PTypes}
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val dir = rootPath.resolve(table).resolve(s"batch=$batch")
-    StateStore.deleteRecursively(dir) // retry-idempotent, like mode(overwrite)
+      schema: org.apache.spark.sql.types.StructType, rows: Iterable[Row]): Unit =
+    writeDirect(rootPath.resolve(table).resolve(s"batch=$batch"), schema, rows)
+
+  /** Write a driver-local row set as one parquet file under `dir`, then its
+    * `_SUCCESS`, on the calling thread: no Spark job. Routing a few rows
+    * through a Spark write costs a plan, a job and a commit-protocol round
+    * (guide §1.2: per-batch job count is the scale killer). The file goes
+    * through Spark's own parquet writer (`ParquetFileFormat.prepareWrite` →
+    * `OutputWriter`), so types, nullability, the codec and the footer's
+    * Spark schema are what `df.write.parquet` of the same rows produces, and
+    * an empty row set still leaves a file that carries the schema. A retry
+    * overwrites the directory, like mode("overwrite"). */
+  private def writeDirect(dir: Path, schema: org.apache.spark.sql.types.StructType,
+      rows: Iterable[Row]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    StateStore.deleteRecursively(dir)
     Files.createDirectories(dir)
-    val b = PTypes.buildMessage()
-    schema.fields.foreach { f =>
-      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-      f.dataType match {
-        case LongType => b.addField(PTypes.primitive(
-          PrimitiveType.PrimitiveTypeName.INT64, rep).named(f.name))
-        case StringType => b.addField(PTypes.primitive(
-          PrimitiveType.PrimitiveTypeName.BINARY, rep)
-          .as(org.apache.parquet.schema.LogicalTypeAnnotation.stringType()).named(f.name))
-        case other => sys.error(s"appendLogDirect: unsupported type $other for ${f.name}")
-      }
-    }
-    val msgType = b.named("spark_schema")
-    val file = new org.apache.hadoop.fs.Path(dir.resolve("part-00000-direct.parquet").toString)
-    // Spark's own name table, so every codec its parquet writer accepts
-    // ("none", "uncompressed", "lz4_raw", ...) maps the same way here
-    val codecName = org.apache.spark.sql.execution.datasources.parquet
-      .ParquetCompressionCodec.fromString(codec).getCompressionCodec
-    val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(file)
-      .withType(msgType).withCompressionCodec(codecName).build()
-    try rows.foreach { r =>
-      val g = fac.newGroup()
-      schema.fields.zip(r).foreach { case (f, v) =>
-        if (v != null) f.dataType match {
-          case LongType => g.add(f.name, v.asInstanceOf[Long])
-          case StringType => g.add(f.name, v.asInstanceOf[String])
-          case _ => ()
-        }
-      }
-      w.write(g)
-    } finally w.close()
-    // parquet-mr leaves a .crc sidecar; harmless, but Spark's committer does
-    // not produce one — drop it so the directory layout stays identical
-    Files.deleteIfExists(dir.resolve(".part-00000-direct.parquet.crc"))
+    val job = Job.getInstance(new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map("compression" -> codec), schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("direct", 0), TaskType.MAP, 0), 0))
+    val file = dir.resolve("part-00000-direct" + factory.getFileExtension(ctx))
+    val out = factory.newInstance(file.toString, schema, ctx)
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => out.write(toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally out.close()
     Files.createFile(dir.resolve("_SUCCESS"))
   }
 
@@ -482,7 +469,7 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     val found = listIds(dir, "batch=", afterBatch, upToBatch)
       .map(b => dir.resolve(s"batch=$b").toString)
     if (found.isEmpty) None
-    else Some(readCached(s"log:$table", Some(dir.toString), found))
+    else Some(readParquet(table, Some(dir.toString), found))
   }
 }
 

@@ -160,8 +160,8 @@ class CrawlSpec extends AnyFunSuite {
     // to r and to all 20 a_j and on to c_i, and every c_i links back to all
     // 20 b_j. Batch 2 expands 420 back-links onto 21 distinct seen urls,
     // batch 3 expands 400 onto the 20 b_j — below probePushdownMaxKeys, so
-    // the keyed seen read alone must find them; each one it missed would be
-    // fetched again. With the bloom on, compaction every 2 batches gives the
+    // the driver tail's keyed membership read alone must find them; each
+    // one it missed would be fetched again. With the bloom on, compaction every 2 batches gives the
     // filter batch 1's seen base {r, a_i}, and the b_j are seen only in
     // batch 2's delta, which no filter covers: the keyed read must take the
     // seen deltas for every link key, not only the keys the filter flags.
@@ -191,8 +191,8 @@ class CrawlSpec extends AnyFunSuite {
       val ms = eng.run(6)
       val f = eng.fetched().get
       val linksPerBatch = f.groupBy("batch_id").agg(sum("n_outlinks")).collect().map(_.getLong(1))
-      assert(linksPerBatch.max == n * (n + 2) && linksPerBatch.max <= cfg.probePushdownMaxKeys,
-        "premise: batch 2's and 3's back-links take the keyed probe")
+      assert(linksPerBatch.max == n * (n + 2) && linksPerBatch.max <= cfg.probePushdownMaxKeys &&
+        eng.lastTailPath == "driver", "premise: batch 2's and 3's back-links take the keyed probe")
       assert(eng.bloomFullBuilds == (if (minSeen == 1L) 2 else 0), "premise: bloom on/off")
       assert(f.count() == 1 + 3 * n, s"bloomMinSeen=$minSeen: fetched ${f.count()} rows")
       assert(f.groupBy("url_hash").count().filter($"count" > 1).count() == 0,
@@ -1377,20 +1377,18 @@ class WindowAndGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(ms.last("seen_size") == eng.seen().count())
     assert(ms.last("frontier_size") == eng.frontier().count())
 
-    // keyed expansion with more missing urls than probePushdownMaxKeys:
-    // batch 0 parses few pages with few links (keyed path), but a dozen
-    // seeds point outside the corpus, so the processed set on the exclusion
-    // side exceeds the cap. Same crawl as under the default cap.
+    // more missing urls than probePushdownMaxKeys: a dozen seeds point
+    // outside the corpus, so batch 0's processed set on the exclusion side
+    // exceeds the cap. broadcastScheduled keeps every batch on the executor
+    // tail (its mid path) under either cap. Same crawl as under the default cap.
     val cap = 8
     val absent = (0 until 12).map(k => Seed(s"gone$k",
       s"https://g$k.example.test/u/$k/p/0", roots.head.since_ts, roots.head.end_ts))
     val (ref, _) = crawl(roots ++ absent, cfg)
     val (small, sms) = crawl(roots ++ absent, cfg.copy(probePushdownMaxKeys = cap))
     assert(sms.head("not_found") > cap, "batch 0 must miss more urls than the cap")
-    val parsed0 = small.store.readLog("parsed", 0L).get
-      .agg(count(lit(1)), sum(size($"outlinks"))).head()
-    assert(parsed0.getLong(0) <= cap && parsed0.getLong(1) <= cap,
-      "batch 0 must take the keyed expansion path")
+    assert(small.lastTailPath == "executor" && ref.lastTailPath == "executor",
+      "broadcastScheduled batches must take the executor tail")
     def rows(df: org.apache.spark.sql.DataFrame, cols: String*): Seq[String] =
       df.select(cols.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
     val fetchedCols = Seq("host", "batch_id", "fetch_ordinal", "url_hash")
