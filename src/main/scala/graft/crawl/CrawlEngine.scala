@@ -92,8 +92,9 @@ case class Seed(seed_id: String, root_url: String,
  *                           fetch-join output
  * @param probePushdownMaxKeys max probe keys pushed as literal predicates
  *                           into the range-clustered state bases; larger
- *                           probe sets fall back to the broadcast-semi full
- *                           scan (0 disables pushdown). It also bounds the
+ *                           probe sets are joined against the stored rows
+ *                           of both tables in one broadcast of the keys
+ *                           (0 disables pushdown). It also bounds the
  *                           rows a batch brings to the driver: a batch with
  *                           at most this many scheduled and robots-blocked
  *                           rows runs its tail on the driver (collected
@@ -159,7 +160,9 @@ case class CrawlConfig(
  *    driver-direct — a politeness-bounded batch's tail is a handful of
  *    jobs;
  *  - the **executor tail** above the cap: the parse is written by a Spark
- *    job and expansion and membership run as broadcast-semi scans.
+ *    job, the same expansion list is exploded from its read-back, and
+ *    membership is one join of the link keys against the stored seen and
+ *    frontier rows (the driver tail's above-cap membership, on executors).
  *
  * Scale invariants (the parts that survive 100×):
  *  - **rows reach the driver only under the cap**: the driver tail collects
@@ -170,9 +173,10 @@ case class CrawlConfig(
  *    base snapshot only every `compactEvery` batches (StateStore);
  *  - **the big state sides are scanned, never shuffled**: every membership
  *    check against seen/frontier is a keyed read of the bounded batch keys
- *    or a broadcast-semi of them against the big table, then a broadcast
- *    anti-join of the tiny match set back — no sort-merge of 10^10 rows
- *    anywhere;
+ *    or one join of them, broadcast once, against the stored rows of both
+ *    tables; the match set (≤ 2 rows per key) then meets the batch's links
+ *    in an anti-join whose sides are both batch-sized — no sort-merge of
+ *    10^10 rows anywhere;
  *  - **one bloom filter per seen base, built executor-side**, in front of
  *    the one seen check whose answer is unknown (the outlink keys at
  *    expansion; frontier ∩ seen = ∅ needs none). `bloom/v=B` is the filter
@@ -588,7 +592,6 @@ class CrawlEngine(
     store.begin(batchId)
 
     val front = frontier(committed)
-    val seenDf = seen(committed)
     val seenCount = seenSize(committed)
     val frontCount = frontierSize(committed)
 
@@ -641,7 +644,7 @@ class CrawlEngine(
     tailPath = if (onDriver) "driver" else "executor"
     val tail =
       if (onDriver) driverTail(batchId, committed, schedDf, robotsBlocked, robotsBlockedCount)
-      else executorTail(batchId, front, seenDf, schedDf, schedCount, robotsBlocked)
+      else executorTail(batchId, committed, schedDf, schedCount, robotsBlocked)
 
     // arithmetic size updates: seen adds leave the frontier exactly once,
     // frontier adds are frontier-absent (anti-joined in the tails) — no
@@ -752,31 +755,14 @@ class CrawlEngine(
     "bloom" -> CrawlEngine.BloomSchema, "seeds" -> CrawlEngine.SeedsSchema,
     "errors" -> CrawlEngine.ErrorsSchema).foreach { case (t, s) => store.registerSchema(t, s) }
 
-  /** The links a parsed row expands (U5), in page order: per-link-class
-    * expansion caps (see CrawlConfig.expansionCaps) — each page expands at
-    * most cap "paging" (same-host) and cap "cross" (cross-host) links, kept
-    * in page order — pure array ops inside the row, no shuffle, no extra
-    * pass. The parsed log's outlinks column (the page's content) stays
-    * uncapped, like the reference's stored counts. */
-  private def expandCol: org.apache.spark.sql.Column =
-    if (cfg.expansionCaps.isEmpty) $"outlinks"
-    else {
-      def sameHost(u: org.apache.spark.sql.Column) =
-        gf.url_host(gf.canonicalize_url(u)) === $"host"
-      def capped(arr: org.apache.spark.sql.Column, cls: String) =
-        cfg.expansionCaps.get(cls).map(c => slice(arr, 1, c)).getOrElse(arr)
-      concat(
-        capped(filter($"outlinks", u => sameHost(u)), "paging"),
-        capped(filter($"outlinks", u => !sameHost(u)), "cross"))
-    }
-
   /**
    * The executor tail, for batches above the pushdown cap and for
    * broadcastScheduled: the fetch+parse join is written as the parsed log
-   * by a Spark job, the outlinks are exploded from its read-back, and
-   * membership runs as broadcast-semi scans of the state views.
+   * by a Spark job, the [[expansionList]] of its read-back is exploded, and
+   * membership is the [[storedOf]] join — the driver tail's rules, run on
+   * executors.
    */
-  private def executorTail(batchId: Long, front: DataFrame, seenDf: DataFrame,
+  private def executorTail(batchId: Long, committed: Long,
       schedDf: DataFrame, schedCount: Long, robotsBlocked: DataFrame): TailOut = {
     // ---- fetch = lookup into the pages corpus (S1 analog; in tests "fetch"
     // is this join per the driver instruction — no network). left join keeps
@@ -856,8 +842,8 @@ class CrawlEngine(
       sum(when($"in_range", 1L).otherwise(0L)).as("in_range"),
       sum(when(!$"invariant_ok", 1L).otherwise(0L)).as("viol"),
       // free upper bound on this batch's exploded link count (caps and the
-      // depth filter only shrink it) — the expansion plan selector below
-      // reads it instead of paying a separate count job over the link cache
+      // depth bound only shrink it) — the membership build below reads it
+      // instead of paying a separate count job over the link cache
       sum(size($"outlinks")).as("links"),
       approx_count_distinct($"partition_id").as("nparts"))))
     val parsedDf = store.readLog("parsed", batchId, batchId - 1).get.drop("batch")
@@ -886,71 +872,49 @@ class CrawlEngine(
     // frontier; blocked urls are seen-equivalent: never fetch). All three
     // inputs are url_hash-unique and pairwise disjoint — no dedup shuffle
     // needed, and |processed| = scheduled + blocked exactly (the arithmetic
-    // the size caches rely on).
+    // the size caches rely on). Expansion needs no exclusion of them: every
+    // processed row was read from the frontier view at `committed`, so its
+    // key is among the frontier's stored rows that membership takes away.
     val processedRows = {
       val base = parsedDf.select($"url_hash", $"url_canon")
         .unionByName(robotsBlocked.select($"url_hash", $"url_canon"))
       missingRows.map(m => base.unionByName(m.select($"url_hash", $"url_canon")))
         .getOrElse(base)
     }
-    val processedHashes = processedRows.select("url_hash")
 
-    // ---- U5: outlink expansion → next frontier entries. Children inherit
-    // the seed window; priority = linking page's warc_ts (recency prior).
-    // expansion source: every page whose outlinks were extracted (found and
-    // not older than since — includes too-new deferred pages, weibo.py:1700-1718).
+    // ---- U5: outlink expansion → next frontier entries: [[expansionList]]
+    // exploded (null past maxDepth, so those pages drop out). Children
+    // inherit the seed window; priority = linking page's warc_ts (recency
+    // prior). Expansion source: every page whose outlinks were extracted
+    // (found and not older than since — includes too-new deferred pages,
+    // weibo.py:1700-1718).
     //
-    // Membership filters run BEFORE the first-wins dedup shuffle, so the
-    // shuffle carries only genuinely-new links (in steady state most links
-    // point at already-seen pages — filtering after dedup shuffled them all).
-    // CACHED: the exploded+canonicalized link set is referenced by the two
-    // broadcast-semi membership probes and the adds spine — uncached, it
-    // re-ran the explode + canonicalize + hash over the whole batch THREE
-    // times inside the adds write job (a flat term of write_fr_adds,
-    // VERDICT r4 item 3). Slim rows (no page bodies), dropped at end of
-    // batch, disk spill for bench-sized batches.
+    // CACHED: the link rows feed both the membership build and the adds
+    // spine; uncached, the explode + canonicalize + hash re-ran inside the
+    // adds write job (VERDICT r4 item 3). Slim rows (no page bodies),
+    // dropped at end of batch, disk spill for bench-sized batches.
     val linksRaw = parsedDf.filter(size($"outlinks") > 0)
-      .select($"seed_id", $"since_ts", $"end_ts", $"depth", $"warc_ts",
-        explode(expandCol).as("url"))
-      .withColumn("url_canon", gf.canonicalize_url($"url"))
-      .withColumn("url_hash", xxhash64($"url_canon"))
-      .withColumn("child_depth", $"depth" + 1)
-      .filter($"child_depth" <= cfg.maxDepth)
+      .select($"seed_id", $"since_ts", $"end_ts", ($"depth" + 1).as("depth"), $"warc_ts",
+        explode(expansionList).as("l"))
+      .select($"l.url", $"l.url_canon", $"l.url_hash", $"l.host", $"depth", $"warc_ts",
+        $"seed_id", $"since_ts", $"end_ts", $"l.blocked")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ---- F2: seen-set dedup at discovery, first occurrence wins
     // (weibo.py:1698-1699) — the batch's only seen check. frontier ∩ seen = ∅
     // after every commit (initialize starts seen empty; batches and purges
     // move rows frontier → seen, adds are anti-joined against both; rotation
     // drops the re-queued roots from seen), so only link keys are unknown.
-    //
-    // Mid path (guide §3.2 applied to expansion, r6): when the batch's link
-    // set is broadcast-small (O(batch × fanout) — the normal case),
-    // BROADCAST the 8-byte link keys once and semi-scan the big state sides
-    // with it: seen/frontier are scanned (column-pruned to url_hash), never
-    // shuffled, and linksRaw itself is never shuffled before the dedup of
-    // the genuinely-new survivors. Above LinksBroadcastMaxKeys
-    // (recrawl-everything batches) the r2-shaped shuffle fallback remains.
-    // The selector reads the parsed write's free links-sum observation (an
-    // upper bound — caps and the depth filter only shrink the real explode),
-    // not a count job.
-    val midPath = metric("links") <= CrawlEngine.LinksBroadcastMaxKeys
-    val linkKeys = if (midPath) broadcast(linksRaw.select("url_hash")) else linksRaw.select("url_hash")
-    def membershipHits(fullDf: DataFrame): DataFrame =
-      fullDf.select("url_hash").join(linkKeys, Seq("url_hash"), "left_semi")
-    // ONE union-exclude anti-join instead of three chained antis (guide
-    // §2.4): the three exclusion sets are all url_hash key sets, so linksRaw
-    // is probed once against their union. Mid path semi-filters processed
-    // down to processed ∩ links (identical anti-join result, union ≤
-    // 3×|links|), which bounds the broadcast exclude side.
-    val excludeKeys = (if (midPath) membershipHits(processedHashes) else processedHashes)
-      .unionByName(membershipHits(seenDf)).unionByName(membershipHits(front))
+    // Membership runs BEFORE the first-wins dedup shuffle, so the shuffle
+    // carries only genuinely-new links. The parsed write's links sum bounds
+    // the [[storedOf]] key rows (caps and the depth bound only shrink the
+    // explode). No hint on the anti-join: AQE broadcasts the match set
+    // (≤ 2 rows per link) from its runtime size, or else shuffles two
+    // batch-sized sides.
     val newFrontAdds = linksRaw
-      .join(if (midPath) broadcast(excludeKeys) else excludeKeys, Seq("url_hash"), "left_anti")
-      .withColumn("host", gf.url_host($"url_canon"))
-      .withColumn("priority_ts", $"warc_ts")
-      .withColumn("discovered_batch", lit(batchId))
-      .select($"url", $"url_canon", $"url_hash", $"host", $"child_depth".as("depth"),
-        $"priority_ts", $"seed_id", $"since_ts", $"end_ts", $"discovered_batch")
+      .join(storedOf(committed, linksRaw.select("url_hash"), metric("links")),
+        Seq("url_hash"), "left_anti")
+      .select($"url", $"url_canon", $"url_hash", $"host", $"depth", $"warc_ts".as("priority_ts"),
+        $"seed_id", $"since_ts", $"end_ts", lit(batchId).as("discovered_batch"), $"blocked")
       // first-wins dedup within the batch, deterministic tiebreak. The
       // row_number window is NOT the naive all-rows shuffle it looks like:
       // Spark 4 plans `filter(rn = 1)` as WindowGroupLimit(Partial) BEFORE
@@ -962,12 +926,12 @@ class CrawlEngine(
       .withColumn("_rn", row_number().over(
           Window.partitionBy($"url_hash")
             .orderBy($"priority_ts".desc, $"seed_id".asc, $"url_canon".asc)))
-      .filter($"_rn" === 1).drop("_rn")
-      // robots gating at discovery: a disallowed url never enters the
-      // frontier (candidate-time gating above remains as defense for
-      // pre-existing frontier state / rule changes)
-      .transform(df => if (!hasRobots) df
-        else df.join(robotsBlockedOf(df).select("url_hash"), Seq("url_hash"), "left_anti"))
+      .filter($"_rn" === 1)
+      // robots gating at discovery, as in the driver tail: a disallowed url
+      // never enters the frontier (candidate-time gating remains as defense
+      // for pre-existing frontier state / rule changes)
+      .filter(!$"blocked")
+      .drop("_rn", "blocked")
 
     // seen adds: first-occurrence-wins (weibo.py:1698-1699) holds by
     // construction — processed rows were anti-joined against seen on entry
@@ -1098,14 +1062,31 @@ class CrawlEngine(
       adds = adds)
   }
 
-  /** Each parsed row's expansion for the driver tail: an array of
-    * (url, url_canon, url_hash, host, maybe_seen, blocked) structs — the
-    * executor tail's explode input ([[expandCol]]) under the same depth
-    * bound (null past it), each link with its canonical url and hash, the
-    * might-contain bit of the seen base's filter (true for every link while
-    * the base has none) and its robots verdict at discovery. */
+  /** Each parsed row's expansion (U5), one definition for both tails (the
+    * driver tail collects it, the executor tail explodes it): an array of
+    * (url, url_canon, url_hash, host, maybe_seen, blocked) structs, null
+    * past the depth bound. The links are the page's outlinks in page order
+    * under the per-link-class expansion caps (see CrawlConfig.expansionCaps):
+    * each page expands at most cap "paging" (same-host) and cap "cross"
+    * (cross-host) links — pure array ops inside the row, no shuffle, no
+    * extra pass; the parsed log's outlinks column (the page's content) stays
+    * uncapped, like the reference's stored counts. Each link carries its
+    * canonical url and hash, its host, the might-contain bit of the seen
+    * base's filter (true for every link while the base has none; only the
+    * driver tail reads it) and its robots verdict at discovery. */
   private def expansionList: org.apache.spark.sql.Column = {
-    val canon = transform(expandCol, u => struct(u.as("url"), gf.canonicalize_url(u).as("url_canon")))
+    val links =
+      if (cfg.expansionCaps.isEmpty) $"outlinks"
+      else {
+        def sameHost(u: org.apache.spark.sql.Column) =
+          gf.url_host(gf.canonicalize_url(u)) === $"host"
+        def capped(arr: org.apache.spark.sql.Column, cls: String) =
+          cfg.expansionCaps.get(cls).map(c => slice(arr, 1, c)).getOrElse(arr)
+        concat(
+          capped(filter($"outlinks", u => sameHost(u)), "paging"),
+          capped(filter($"outlinks", u => !sameHost(u)), "cross"))
+      }
+    val canon = transform(links, u => struct(u.as("url"), gf.canonicalize_url(u).as("url_canon")))
     val full = transform(canon, l => {
       val c = l.getField("url_canon")
       val h = xxhash64(c)
@@ -1118,14 +1099,11 @@ class CrawlEngine(
   }
 
   /** The link keys already stored in seen or the frontier at `committed`,
-    * in ONE collect. Up to the pushdown cap it unions keyed reads: the seen
+    * in ONE collect. Up to the pushdown cap it unions keyed reads of the
+    * stored rows (no removal anti-join, as in [[storedOf]]): the seen
     * base for the keys its filter flags (no false negatives), the seen
     * deltas since that base and the frontier base and adds for every key.
-    * It needs no removal anti-join: the frontier's removals since its base
-    * are seen's adds since the same base, which the seen read returns for
-    * every key (StateStore.storedKeys), so the exclusion set is unchanged.
-    * Above the cap, one broadcast semi-join of the keys over the same
-    * stored rows. */
+    * Above the cap, the [[storedOf]] join. */
   private def knownKeys(committed: Long, keys: Array[Long], flagged: Array[Long]): Set[Long] =
     if (keys.isEmpty) Set.empty
     else {
@@ -1133,15 +1111,24 @@ class CrawlEngine(
         if (keys.length <= cfg.probePushdownMaxKeys)
           store.storedKeys("seen", committed, emptySeen, Some(keys), Some(flagged))
             .unionByName(store.storedKeys("frontier", committed, emptyFrontier, Some(keys), None))
-        else {
-          val keyDf = keys.toSeq.toDF("url_hash")
-          store.storedKeys("seen", committed, emptySeen, None, None)
-            .unionByName(store.storedKeys("frontier", committed, emptyFrontier, None, None))
-            .join(if (keys.length <= CrawlEngine.LinksBroadcastMaxKeys) broadcast(keyDf) else keyDf,
-              Seq("url_hash"), "left_semi")
-        }
+        else storedOf(committed, keys.toSeq.toDF("url_hash"), keys.length)
       stored.collect().map(_.getLong(0)).toSet
     }
+
+  /** The keys of `keys` (a url_hash column of at most `rows` rows) stored in
+    * seen or the frontier at `committed`: the stored rows of both tables
+    * inner-joined to the keys. No removal anti-join: the frontier's removals
+    * since its base are seen's adds since that base, which the seen side
+    * holds (StateStore.storedKeys). A key is stored at most once per table
+    * (base and adds are disjoint within each), so the output is at most 2
+    * rows per key row. The keys are the one build: broadcast up to
+    * LinksBroadcastMaxKeys rows, no hint above. Inner, not left_semi: Spark
+    * pushes a semi-join below the union and builds its broadcast once per
+    * branch, with no exchange reuse. */
+  private def storedOf(committed: Long, keys: DataFrame, rows: Long): DataFrame =
+    store.storedKeys("seen", committed, emptySeen, None, None)
+      .unionByName(store.storedKeys("frontier", committed, emptyFrontier, None, None))
+      .join(if (rows <= CrawlEngine.LinksBroadcastMaxKeys) broadcast(keys) else keys, Seq("url_hash"))
 
   private val notifiedConditions = scala.collection.mutable.Set[String]()
   private def notifyOnce(condition: String, message: String): Unit =
@@ -1402,11 +1389,10 @@ class CrawlEngine(
 }
 
 object CrawlEngine {
-  /** max batch link keys broadcast for the expansion-membership semi scans
-    * (the "mid path"): below it the 8-byte link-key set ships once to the
-    * executors and the big seen/frontier sides are scanned, never shuffled,
-    * during outlink membership filtering; above it the shuffle fallback
-    * runs. A BYTES bound in disguise (keys × 8 B ≈ 32 MB), not a local-core
+  /** max link-key rows broadcast by the membership join (storedOf): up to
+    * it the 8-byte keys ship once to the executors and the big seen and
+    * frontier sides are scanned, never shuffled; above it the join takes no
+    * hint. A BYTES bound in disguise (keys × 8 B ≈ 32 MB), not a local-core
     * tuning: it is sized to executor broadcast headroom. */
   private val LinksBroadcastMaxKeys = 4000000L
 

@@ -20,6 +20,8 @@ class DriverTailSpec extends AnyFunSuite {
   import spark.implicits._
   private def tmp(): String = Files.createTempDirectory("graft_tail").toString
   val N = 512L
+  /** A pushdown cap under the link keys of some driver-tail batch. */
+  val SmallCap = 8
   lazy val pagesDF = PagesGen.pages(spark, N, partitions = 4).toDF.persist()
 
   private def rows(df: DataFrame): Seq[String] =
@@ -151,22 +153,36 @@ class DriverTailSpec extends AnyFunSuite {
       val e3 = new CrawlEngine(spark, pages, dir, c2.copy(robotsDisallow = c2.robotsDisallow :+ ((host, "/"))))
       assert(e3.purgeRobotsBlocked() > 0, "premise: the purge drops frontier rows")
       e3.run(2)
-      val path = if (cap == 0) "executor" else "driver"
-      for (e <- Seq(e1, e2, e3))
-        assert(e.lastTailPath == path, s"probePushdownMaxKeys=$cap took the ${e.lastTailPath} tail")
+      if (cap != SmallCap) {
+        val path = if (cap == 0) "executor" else "driver"
+        for (e <- Seq(e1, e2, e3))
+          assert(e.lastTailPath == path, s"probePushdownMaxKeys=$cap took the ${e.lastTailPath} tail")
+      }
       (e3, dir)
     }
     val (ex, exDir) = crawl(0)
     val (dr, drDir) = crawl(CrawlConfig().probePushdownMaxKeys)
+    // a cap under the link keys of a batch it still runs on the driver:
+    // that batch answers membership with the stored-key join
+    val (mx, mxDir) = crawl(SmallCap)
+    val adds = spark.read.parquet(s"$mxDir/frontier/delta_add").groupBy($"batch".as("batch_id")).count()
+    val aboveCap = mx.ledger().get
+      .filter($"state" === "SUCCESS" && $"scheduled" <= SmallCap && $"robots_blocked" <= SmallCap)
+      .select("batch_id").join(adds, Seq("batch_id")).filter($"count" > SmallCap)
+    // its adds are distinct link keys, so it had more keys than the cap
+    assert(aboveCap.count() > 0, "premise: a driver-tail batch with more link keys than the cap")
 
     assert(ex.ledger().get.filter($"not_found" > 0).count() > 0, "premise: missing pages")
     assert(ex.deferred().get.count() > 0, "premise: deferred pages")
     assert(ex.fetched().get.filter($"url_canon" === roots.head._2).count() == 1,
       "premise: the duplicate url is fetched once")
     def same(what: String)(f: CrawlEngine => DataFrame): Unit = {
-      val a = rows(f(ex)); val b = rows(f(dr))
+      val a = rows(f(ex))
       assert(a.nonEmpty, s"premise: $what is not empty")
-      assert(a == b, s"$what differs:\n executor-only ${a.diff(b).take(5)}\n driver-only ${b.diff(a).take(5)}")
+      for ((arm, e) <- Seq("driver" -> dr, s"cap $SmallCap" -> mx)) {
+        val b = rows(f(e))
+        assert(a == b, s"$what differs ($arm):\n executor-only ${a.diff(b).take(5)}\n $arm-only ${b.diff(a).take(5)}")
+      }
     }
     // partition_id / partitions_used are lineage of the query that ran the
     // parse, so they differ between the tails by design
@@ -181,22 +197,40 @@ class DriverTailSpec extends AnyFunSuite {
       val d = spark.read.parquet(s"$dir/$t/delta_add")
       rows(d.select(d.columns.sorted.map(col).toSeq: _*))
     }
-    for (t <- Seq("frontier", "seen"))
-      assert(delta(exDir, t) == delta(drDir, t), s"$t deltas differ")
+    for (t <- Seq("frontier", "seen"); d <- Seq(drDir, mxDir))
+      assert(delta(exDir, t) == delta(d, t), s"$t deltas differ ($d)")
   }
+
+  /** crawlbench polite_steady's policy, run over a preloaded frontier. */
+  private val politeCfg = CrawlConfig(defaultHostBudget = 1,
+    perHostBudget = Map("h0.example.test" -> 4), defaultDelayMs = 1000L, maxDepth = 8,
+    shufflePartitions = 4, bloomMinSeen = 16, compactEvery = 2)
 
   test("a plain key-bounded batch runs at most 10 Spark jobs, its base listing included") {
     val dir = tmp()
-    // crawlbench polite_steady's policy over a preloaded frontier
-    val cfg = CrawlConfig(defaultHostBudget = 1, perHostBudget = Map("h0.example.test" -> 4),
-      defaultDelayMs = 1000L, maxDepth = 8, shufflePartitions = 4, bloomMinSeen = 16,
-      compactEvery = 2)
-    val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
+    val eng = new CrawlEngine(spark, pagesDF, dir, politeCfg)
     eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
     val (m, jobs) = jobsOf(eng.runBatch())
     assert(m("scheduled") > 0 && eng.lastTailPath == "driver", "premise: a driver-tail batch")
     assert(jobs.exists(_._1.startsWith("Listing leaf files")), "premise: batch 0 lists its base")
     assert(jobs.length <= 10, s"${jobs.length} jobs:\n${jobs.map(_._1).mkString("\n")}")
+  }
+
+  test("an executor-tail batch runs at most 17 Spark jobs: one expansion, one link-key build") {
+    val dir = tmp()
+    val eng = new CrawlEngine(spark, pagesDF, dir, politeCfg.copy(probePushdownMaxKeys = 0))
+    eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
+    val perBatch = (0 until 3).map { b =>
+      val (m, jobs) = jobsOf(eng.runBatch())
+      assert(m("scheduled") > 0 && eng.lastTailPath == "executor", s"premise: batch $b is an executor-tail batch")
+      jobs.map(_._1)
+    }
+    // batch 1 compacts: its two range-clustered base writes and their
+    // sampling are 9 more jobs (no filter: seen is under bloomMinSeen)
+    val budget = Seq(17, 17 + 9, 17)
+    assert(perBatch.map(_.length).zip(budget).forall { case (n, max) => n <= max },
+      perBatch.zipWithIndex.map { case (j, b) =>
+        s"batch $b: ${j.length} jobs (at most ${budget(b)}):\n${j.mkString("\n")}" }.mkString("\n"))
   }
 
   test("a resumed engine's first batch infers no parquet schema") {
