@@ -141,8 +141,8 @@ case class CrawlConfig(
  * One micro-batch re-expresses the reference's crawl loop
  * (weibo.py:1663-1817 / SURVEY.md §3.1 step 4) as a declarative plan:
  *
- *   frontier ──robots gating──► per-host window rank (newest-first,
- *             budget-capped)                                      (W1/W3/F4)
+ *   frontier + robots verdict ──► per-host window rank of the allowed rows
+ *             (newest-first, budget-capped) ∪ blocked rows, one cache (W1/W3/F4)
  *           ──fetch (pages lookup)──► wall-clock pacing, one task per host
  *           ──warc_ts ∈ [since,end)──► parse (extract_text/outlinks) (F3, U1)
  *           ──expand outlinks──► bloom prefilter ──► exact membership
@@ -154,7 +154,7 @@ case class CrawlConfig(
  * one of two places, chosen per batch as the rank plan is:
  *  - the **driver tail** for a batch with at most `probePushdownMaxKeys`
  *    scheduled and robots-blocked rows (not under broadcastScheduled): the
- *    scheduled rows are collected, ONE executor query fetches and parses
+ *    batch frame is collected once, ONE executor query fetches and parses
  *    them and computes each row's expansion list, ONE keyed read answers
  *    membership, and the parsed log and both deltas are written
  *    driver-direct — a politeness-bounded batch's tail is a handful of
@@ -272,30 +272,30 @@ class CrawlEngine(
       cfg.robotsAllow.map { case (h, p) => (h, p, true) }
   private def hasRobots: Boolean = robotsRuleRows.nonEmpty
 
-  /** Rows of `df` (frontier-shaped: url_hash/url_canon/host) BLOCKED by the
-    * robots rules under RFC 9309 §2.2.2 precedence: per url, the longest
-    * matching rule (by rule octet length) wins, allow wins an equal-length
-    * tie, no match ⇒ allowed. Rules may use `*` wildcards and a trailing
-    * `$` anchor (§2.2.3), and are matched against PATH?QUERY (the RFC's
-    * comparison target — a `$`-anchored rule must not match a url that
-    * continues with a query, and query-targeting wildcard rules of the
-    * "slash-star-?sessionid=" shape must be able to match). One codegen'd [[RobotsBlocked]]
-    * filter per row — config-small rules ride the task closure with
-    * per-task-compiled matchers; no join, no rank window, no per-row regex
-    * compilation (the r4 self-review caught RLIKE-on-a-column recompiling
-    * per (row, rule) pair in the previous join shape). */
-  private def robotsBlockedOf(df: DataFrame): DataFrame =
-    df.filter(robotsBlockedCol($"host", $"url_canon"))
-
-  /** The [[robotsBlockedOf]] verdict of one (host, url_canon) pair. */
+  /** Whether the url (`host`, `urlCanon`) is BLOCKED by the robots rules
+    * under RFC 9309 §2.2.2 precedence: per url, the longest matching rule
+    * (by rule octet length) wins, allow wins an equal-length tie, no match
+    * ⇒ allowed. Rules may use `*` wildcards and a trailing `$` anchor
+    * (§2.2.3), and are matched against PATH?QUERY (the RFC's comparison
+    * target — a `$`-anchored rule must not match a url that continues with
+    * a query, and query-targeting wildcard rules of the
+    * "slash-star-?sessionid=" shape must be able to match). One codegen'd
+    * [[RobotsBlocked]] expression per row — config-small rules ride the
+    * task closure with per-task-compiled matchers; no join, no rank window,
+    * no per-row regex compilation (the r4 self-review caught
+    * RLIKE-on-a-column recompiling per (row, rule) pair in the previous
+    * join shape). With no rules it is a literal false, which the optimizer
+    * folds: a filter on it prunes to nothing or to its input. */
   private def robotsBlockedCol(host: org.apache.spark.sql.Column,
-      urlCanon: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    val query = parse_url(urlCanon, lit("QUERY"))
-    val pathQuery = concat(parse_url(urlCanon, lit("PATH")),
-      when(query.isNull, lit("")).otherwise(concat(lit("?"), query)))
-    toColumn(RobotsBlocked(robotsRuleRows, toExpression(host), toExpression(pathQuery)))
-  }
+      urlCanon: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    if (!hasRobots) lit(false)
+    else {
+      import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+      val query = parse_url(urlCanon, lit("QUERY"))
+      val pathQuery = concat(parse_url(urlCanon, lit("PATH")),
+        when(query.isNull, lit("")).otherwise(concat(lit("?"), query)))
+      toColumn(RobotsBlocked(robotsRuleRows, toExpression(host), toExpression(pathQuery)))
+    }
 
   /** running |seen| — avoids a count job per batch; exact because every
     * scheduled/blocked url is frontier-unique and anti-joined against seen. */
@@ -461,29 +461,35 @@ class CrawlEngine(
   /** Build the filter of seen base `b`, persist it as `bloom/v=b` and
     * install it; a base under bloomMinSeen rows gets none. `rows` bounds
     * the base's row count from above (seen has no dels) and sizes the
-    * filter. The aggregate writes straight to parquet — each reduce task
-    * emits its own shard's blob, so no O(|seen|) bytes ride a driver-built
-    * plan — and the S rows read back for the broadcast. fpp and shard count
-    * ride the filter, so a new engine under other settings rebuilds it. */
+    * filter. Each reduce task of the aggregate builds its own shard's blob,
+    * so no O(|seen|) bytes ride a driver-built plan; the S blob rows are
+    * collected once, written driver-direct (no write job, no read-back) and
+    * installed as [[loadFilter]] installs them. fpp and shard count ride
+    * the filter, so a new engine under other settings rebuilds it. */
   private def buildFilter(b: Long, rows: Long): Unit =
     if (rows < cfg.bloomMinSeen) setFilter(None, b)
     else {
       bloomFullBuilds += 1
       val capacity = math.max(4L * rows / cfg.bloomShards + 1, 65536L)
       // the seen view at b is base b alone: deltas after b never count
-      store.write("bloom", b, seen(b).select("url_hash")
+      val blobs = seen(b).select("url_hash")
         .groupBy(pmod($"url_hash", lit(cfg.bloomShards.toLong)).cast("int").as("shard"))
         .agg(BloomSeen.bloom_build($"url_hash", capacity, cfg.bloomFpp).as("blob"))
-        .select($"shard", $"blob", lit(cfg.bloomFpp).as("fpp"), lit(cfg.bloomShards).as("shards")))
-      if (!loadFilter(b)) sys.error(s"bloom/v=$b unreadable after write")
+        .select($"shard", $"blob", lit(cfg.bloomFpp).as("fpp"), lit(cfg.bloomShards).as("shards"))
+        .collect()
+      store.writeSnapshotDirect("bloom", b, CrawlEngine.BloomSchema, blobs)
+      installFilter(blobs, b)
     }
 
-  /** Install `bloom/v=b` if it exists and was built with this config's fpp
-    * and shard count. Shards no key hashed to have no row and probe as
-    * empty filters. */
-  private def loadFilter(b: Long): Boolean = store.exists("bloom", b) && {
-    val rows = store.read("bloom", b, sys.error(s"bloom/v=$b listed but unreadable"))
-      .select("shard", "blob", "fpp", "shards").collect()
+  /** Install `bloom/v=b` if it exists (see [[installFilter]]). */
+  private def loadFilter(b: Long): Boolean = store.exists("bloom", b) &&
+    installFilter(store.read("bloom", b, sys.error(s"bloom/v=$b listed but unreadable"))
+      .select("shard", "blob", "fpp", "shards").collect(), b)
+
+  /** Install seen base `b`'s filter from its (shard, blob, fpp, shards) rows
+    * if built with this config's fpp and shard count. Shards no key hashed
+    * to have no row and probe as empty filters. */
+  private def installFilter(rows: Array[org.apache.spark.sql.Row], b: Long): Boolean = {
     bloomBlobRowsCollected += rows.length
     rows.forall(r => r.getDouble(2) == cfg.bloomFpp && r.getInt(3) == cfg.bloomShards) && {
       val bos = new ByteArrayOutputStream()
@@ -597,54 +603,45 @@ class CrawlEngine(
 
     timed("bloom_ensure")(ensureBlobs(committed, seenCount))
 
-    // ---- robots gating (north rule): RFC 9309 longest-match over the
-    // disallow + allow rule dims (see robotsBlockedOf), straight over the
-    // frontier view. No seen check here: frontier ∩ seen = ∅ after every
+    // ---- robots gating (north rule) and W1/W3/F4 in ONE frame, as the
+    // reference decides skip-or-fetch per item in one walk
+    // (weibo.py:1663-1817): each frontier row carries its verdict
+    // (robotsBlockedCol), the allowed rows are ranked (rankBatch; direct
+    // when no budget can bind or the previous batch scheduled ≥ half the
+    // frontier, narrow otherwise) and the blocked rows of every depth ride
+    // beside them with a null fetch_ordinal. Without rules the blocked
+    // branch prunes away. No seen check: frontier ∩ seen = ∅ after every
     // commit (F2, at the outlink probe in the tails).
-    val robotsBlocked = if (!hasRobots) emptyFrontier
-      else robotsBlockedOf(front).persist()
-    val robotsBlockedCount = if (!hasRobots) 0L else robotsBlocked.count()
-    val allowed = if (!hasRobots) front
-      else front.join(robotsBlocked.select("url_hash"), Seq("url_hash"), "left_anti")
-
-    // ---- W1/W3/F4 (rankBatch). Direct plan when no budget can bind (the
-    // smallest covers the whole frontier) or the previous batch scheduled
-    // ≥ half the frontier; narrow otherwise, e.g. a fresh engine's batch 0.
+    val gated = front.withColumn("blocked", robotsBlockedCol($"host", $"url_canon"))
     val direct = minBudget >= frontCount ||
       (lastSchedCount >= 0 && lastSchedCount * 2 >= frontCount)
     rankPlan = if (direct) "direct" else "narrow"
-    val scheduled = rankBatch(allowed, direct)
-
-    // ---- materialize the scheduled set ONCE, in executor storage. The
-    // ranking window executes exactly once (the count below populates the
-    // cache); every downstream consumer — the driver tail's collect, the
-    // executor tail's fetch-join build side and open-corpus recovery —
-    // re-reads the cached partitions. Through round 4 this was a parquet
-    // write + read-back ("scheduled" log): a full extra write job per batch
-    // whose cost was FLAT across executor layouts (VERDICT r4 item 3) — and
-    // the row set is recoverable as a projection of the parsed log anyway.
-    // Scheduled rows are slim (frontier row + ordinal, no page bodies), and
-    // the cache is dropped at end of batch. Spills to disk if a bench-sized
-    // batch outgrows memory.
-    val schedDf = scheduled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the one materializing action; also the exact count the ledger
-    // arithmetic needs and the tail selector below reads
-    val schedCount = timed("sched_rank")(schedDf.count())
+    // materialized ONCE in executor storage (slim rows, dropped at batch
+    // end, disk spill for bench-sized batches): the rank executes once, in
+    // the count below, and every tail consumer re-reads the cache — the
+    // r4 parquet round-trip of the scheduled set cost a flat write job per
+    // batch (VERDICT r4 item 3). The one action also gives the exact
+    // counts the ledger arithmetic and the tail selector need.
+    val batch = rankBatch(gated.filter(!$"blocked"), direct)
+      .unionByName(gated.filter($"blocked"), allowMissingColumns = true)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = timed("sched_rank")(batch.agg(
+      count(when(!$"blocked", 1)), count(when($"blocked", 1))).head())
+    val schedCount = counts.getLong(0)
+    val robotsBlockedCount = counts.getLong(1)
     lastSchedCount = schedCount
 
     // ---- the tail: fetch + parse, expansion, membership, delta writes. A
-    // batch whose scheduled and robots-blocked rows are both within the
-    // pushdown cap is provably small and runs it on the driver (driverTail);
-    // larger batches, and broadcastScheduled (the executor's broadcast fetch
-    // join, which graft.Bench sets for its large batches), run it on
-    // executors (executorTail).
+    // batch whose scheduled and blocked rows are both within the pushdown
+    // cap runs it on the driver (driverTail); larger batches, and
+    // broadcastScheduled (graft.Bench's large batches), on executors.
     val cap = cfg.probePushdownMaxKeys
     val onDriver = cap > 0 && schedCount <= cap && robotsBlockedCount <= cap &&
       !cfg.broadcastScheduled
     tailPath = if (onDriver) "driver" else "executor"
     val tail =
-      if (onDriver) driverTail(batchId, committed, schedDf, robotsBlocked, robotsBlockedCount)
-      else executorTail(batchId, committed, schedDf, schedCount, robotsBlocked)
+      if (onDriver) driverTail(batchId, committed, batch)
+      else executorTail(batchId, committed, batch, schedCount, robotsBlockedCount)
 
     // arithmetic size updates: seen adds leave the frontier exactly once,
     // frontier adds are frontier-absent (anti-joined in the tails) — no
@@ -668,8 +665,7 @@ class CrawlEngine(
       "frontier_size" -> newFrontierSize, "seen_size" -> newSeenSize,
       "partitions_used" -> tail.partitions)
     commitVersion("SUCCESS", metrics)
-    schedDf.unpersist()
-    if (hasRobots) robotsBlocked.unpersist()
+    batch.unpersist()
     // U6 — health notifications (util/notify.py; weibo.py:436-450,1804):
     // anomalies alert ONCE per condition (the reference suppresses repeats)
     if (tail.violations > 0) notifyOnce("invariant",
@@ -687,9 +683,9 @@ class CrawlEngine(
   /** Project the scheduled side to ONLY the columns the parse/emit path
     * consumes (guide §2.3 "project before the exchange"): url, priority_ts,
     * discovered_batch never appear in the parsed log. */
-  private def schedSlim(schedDf: DataFrame): DataFrame =
-    schedDf.select($"url_canon", $"url_hash", $"host", $"seed_id",
-      $"depth", $"since_ts", $"end_ts", $"fetch_ordinal", $"sched_delay_ms")
+  private def schedSlim(schedDf: DataFrame, extra: String*): DataFrame =
+    schedDf.select((Seq("url_canon", "url_hash", "host", "seed_id",
+      "depth", "since_ts", "end_ts", "fetch_ordinal", "sched_delay_ms") ++ extra).map(col): _*)
 
   // zero-budget fast path (r6): when every effective delay is 0 (config
   // default and all per-host overrides), the pacing stage has nothing to
@@ -763,7 +759,8 @@ class CrawlEngine(
    * executors.
    */
   private def executorTail(batchId: Long, committed: Long,
-      schedDf: DataFrame, schedCount: Long, robotsBlocked: DataFrame): TailOut = {
+      batch: DataFrame, schedCount: Long, blockedCount: Long): TailOut = {
+    val schedDf = batch.filter(!$"blocked")
     // ---- fetch = lookup into the pages corpus (S1 analog; in tests "fetch"
     // is this join per the driver instruction — no network). left join keeps
     // dangling outlinks as dead-letter rows (S8's not_downloaded.txt analog).
@@ -789,18 +786,19 @@ class CrawlEngine(
         pagesSel.join(broadcast(slim), Seq("url_canon")).withColumn("found", lit(true))
       else {
         // default fetch shape (round 3): semi-filter then batch-sized join.
-        // A tiny 8-byte-key broadcast (the scheduled url hashes) prunes the
-        // corpus scan to the matched pages; the outer join then runs over
-        // TWO batch-sized sides — a fully parallel shuffle join — instead of
-        // either shuffling the whole corpus (the r2 default) or
-        // driver-building a full-row scheduled broadcast (broadcastScheduled
-        // with an unbounded batch: a ~450 MB serial HashedRelation, measured
-        // as a flat ~10-20 s/batch term on the executor-JVM scaling pair).
+        // A tiny 8-byte-key broadcast (the scheduled url hashes, bounded by
+        // [[keysBuild]]) prunes the corpus scan to the matched pages; the
+        // outer join then runs over TWO batch-sized sides — a fully parallel
+        // shuffle join — instead of either shuffling the whole corpus (the r2
+        // default) or driver-building a full-row scheduled broadcast
+        // (broadcastScheduled with an unbounded batch: a ~450 MB serial
+        // HashedRelation, measured as a flat ~10-20 s/batch term on the
+        // executor-JVM scaling pair).
         // Hash collisions only let extra pages through the semi; the outer
         // join's url_canon equality discards them — exactness unaffected.
-        val schedKeys = schedDf.select($"url_hash")
+        val schedKeys = keysBuild(schedDf.select($"url_hash"), schedCount)
         val pagesMatched = pagesSel
-          .join(broadcast(schedKeys), xxhash64($"url_canon") === schedKeys("url_hash"), "left_semi")
+          .join(schedKeys, xxhash64($"url_canon") === schedKeys("url_hash"), "left_semi")
         slim.join(pagesMatched, Seq("url_canon"), "left_outer")
           .withColumn("found", $"page_url".isNotNull)
       }
@@ -856,7 +854,8 @@ class CrawlEngine(
     // NOT_FOUND dead-letter rows and leave the frontier (both joins bounded:
     // the big pages side is scanned via a broadcast-semi, never shuffled).
     // Only these need their own errors log — the outer-join path's not-found
-    // rows are already in the parsed log with found=false.
+    // rows are already in the parsed log with found=false. Its broadcasts
+    // are unbounded, as broadcastScheduled's own is by design.
     val missingRows: Option[DataFrame] =
       if (cfg.broadcastScheduled && schedCount != metric("sched")) {
         val matched = pagesSel.select("url_canon")
@@ -875,12 +874,12 @@ class CrawlEngine(
     // the size caches rely on). Expansion needs no exclusion of them: every
     // processed row was read from the frontier view at `committed`, so its
     // key is among the frontier's stored rows that membership takes away.
-    val processedRows = {
-      val base = parsedDf.select($"url_hash", $"url_canon")
-        .unionByName(robotsBlocked.select($"url_hash", $"url_canon"))
-      missingRows.map(m => base.unionByName(m.select($"url_hash", $"url_canon")))
-        .getOrElse(base)
-    }
+    // The blocked rows are read only when there are some: a filter of the
+    // cache is a scan of every cached partition, with or without rules.
+    val processedRows =
+      (if (blockedCount == 0) None else Some(batch.filter($"blocked")))
+        .toSeq.++(missingRows).map(_.select($"url_hash", $"url_canon"))
+        .foldLeft(parsedDf.select($"url_hash", $"url_canon"))(_.unionByName(_))
 
     // ---- U5: outlink expansion → next frontier entries: [[expansionList]]
     // exploded (null past maxDepth, so those pages drop out). Children
@@ -977,7 +976,8 @@ class CrawlEngine(
    * scheduled and robots-blocked rows. Where the executor tail writes the
    * parse with one Spark job and derives everything else from the written
    * log with more jobs, this one brings the batch to the driver once:
-   *  - the scheduled rows are collected (≤ cap) and, as a local relation,
+   *  - the batch frame's scheduled and blocked rows are collected in one
+   *    action (≤ cap each); the scheduled ones, as a local relation, are
    *    left-joined to the corpus pages they name (the broadcast side holds
    *    only those pages). ONE query — pacing and [[parseProjection]] when
    *    active, plus each row's expansion list with its per-link seen-filter
@@ -993,14 +993,13 @@ class CrawlEngine(
    * partitions of this query, not of the executor fetch join — and so the
    * ledger's partitions_used, counted here exactly instead of approximately.
    */
-  private def driverTail(batchId: Long, committed: Long, schedDf: DataFrame,
-      robotsBlocked: DataFrame, robotsBlockedCount: Long): TailOut = {
+  private def driverTail(batchId: Long, committed: Long, batch: DataFrame): TailOut = {
     import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     val nParsed = parsedSchema.length
-    val picked = timed("write_parsed") {
-      val slim = schedSlim(schedDf)
-      val schedRows = slim.collect()
+    val (blockedRows, picked) = timed("write_parsed") {
+      val slim = schedSlim(batch, "blocked")
+      val (blockedRows, schedRows) = slim.collect().partition(_.getAs[Boolean]("blocked"))
       val canons = schedRows.map(_.getAs[String]("url_canon")).distinct.toSeq
       // forced broadcast bound: the pages of ≤ cap scheduled urls (one each
       // unless the corpus repeats a url_canon, which the dedup below collapses)
@@ -1020,24 +1019,21 @@ class CrawlEngine(
           .map(_.min(CrawlEngine.LatestPage)).toArray
       store.appendLogDirect("parsed", batchId, parsedSchema,
         picked.map(r => Row.fromSeq(r.toSeq.take(nParsed))))
-      picked
+      (blockedRows, picked)
     }
     def rowsWhere(p: Row => Boolean): Long = picked.count(p).toLong
 
     // ---- U5 expansion (the executor tail's explode, over the lists the
     // query computed); the processed rows never re-enter the frontier
-    val (blockedRows, links) = timed("link_keys") {
-      val blockedRows =
-        if (robotsBlockedCount == 0) Array.empty[Row]
-        else robotsBlocked.select("url_hash", "url_canon").collect()
-      val processed = (picked.map(_.getAs[Long]("url_hash")) ++ blockedRows.map(_.getLong(0))).toSet
-      (blockedRows, picked.flatMap { r =>
+    val links = timed("link_keys") {
+      val processed = (picked ++ blockedRows).map(_.getAs[Long]("url_hash")).toSet
+      picked.flatMap { r =>
         Option(r.getAs[scala.collection.Seq[Row]]("links")).getOrElse(Nil).map(l =>
           CrawlEngine.Link(l.getString(0), l.getString(1), l.getLong(2), l.getString(3),
             l.getBoolean(4), l.getBoolean(5), r.getAs[Int]("depth") + 1,
             r.getAs[AnyRef]("warc_ts"), r.getAs[String]("seed_id"),
             r.getAs[AnyRef]("since_ts"), r.getAs[AnyRef]("end_ts")))
-      }.filterNot(l => processed(l.hash)))
+      }.filterNot(l => processed(l.hash))
     }
 
     // ---- F2: seen-set dedup at discovery (see the executor tail), then
@@ -1053,8 +1049,8 @@ class CrawlEngine(
       adds.length.toLong
     }
     timed("write_seen_adds")(store.writeDeltaAddsDirect("seen", batchId, emptySeen.schema,
-      picked.map(r => Row(r.getAs[Long]("url_hash"), r.getAs[String]("url_canon"), batchId)) ++
-        blockedRows.map(r => Row(r.getLong(0), r.getString(1), batchId))))
+      (picked ++ blockedRows).map(r =>
+        Row(r.getAs[Long]("url_hash"), r.getAs[String]("url_canon"), batchId))))
     TailOut(notFound = rowsWhere(!_.getAs[Boolean]("found")),
       inRange = rowsWhere(_.getAs[Boolean]("in_range")),
       violations = rowsWhere(!_.getAs[Boolean]("invariant_ok")),
@@ -1093,7 +1089,7 @@ class CrawlEngine(
       val host = gf.url_host(c)
       struct(l.getField("url").as("url"), c.as("url_canon"), h.as("url_hash"), host.as("host"),
         (if (bloomBc == null) lit(true) else BloomSeen.bloom_probe(bloomBc, Nil, h)).as("maybe_seen"),
-        (if (!hasRobots) lit(false) else robotsBlockedCol(host, c)).as("blocked"))
+        robotsBlockedCol(host, c).as("blocked"))
     })
     when($"depth" + 1 <= cfg.maxDepth, full)
   }
@@ -1121,14 +1117,18 @@ class CrawlEngine(
     * since its base are seen's adds since that base, which the seen side
     * holds (StateStore.storedKeys). A key is stored at most once per table
     * (base and adds are disjoint within each), so the output is at most 2
-    * rows per key row. The keys are the one build: broadcast up to
-    * LinksBroadcastMaxKeys rows, no hint above. Inner, not left_semi: Spark
-    * pushes a semi-join below the union and builds its broadcast once per
-    * branch, with no exchange reuse. */
+    * rows per key row. The keys are the one build ([[keysBuild]]). Inner,
+    * not left_semi: Spark pushes a semi-join below the union and builds its
+    * broadcast once per branch, with no exchange reuse. */
   private def storedOf(committed: Long, keys: DataFrame, rows: Long): DataFrame =
     store.storedKeys("seen", committed, emptySeen, None, None)
       .unionByName(store.storedKeys("frontier", committed, emptyFrontier, None, None))
-      .join(if (rows <= CrawlEngine.LinksBroadcastMaxKeys) broadcast(keys) else keys, Seq("url_hash"))
+      .join(keysBuild(keys, rows), Seq("url_hash"))
+
+  /** `keys` (a url_hash column of at most `rows` rows) as a join's build
+    * side: broadcast up to LinksBroadcastMaxKeys rows, no hint above. */
+  private def keysBuild(keys: DataFrame, rows: Long): DataFrame =
+    if (rows <= CrawlEngine.LinksBroadcastMaxKeys) broadcast(keys) else keys
 
   private val notifiedConditions = scala.collection.mutable.Set[String]()
   private def notifyOnce(condition: String, message: String): Unit =
@@ -1265,7 +1265,7 @@ class CrawlEngine(
     if (!hasRobots) return 0L
     val committed = store.committedBatch
     val batchId = committed + 1
-    val blocked = robotsBlockedOf(frontier(committed)).persist()
+    val blocked = frontier(committed).filter(robotsBlockedCol($"host", $"url_canon")).persist()
     val n = blocked.count()
     if (n == 0) { blocked.unpersist(); return 0L }
     // the purged keys enter a seen delta (also their frontier removal), which
@@ -1358,8 +1358,6 @@ class CrawlEngine(
     graftbridge.fromInternalRdd(spark, out, schema)
   }
 
-  // (companion lock lives in object CrawlEngine at the end of this file)
-
   /** Run up to maxBatches (stop early on empty frontier or STOP command).
     * Resumes from the committed pointer — a killed run restarts at the exact
     * frontier state (north rule). */
@@ -1389,10 +1387,11 @@ class CrawlEngine(
 }
 
 object CrawlEngine {
-  /** max link-key rows broadcast by the membership join (storedOf): up to
-    * it the 8-byte keys ship once to the executors and the big seen and
-    * frontier sides are scanned, never shuffled; above it the join takes no
-    * hint. A BYTES bound in disguise (keys × 8 B ≈ 32 MB), not a local-core
+  /** max key rows broadcast by a join's key build (keysBuild: the
+    * membership join's link keys, the executor fetch's scheduled keys): up
+    * to it the 8-byte keys ship once to the executors and the big side
+    * (seen and frontier, the corpus) is scanned, never shuffled; above it
+    * the join takes no hint. A BYTES bound in disguise (keys × 8 B ≈ 32 MB), not a local-core
     * tuning: it is sized to executor broadcast headroom. */
   private val LinksBroadcastMaxKeys = 4000000L
 

@@ -157,7 +157,7 @@ object Robots {
     * matching rule wins; allow wins a same-length tie; no match ⇒ allowed.
     * Rules may use `*` wildcards and a trailing `$` anchor (§2.2.3). The
     * driver-side mirror of the engine's distributed gating predicate
-    * (CrawlEngine.robotsBlockedOf). One-shot convenience over [[compile]] —
+    * (CrawlEngine.robotsBlockedCol). One-shot convenience over [[compile]] —
     * hold the CompiledRules for repeated evaluation. */
   def isAllowed(ruleSet: Seq[(String, Boolean)], path: String): Boolean =
     compile(ruleSet).isAllowed(path)

@@ -136,6 +136,12 @@ class StateStore(spark: SparkSession, root: String, codec: String = "snappy") {
     out.write.mode("overwrite").option("compression", codec).parquet(versionDir(table, v))
   }
 
+  /** [[write]] of a driver-local row set (a seen base's S filter blobs),
+    * written by [[writeDirect]]. */
+  def writeSnapshotDirect(table: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType, rows: Iterable[Row]): Unit =
+    writeDirect(Paths.get(versionDir(table, v)), schema, rows)
+
   // ------------------------------------------------------------------
   // Delta tables
   // ------------------------------------------------------------------

@@ -206,14 +206,22 @@ class DriverTailSpec extends AnyFunSuite {
     perHostBudget = Map("h0.example.test" -> 4), defaultDelayMs = 1000L, maxDepth = 8,
     shufflePartitions = 4, bloomMinSeen = 16, compactEvery = 2)
 
+  /** The polite policy with one disallow rule that blocks preloaded rows. */
+  private val politeRulesCfg = politeCfg.copy(robotsDisallow = Seq(("h1.example.test", "/u/3/")))
+
   test("a plain key-bounded batch runs at most 10 Spark jobs, its base listing included") {
-    val dir = tmp()
-    val eng = new CrawlEngine(spark, pagesDF, dir, politeCfg)
-    eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
-    val (m, jobs) = jobsOf(eng.runBatch())
-    assert(m("scheduled") > 0 && eng.lastTailPath == "driver", "premise: a driver-tail batch")
-    assert(jobs.exists(_._1.startsWith("Listing leaf files")), "premise: batch 0 lists its base")
-    assert(jobs.length <= 10, s"${jobs.length} jobs:\n${jobs.map(_._1).mkString("\n")}")
+    // robots gating is a column of the scheduling frame: a batch that gates
+    // rows runs no more jobs than one without rules
+    for ((what, cfg) <- Seq("no rules" -> politeCfg, "a blocking rule" -> politeRulesCfg)) {
+      val dir = tmp()
+      val eng = new CrawlEngine(spark, pagesDF, dir, cfg)
+      eng.initializeWithFrontier(CrawlFixtures.preload(pagesDF))
+      val (m, jobs) = jobsOf(eng.runBatch())
+      assert(m("scheduled") > 0 && eng.lastTailPath == "driver", s"premise ($what): a driver-tail batch")
+      assert(cfg.robotsDisallow.isEmpty || m("robots_blocked") > 0, s"premise ($what): the batch gates rows")
+      assert(jobs.exists(_._1.startsWith("Listing leaf files")), s"premise ($what): batch 0 lists its base")
+      assert(jobs.length <= 10, s"$what: ${jobs.length} jobs:\n${jobs.map(_._1).mkString("\n")}")
+    }
   }
 
   test("an executor-tail batch runs at most 17 Spark jobs: one expansion, one link-key build") {
